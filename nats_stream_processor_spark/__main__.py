@@ -53,12 +53,15 @@ def main(argv: list[str] | None = None) -> int:
                     default=(int(env("STREAM_STATE_PARTITIONS"))
                              if env("STREAM_STATE_PARTITIONS") else None),
                     help="shard count for streaming state (the dedup "
-                         "store) — size to streaming load, not batch "
-                         "shuffle width; each micro-batch pays a commit "
-                         "per shard, so oversizing taxes every trigger "
+                         "store). Default: the session's shuffle width, "
+                         "which is SPARK_GRAFT_SHUFFLE_PARTITIONS if set, "
+                         "else one shard per core (SPARK_GRAFT_CPUS), "
+                         "else 32. Each micro-batch pays a commit per "
+                         "shard, so oversizing taxes every trigger "
                          "(measured: 32 shards at ~5k posts/batch runs "
                          "1.8x slower than 8). Captured into the "
-                         "checkpoint at first batch.")
+                         "checkpoint at first batch; an existing "
+                         "checkpoint keeps its count.")
     ap.add_argument("--health-port", type=int,
                     default=(int(env("HEALTH_CHECK_PORT"))
                              if env("HEALTH_CHECK_PORT") else None),

@@ -25,6 +25,7 @@ import re
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -35,6 +36,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import FLOAT_ROUND_DP
+from .sentiment import LABELS as SENTIMENT_LABELS
 from .sentiment import NEGATIVE_WORDS, NEUTRAL_BIAS, POSITIVE_WORDS
 from .text import TOKEN_RE
 from .topics import LABELS, SCORE_OFFSET, TOPIC_KEYWORDS
@@ -55,6 +57,17 @@ TOPICS_SCHEMA = StructType([
     StructField("top_confidence", DoubleType()),
 ])
 
+# The fused classifier's flat output; sentiment_of / topics_of assemble
+# the two structs above from it in the JVM.
+CLASSIFY_SCHEMA = StructType([
+    StructField("sentiment", StringType()),
+    StructField("confidence", DoubleType()),
+    StructField("p_negative", DoubleType()),
+    StructField("p_neutral", DoubleType()),
+    StructField("p_positive", DoubleType()),
+    *TOPICS_SCHEMA.fields,
+])
+
 _TOKEN = re.compile(TOKEN_RE)
 _NEG = frozenset(NEGATIVE_WORDS)
 _POS = frozenset(POSITIVE_WORDS)
@@ -63,6 +76,8 @@ _KW2LABEL: dict[str, int] = {
     w: i for i, lab in enumerate(LABELS) for w in TOPIC_KEYWORDS[lab]
 }
 _NLAB = len(LABELS)
+_LABELS = np.array(LABELS, dtype=object)
+_SENTIMENTS = np.array(SENTIMENT_LABELS, dtype=object)
 
 
 def _exploded_tokens(texts: pd.Series) -> pd.Series:
@@ -77,31 +92,65 @@ def _exploded_tokens(texts: pd.Series) -> pd.Series:
     )
 
 
-def _occurrence_counts(ex: pd.Series, n: int, vocab: frozenset) -> np.ndarray:
-    """Per-row occurrence counts (with multiplicity) of tokens in vocab."""
-    hits = ex[ex.isin(vocab)]
-    out = np.zeros(n, dtype=np.float64)
-    np.add.at(out, hits.index.to_numpy(dtype=np.int64), 1)
-    return out
-
-
-def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
-    """Vectorized sentiment over a batch; same math as sentiment_struct."""
-    n = len(texts)
+def _token_table(texts: pd.Series):
+    """The batch's tokens, tokenized once: per token occurrence its
+    source-row position, whether it is a negative / positive lexicon word,
+    and its topic-label index (-1 for none). Each distinct token is looked
+    up in the vocabularies once."""
     ex = _exploded_tokens(texts)
-    neg = _occurrence_counts(ex, n, _NEG)
-    pos = _occurrence_counts(ex, n, _POS)
+    codes, uniq = pd.factorize(ex)
+    neg = np.array([u in _NEG for u in uniq], dtype=bool)
+    pos = np.array([u in _POS for u in uniq], dtype=bool)
+    lab = np.array([_KW2LABEL.get(u, -1) for u in uniq], dtype=np.int64)
+    return ex.index.to_numpy(dtype=np.int64), neg[codes], pos[codes], lab[codes]
+
+
+def _sentiment_kernel(rows, neg_tok, pos_tok, n: int, dp: int):
+    """Sentiment from a token table: (label index, n x 3 rounded
+    probabilities in label order); same math as sentiment_struct."""
+    neg = np.bincount(rows[neg_tok], minlength=n).astype(np.float64)
+    pos = np.bincount(rows[pos_tok], minlength=n).astype(np.float64)
     neu = np.full(n, NEUTRAL_BIAS)
     logits = np.stack([neg, neu, pos], axis=1)  # index order = label ids
     mx = logits.max(axis=1, keepdims=True)
     e = np.exp(logits - mx)
     probs = np.round(e / e.sum(axis=1, keepdims=True), dp)
     idx = logits.argmax(axis=1)  # first max wins, like np.argmax in reference
-    labels = np.array(["negative", "neutral", "positive"])[idx]
-    conf = probs.max(axis=1)
+    return idx, probs
+
+
+def _topics_kernel(rows, lab_tok, n: int, dp: int):
+    """Topics from a token table: (object array of topic lists, top label
+    index, rounded top confidence); same math as topics_struct."""
+    # n x n_labels keyword-occurrence matrix in one counting pass
+    hit = lab_tok >= 0
+    counts = np.bincount(
+        rows[hit] * _NLAB + lab_tok[hit], minlength=n * _NLAB,
+    ).reshape(n, _NLAB)
+    mx = counts.max(axis=1)
+    top_idx = counts.argmax(axis=1)  # first max = alphabetical tie-break
+    # Labels with a hit, plus the top label (U2d: top always included), in
+    # LABELS order — which is sorted, so each list comes out sorted. Rows
+    # with the same label set share one list, built once per distinct set.
+    member = counts >= 1
+    member[np.arange(n), top_idx] = True
+    keys = member @ (np.int64(1) << np.arange(_NLAB, dtype=np.int64))
+    uniq, inv = np.unique(keys, return_inverse=True)
+    sets = np.empty(len(uniq), dtype=object)
+    for i, k in enumerate(uniq):
+        sets[i] = [lab for j, lab in enumerate(LABELS) if k >> j & 1]
+    topics = sets[inv]
+    conf = np.round(1.0 / (1.0 + np.exp(SCORE_OFFSET - mx.astype(np.float64))), dp)
+    return topics, top_idx, conf
+
+
+def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
+    """Vectorized sentiment over a batch; same math as sentiment_struct."""
+    rows, neg, pos, _ = _token_table(texts)
+    idx, probs = _sentiment_kernel(rows, neg, pos, len(texts), dp)
     return pd.DataFrame({
-        "sentiment": labels,
-        "confidence": conf,
+        "sentiment": _SENTIMENTS[idx],
+        "confidence": probs.max(axis=1),
         "probabilities": [
             {"negative": p[0], "neutral": p[1], "positive": p[2]} for p in probs
         ],
@@ -110,34 +159,46 @@ def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
 
 def topics_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
     """Vectorized topics over a batch; same math as topics_struct."""
-    n = len(texts)
-    ex = _exploded_tokens(texts)
-    # n x n_labels keyword-occurrence matrix in one scatter-add pass
-    lab_idx = ex.map(_KW2LABEL).dropna()
-    counts = np.zeros((n, _NLAB), dtype=np.int64)
-    np.add.at(
-        counts,
-        (lab_idx.index.to_numpy(dtype=np.int64),
-         lab_idx.to_numpy(dtype=np.int64)),
-        1,
-    )
-    mx = counts.max(axis=1)
-    top_idx = counts.argmax(axis=1)  # first max = alphabetical tie-break
-    labels_arr = np.array(LABELS)
-    hit = counts >= 1
-    rows_topics: list[list[str]] = []
-    rows_top: list[str] = []
-    for i in range(n):
-        top = LABELS[top_idx[i]]
-        above = list(labels_arr[hit[i]])
-        if top not in above:  # U2d: top always included
-            above = sorted(above + [top])
-        rows_topics.append(above)
-        rows_top.append(top)
-    conf = np.round(1.0 / (1.0 + np.exp(SCORE_OFFSET - mx.astype(np.float64))), dp)
+    rows, _, _, lab = _token_table(texts)
+    topics, top_idx, conf = _topics_kernel(rows, lab, len(texts), dp)
     return pd.DataFrame(
-        {"topics": rows_topics, "top_topic": rows_top, "top_confidence": conf}
+        {"topics": topics, "top_topic": _LABELS[top_idx], "top_confidence": conf}
     )
+
+
+def classify_batch(texts: pd.Series, threshold: float,
+                   dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
+    """Sentiment, the F5 confidence gate and topics in one pass: the batch
+    is tokenized once, and topics are evaluated only on rows whose
+    confidence clears ``threshold`` (reference: src/service.py:115-127).
+    Gated rows carry null topic columns. Flat columns (CLASSIFY_SCHEMA);
+    values equal sentiment_batch and topics_batch row for row."""
+    n = len(texts)
+    rows, neg, pos, lab = _token_table(texts)
+    idx, probs = _sentiment_kernel(rows, neg, pos, n, dp)
+    conf = probs.max(axis=1)
+    keep = conf >= threshold
+    # The passing rows' tokens, renumbered to positions 0..k-1.
+    rank = np.cumsum(keep) - 1
+    kept = keep[rows]
+    topics_k, top_k, tconf_k = _topics_kernel(
+        rank[rows[kept]], lab[kept], int(keep.sum()), dp)
+    topics = np.full(n, None, dtype=object)
+    topics[keep] = topics_k
+    top = np.full(n, None, dtype=object)
+    top[keep] = _LABELS[top_k]
+    tconf = np.full(n, np.nan)
+    tconf[keep] = tconf_k
+    return pd.DataFrame({
+        "sentiment": _SENTIMENTS[idx],
+        "confidence": conf,
+        "p_negative": probs[:, 0],
+        "p_neutral": probs[:, 1],
+        "p_positive": probs[:, 2],
+        "topics": topics,
+        "top_topic": top,
+        "top_confidence": tconf,
+    })
 
 
 @F.pandas_udf(SENTIMENT_SCHEMA)
@@ -150,14 +211,58 @@ def _topics_udf_raw(texts: pd.Series) -> pd.DataFrame:
     return topics_batch(texts)
 
 
-# Marked non-deterministic as an OPTIMIZER FENCE, not because values vary:
-# without it, Catalyst pushes the F5 confidence gate (which references the
-# sentiment struct) below the pre-UDF repartition and re-evaluates the UDF
-# on the filter path — the model then runs twice per row, and the first run
-# lands on the scan's (possibly single) input partitions instead of the
-# spread ones. Non-deterministic expressions are never duplicated or moved
-# across Exchange/Filter boundaries, so each classifier runs exactly once,
-# after the repartition — the reference's stage ordering (service.py
-# short-circuit) preserved by construction.
+@F.pandas_udf(CLASSIFY_SCHEMA)
+def _classify_udf_raw(texts: pd.Series, threshold: pd.Series) -> pd.DataFrame:
+    return classify_batch(texts, float(threshold.iloc[0]) if len(threshold) else 0.0)
+
+
+# Marked non-deterministic as an OPTIMIZER FENCE, not because values vary.
+# The enrichment plan is one ArrowEvalPython node (classify_udf) with the F5
+# confidence gate filtering its output. Were the UDF deterministic, Catalyst
+# could push that gate below the node as a second evaluation of the UDF
+# (the classifiers would then run twice per row, once on the filter path)
+# and collapse the struct-building projections into copies of the call.
+# Non-deterministic expressions are never duplicated or moved across
+# Filter/Exchange boundaries, so the kernel runs exactly once per row and
+# the gate stays above it — the reference's stage ordering (service.py
+# short-circuit) preserved by construction. The standalone classifiers
+# carry the same fence.
 sentiment_udf = _sentiment_udf_raw.asNondeterministic()
 topics_udf = _topics_udf_raw.asNondeterministic()
+_classify_udf = _classify_udf_raw.asNondeterministic()
+
+
+def classify_udf(text: Column, threshold: float) -> Column:
+    """The fused classifier over ``text`` (flat CLASSIFY_SCHEMA struct)."""
+    return _classify_udf(text, F.lit(float(threshold)))
+
+
+def sentiment_of(c: Column) -> Column:
+    """The ``sentiment`` struct (SENTIMENT_SCHEMA) from a classify_udf
+    result, assembled in the JVM."""
+    return _nullable(F.struct(
+        c["sentiment"].alias("sentiment"),
+        c["confidence"].alias("confidence"),
+        F.struct(
+            c["p_negative"].alias("negative"),
+            c["p_neutral"].alias("neutral"),
+            c["p_positive"].alias("positive"),
+        ).alias("probabilities"),
+    ), c, SENTIMENT_SCHEMA)
+
+
+def topics_of(c: Column) -> Column:
+    """The ``topics`` struct (TOPICS_SCHEMA) from a classify_udf result,
+    assembled in the JVM."""
+    return _nullable(F.struct(
+        c["topics"].alias("topics"),
+        c["top_topic"].alias("top_topic"),
+        c["top_confidence"].alias("top_confidence"),
+    ), c, TOPICS_SCHEMA)
+
+
+def _nullable(s: Column, c: Column, schema: StructType) -> Column:
+    # F.struct is never null; the standalone UDFs' structs are nullable at
+    # every level. The cast restores nested nullability and the guard the
+    # outer one, so the output schema equals the standalone UDFs'.
+    return F.when(c.isNotNull(), s.cast(schema))

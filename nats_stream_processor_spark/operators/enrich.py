@@ -4,10 +4,11 @@ DataFrame expression.
 Reference orchestration: src/service.py:100-150 (_process_message), stages
 F1..F5, P1..P3, U1, U2, D1 per SURVEY.md §2A. Operator order is semantic:
 the confidence gate sits BETWEEN the sentiment and topic stages so the topic
-classifier never evaluates gated rows (reference: src/service.py:115-127) —
-expressed here by placing the filter between the two projections, which
-Catalyst will not reorder past the (deterministic, but explicitly staged)
-classifier expressions.
+classifier never evaluates gated rows (reference: src/service.py:115-127).
+Both classifiers run as ONE fused Arrow kernel (functions/classify.py) that
+tokenizes once and applies the gate itself before evaluating topics; the
+plan's Filter above that node then drops the gated rows, and the output
+structs are assembled in the JVM.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ from ..config import (
     PROCESSOR_NAME,
     SENTIMENT_CONFIDENCE_THRESHOLD,
 )
-from ..functions.classify import sentiment_udf, topics_udf
+from ..functions.classify import classify_udf, sentiment_of, topics_of
 from ..functions.sentiment import confidence_gate
 from ..functions.text import extract_text_col, non_empty_text
 
@@ -53,19 +54,21 @@ def enrich_posts(
     FIXTURES.md §2 — note NO topics.probabilities, Discrepancy #1).
     """
     text = F.col(text_col) if text_col else extract_text_col(set(df.columns))
+    cls = F.col("__cls")
     out = (
         df.withColumn("__text", text)
         .filter(non_empty_text(F.col("__text")))                       # F1/F4
-        .withColumn("sentiment", sentiment_udf(F.col("__text")))      # U1
-        .filter(confidence_gate("sentiment", threshold))               # F5
-        .withColumn("topics", topics_udf(F.col("__text")))             # U2
+        .withColumn("__cls", classify_udf(F.col("__text"), threshold))  # U1+U2
+        .filter(confidence_gate(cls, threshold))                       # F5
+        .withColumn("sentiment", sentiment_of(cls))
+        .withColumn("topics", topics_of(cls))
         .withColumn("processed_at", F.current_timestamp())             # P2
         .withColumn("processor", F.lit(PROCESSOR_NAME))
         .withColumn(
             "route_subject",
             route_subject(F.col("sentiment.sentiment"), F.col("topics.top_topic")),
         )
-        .drop("__text")
+        .drop("__text", "__cls")
     )
     if dedup and id_cols:
         # D1: exact-key dedup; streaming callers use the watermarked variant

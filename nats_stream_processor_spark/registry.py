@@ -17,6 +17,7 @@ bottom of this module), grouped by domain:
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -98,11 +99,42 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Estimated scan-partition counts, keyed by (file list, split confs,
-# parallelism). File sizes are stable for a session (testdata is
-# immutable), so the estimate never needs recomputing — and the first
-# computation is pure os.stat, no Spark planning at all.
-_SCAN_PARTS_CACHE: dict[tuple, int] = {}
+# Scan estimates are memoized per file set: file sizes are stable for a
+# session (testdata is immutable), so an estimate never needs recomputing
+# — and the first computation is pure os.stat, no Spark planning at all.
+# The memos are LRU-bounded, so a long-lived session scanning many
+# distinct file sets holds at most this many entries in each.
+SCAN_CACHE_ENTRIES = 128
+
+
+@functools.lru_cache(maxsize=SCAN_CACHE_ENTRIES)
+def _file_sizes(files: tuple[str, ...]) -> tuple[int, ...]:
+    """On-disk sizes of a scan's files. Raises ValueError for a non-local
+    URI and OSError for a missing file; lru_cache never caches a raise."""
+    from urllib.parse import urlparse
+
+    sizes = []
+    for f in files:
+        u = urlparse(f)
+        if u.scheme not in ("", "file"):
+            raise ValueError(f"not a local file: {f}")
+        sizes.append(os.path.getsize(u.path))
+    return tuple(sizes)
+
+
+def _scan_file_sizes(df: DataFrame) -> tuple[int, ...] | None:
+    """Memoized sizes of the files behind a file scan; None for non-file
+    or non-local sources. ``inputFiles()`` is analysis-only (~2 ms warm)."""
+    try:
+        files = df.inputFiles()
+    except Exception:
+        return None
+    if not files:
+        return None
+    try:
+        return _file_sizes(tuple(sorted(files)))
+    except (ValueError, OSError):
+        return None
 
 
 _BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
@@ -151,40 +183,27 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
     min(maxPartitionBytes, max(openCostInBytes, padded_total /
     defaultParallelism)); partitions ~ ceil(padded_total / maxSplitBytes)).
     Returns None for non-file or non-local sources. Cheap by construction:
-    ``inputFiles()`` is analysis-only (~2 ms warm) and the sizes come from
-    os.stat — unlike ``df.rdd``, which forces a full physical planning
-    round-trip (measured 0.16-1.3 s per call on the wide dedup plans; with
-    ~30 spread sites that was a ~20% tax on the whole bench)."""
-    import os
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
+    the sizes come from memoized os.stat — unlike ``df.rdd``, which forces
+    a full physical planning round-trip (measured 0.16-1.3 s per call on
+    the wide dedup plans; with ~30 spread sites that was a ~20% tax on the
+    whole bench)."""
+    sizes = _scan_file_sizes(df)
+    if sizes is None:
         return None
     max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
                          128 * 1024 * 1024)
     open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
                             4 * 1024 * 1024)
-    par = spark.sparkContext.defaultParallelism
     # The estimate depends on the split confs and parallelism, so they are
-    # part of the cache key — a recreated session with different settings
+    # part of the memo key — a recreated session with different settings
     # must not inherit another session's count.
-    key = (tuple(sorted(files)), max_pb, open_cost, par)
-    hit = _SCAN_PARTS_CACHE.get(key)
-    if hit is not None:
-        return hit
-    sizes = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            sizes.append(os.path.getsize(u.path))
-        except OSError:
-            return None
+    return _packed_partitions(sizes, max_pb, open_cost,
+                              spark.sparkContext.defaultParallelism)
+
+
+@functools.lru_cache(maxsize=SCAN_CACHE_ENTRIES)
+def _packed_partitions(sizes: tuple[int, ...], max_pb: int, open_cost: int,
+                       par: int) -> int:
     bytes_per_core = (sum(sizes) + len(sizes) * open_cost) // max(par, 1)
     max_split = min(max_pb, max(open_cost, bytes_per_core))
     # Replay FilePartition.getFilePartitions: chunk each file into
@@ -203,7 +222,6 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
             est += 1
             cur = 0
         cur += c + open_cost
-    _SCAN_PARTS_CACHE[key] = est
     return est
 
 
@@ -218,36 +236,13 @@ def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None
 PY_MIN_SPLIT_BYTES = int(os.environ.get(
     "SPARK_GRAFT_PY_MIN_SPLIT_BYTES", str(64 * 1024)))
 
-_SCAN_BYTES_CACHE: dict[tuple, int] = {}
-
 
 def _estimated_scan_bytes(df: DataFrame) -> int | None:
     """Total on-disk bytes behind a file scan (memoized os.stat, same
     cheap discipline as _estimated_scan_partitions); None for non-file
     or non-local sources."""
-    from urllib.parse import urlparse
-
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    key = tuple(sorted(files))
-    hit = _SCAN_BYTES_CACHE.get(key)
-    if hit is not None:
-        return hit
-    total = 0
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            return None
-        try:
-            total += os.path.getsize(u.path)
-        except OSError:
-            return None
-    _SCAN_BYTES_CACHE[key] = total
-    return total
+    sizes = _scan_file_sizes(df)
+    return None if sizes is None else sum(sizes)
 
 
 def spread(df: DataFrame, n: int | None = None,

@@ -18,10 +18,13 @@ dependency beyond the stdlib is needed:
   duration histogram, rate + lag gauges.
 
 Scale note: the listener runs on the driver and holds O(batches) small
-records; the exposition pass is O(records). At very long uptimes, cap
-with ``MetricsListener(records=deque(maxlen=...))``-style trimming —
-counters below are running totals, so trimming only affects the
-duration histogram's tail, and a scrape never touches executors.
+records, and every scrape is O(records): the counters below are NOT
+running totals but are recomputed from the full record list each time
+(as is the duration histogram). So the list must not be trimmed —
+dropping old records would silently LOWER every ``*_total`` counter.
+Bounding memory and scrape cost at long uptimes needs the counters
+folded into running state as each progress event arrives. A scrape
+never touches executors.
 """
 
 from __future__ import annotations

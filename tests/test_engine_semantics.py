@@ -72,3 +72,39 @@ def test_hour_bucketing_agrees_pre_epoch(spark, duck):
         "select epoch_us(col) // 3600000000 from (select unnest(["
         + vals + "]) as col)").fetchall()]
     assert s == d
+
+
+# --- session defaults: the shuffle width (= streaming state shard count)
+# follows the master's cores unless pinned explicitly.
+
+@pytest.mark.parametrize("cpus,pinned,expected", [
+    (None, None, 32),   # neither variable set: the historical default
+    ("6", None, 6),     # one state shard per core
+    ("6", "3", 3),      # an explicit shuffle width wins over the cores
+    (None, "3", 3),
+])
+def test_shuffle_partitions_default_rule(monkeypatch, cpus, pinned, expected):
+    from nats_stream_processor_spark.config import SparkEngineConf
+
+    for var, val in (("SPARK_GRAFT_CPUS", cpus),
+                     ("SPARK_GRAFT_SHUFFLE_PARTITIONS", pinned)):
+        if val is None:
+            monkeypatch.delenv(var, raising=False)
+        else:
+            monkeypatch.setenv(var, val)
+    conf = SparkEngineConf()
+    assert conf.shuffle_partitions == expected
+    assert conf.to_conf()["spark.sql.shuffle.partitions"] == str(expected)
+
+
+def test_shuffle_partitions_read_at_construction(monkeypatch):
+    """The environment is read when the conf is built, not when the
+    module is imported: a change after import is seen by the next conf."""
+    from nats_stream_processor_spark.config import SparkEngineConf
+
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", raising=False)
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert SparkEngineConf().shuffle_partitions == 5
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert SparkEngineConf().shuffle_partitions == 7
+    assert SparkEngineConf(shuffle_partitions=2).shuffle_partitions == 2

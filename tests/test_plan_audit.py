@@ -221,6 +221,27 @@ def test_scan_partition_estimate_matches_planner(spark):
     assert not registry._is_scan_narrow_plan(nr.groupBy("doc_id").count())
 
 
+def test_scan_estimate_memos_stay_bounded(tmp_path):
+    """The scan-size memos behind spread() are LRU-bounded: a long run of
+    distinct file sets (a long-lived session) never grows them past
+    SCAN_CACHE_ENTRIES, and every lookup still returns the right size."""
+    cap = registry.SCAN_CACHE_ENTRIES
+    for i in range(3 * cap):
+        f = tmp_path / f"part-{i}.parquet"
+        f.write_bytes(b"x" * (i + 1))
+        files = (f"file:{f}",)
+        assert registry._file_sizes(files) == (i + 1,)
+        registry._packed_partitions((i + 1,), 128 << 20, 4 << 20, 4)
+        assert registry._file_sizes.cache_info().currsize <= cap
+        assert registry._packed_partitions.cache_info().currsize <= cap
+    # a failed stat raises instead of caching a stale None
+    missing = (f"file:{tmp_path}/gone.parquet",)
+    with pytest.raises(OSError):
+        registry._file_sizes(missing)
+    (tmp_path / "gone.parquet").write_bytes(b"ab")
+    assert registry._file_sizes(missing) == (2,)
+
+
 def test_chunking_is_map_only_before_sort(spark):
     """Sliding-window chunking derives every chunk from its own row:
     the plan must contain NO hash-partitioned exchange — only the gated
@@ -1585,3 +1606,38 @@ def test_ivf_drift_psi_one_scan_bucket_table_windows(spark):
     assert "CartesianProduct" not in p
     assert "InMemoryTableScan" in p, p[:400]
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) <= 1, p[:600]
+
+
+def _fused_classifier_and_gate(p: str) -> None:
+    """Exactly one ArrowEvalPython node (the fused classifier) with the
+    F5 confidence-gate Filter above it (bottom-up operator numbers)."""
+    arrow = [int(n) for n in re.findall(r"^\((\d+)\) ArrowEvalPython", p, re.M)]
+    assert len(arrow) == 1, p
+    gates = [int(n) for n, cond in re.findall(
+        r"^\((\d+)\) Filter.*\n(?:Input.*\n)?Condition : (.*)", p, re.M)
+        if ".confidence >= 0.4" in cond]
+    assert len(gates) == 1 and gates[0] > arrow[0], p
+
+
+def test_enrichment_is_one_fused_classifier_node_gated_above(spark, tmp_path):
+    """enrich_posts runs both classifiers as ONE Arrow node (one Python
+    round trip, one tokenization per batch) and the confidence gate
+    filters its output — in the batch plan and in the service's
+    streaming plan, whose dedup state has one shard per shuffle
+    partition."""
+    from nats_stream_processor_spark.operators.enrich import enrich_posts
+    from nats_stream_processor_spark.streaming.pipeline import (
+        decode_posts, enrich_stream)
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    _fused_classifier_and_gate(
+        _frame_plan(enrich_posts(docs, text_col="text")))
+
+    (tmp_path / "posts.txt").write_text(
+        '{"uri": "at://a", "cid": "c1", "text": "great day"}\n')
+    stream = enrich_stream(decode_posts(
+        spark.readStream.format("text").load(str(tmp_path))))
+    p = _frame_plan(stream)
+    _fused_classifier_and_gate(p)
+    shards = spark.conf.get("spark.sql.shuffle.partitions")
+    assert f"numPartitions = {shards}]" in p, p

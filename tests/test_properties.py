@@ -17,6 +17,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nats_stream_processor_spark.functions.classify import (
+    classify_batch,
     sentiment_batch,
     topics_batch,
 )
@@ -65,6 +66,38 @@ def test_classifiers_deterministic(batch):
     pd.testing.assert_frame_equal(a, b)
     ta, tb = topics_batch(s), topics_batch(s)
     pd.testing.assert_frame_equal(ta, tb)
+
+
+@settings(max_examples=200, deadline=None)
+@given(texts, st.sampled_from([0.0, 0.4, 0.5, 0.7, 1.0, 1.01]))
+def test_fused_classifier_equals_separate_kernels(batch, threshold):
+    """The fused kernel (one tokenization, gate inside) equals
+    sentiment_batch plus topics_batch row for row, bit for bit; rows
+    below the gate carry no topics."""
+    s = pd.Series(batch)
+    out = classify_batch(s, threshold)
+    sent, top = sentiment_batch(s), topics_batch(s)
+    assert len(out) == len(batch)
+    for i, row in enumerate(out.itertuples(index=False)):
+        p = sent["probabilities"][i]
+        assert row.sentiment == sent["sentiment"][i]
+        assert row.confidence == sent["confidence"][i]
+        assert (row.p_negative, row.p_neutral, row.p_positive) == (
+            p["negative"], p["neutral"], p["positive"])
+        if row.confidence >= threshold:
+            assert list(row.topics) == list(top["topics"][i])
+            assert row.top_topic == top["top_topic"][i]
+            assert row.top_confidence == top["top_confidence"][i]
+        else:
+            assert row.topics is None and row.top_topic is None
+            assert math.isnan(row.top_confidence)
+
+
+def test_fused_classifier_empty_and_fully_gated_batches():
+    assert len(classify_batch(pd.Series([], dtype=object), 0.4)) == 0
+    out = classify_batch(pd.Series(["great day", None, ""]), 1.01)
+    assert out["topics"].isna().all() and out["top_topic"].isna().all()
+    assert list(out["sentiment"]) == ["positive", "neutral", "neutral"]
 
 
 # --- round6_stable cross-engine contract -------------------------------

@@ -21,11 +21,13 @@ SF = "/root/testdata/sf0.001"
 # query -> the scale property worth reading the plan for
 NOTES = {
     "enrich_flagship": (
-        "Classifier UDFs are optimizer-fenced (asNondeterministic): each "
-        "ArrowEvalPython runs exactly once, after the round-robin spread, "
-        "with the F5 gate between the two stages (reference short-circuit "
-        "ordering). Base-column text filter still reaches the scan; the "
-        "aggregate is partial+final."
+        "Both classifiers run as ONE optimizer-fenced (asNondeterministic) "
+        "ArrowEvalPython node, exactly once per row, after the round-robin "
+        "spread when there is one (the Python-boundary bytes floor skips it "
+        "at sf0.001); the kernel gates topics itself and the F5 gate Filter sits "
+        "directly above the node (reference short-circuit ordering). The "
+        "output structs are built in the JVM. Base-column text filter "
+        "still reaches the scan; the aggregate is partial+final."
     ),
     "agg_pricing_summary": (
         "Partial HashAggregate before the exchange, final after — map-side "
