@@ -11,144 +11,6 @@ materialization) so timings reflect the distributed plan, not collect().
 Baseline context (BASELINE.md): the reference sustains ~30 enriched
 posts/s on ~3.5 vCPU (~8.6 rows/s/core). enrich_flagship here processes
 the whole documents corpus; its rows/s is the apples-to-apples number.
-
-Cross-round drift attribution (measured, round 8). Headline totals move
-several percent between rounds with no code cause; the r7 verdict
-suspected the eager registry/oracle build on the import chain. Measured:
-(a) structurally impossible — per-query numbers are min-of-3 AFTER a
-full warmup pass, and the package import (registry population + all
-oracle-string construction, 0.56 s cold of which ~110 ms is package
-module-level work) completes before the first timer starts, so no
-import-time cost can appear in any per-query figure or their sum;
-(b) same-code back-to-back runs at r8 HEAD measured 15.541 s then
-13.590 s (+14% spread, uniform across all 14 queries — the shared
-host's noise floor); (c) the decisive control: round 7's exact code
-(1ee6a9a, fresh worktree) re-benched in the same environment measured
-13.813 s against its recorded 13.017 s, while r8 HEAD measured 13.590 s
-in the adjacent window — the current code is marginally FASTER than r7
-under identical conditions. Cross-round deltas of this size are
-environment, not code; only per-query deltas that survive a same-window
-A/B (like the worktree control above) warrant attribution.
-
-Round-9 control (the standing protocol, re-run): r9 HEAD measured
-12.867 s and the r8 tip (abeaab4, fresh worktree) measured 12.331 s in
-the adjacent window — a 4.3% gap, uniform across queries, inside the
-same-code spread above; no headline query's code changed in round 9.
-The quieter host also explains both numbers beating every recorded
-round: recorded cross-round values remain non-comparable without this
-control.
-
-Round-10 control: the noisiest window yet (load average 9+ from
-neighbors for the whole session). r10 HEAD measured 43.5 s and the r9
-tip (b08fee8, fresh worktree) measured 49.6 s in the adjacent window —
-BOTH ~3.5x the r9 recorded 13.4 s, uniformly across queries, while
-HEAD ran ~12% FASTER than the r9 code under the identical conditions.
-No headline query's code changed in round 10 (the round added new
-non-headline operators and de-skewed join_interval_overlap_binned's
-input derivation); any inflated BENCH_r10 figure is this host state,
-not a regression — the control is the evidence. Two later same-session
-HEAD re-runs as the neighbors drained measured 22.2 s and 22.6 s (load
-back under 1, even at 0.2) — i.e. the host settled at a ~1.7x-slower
-operating point than when the r9 number was recorded and stayed there;
-within-round numbers are only comparable in adjacent windows, and
-cross-round numbers only through the worktree control.
-
-Round-11 control: three adjacent windows — r11 HEAD 21.104 s, then the
-r10 tip (351f793, fresh worktree) 20.060 s, then r11 HEAD again
-16.733 s. The spread across the three windows (±12%) is the documented
-same-code noise floor; per-query, the only outlier was
-dedup_components' 5.28 s in the first HEAD window, which re-measured
-at 2.88 s in the third (vs 2.70 s for the r10 code) — variance, not
-regression; no round-11 commit touches its code. No headline query's
-code changed in round 11 (the round added llm_ext10/policy/leakage
-operators, none in the headline set); HEAD measured equal-or-faster
-than the r10 code under identical conditions.
-
-Late-round-11 re-measure (after the second/third operator waves —
-llm_ext11's eight in-window operators, llm_ext12's two behind-window
-ones, and the hourly_power_sums streaming twin; still zero headline
-code touched): 14.101 s headline / 3,908 streaming posts/s on a
-quiet host, at the fast end of the documented noise band — the new
-waves add registry entries and imports only, no regression.
-
-Round-12 control: three adjacent windows — r12 HEAD 16.624 s, then
-the r11 tip (02cc528, fresh worktree) 14.223 s, then r12 HEAD again
-14.468 s. The decisive comparison is windows 2 vs 3 (adjacent,
-settled host): a 1.7% gap, uniform across queries — equal-code
-within noise. Window 1's 16.6 s is the usual first-window warmth
-(same pattern as every prior round's control). No headline query's
-code changed in round 12 (the round DF-capped the substring-span
-pair joins, added graph_rebuild_execute / dedup_span_df_stats /
-sim_ivf_list_balance / quality_gate_agreement and the streaming
-quantile twin — none in the headline set); streaming posts/s
-measured 3,908.6 (window 1) / 3,447.6 (window 3) vs the r11 tip's
-3,397.0 in the adjacent window — equal-or-faster code.
-
-Late-round-12 final-tip re-measure (after the llm_ext13 wave — four
-behind-window operators plus the quantile and top-k streaming twins;
-still zero headline code touched): 14.535 s headline / 3,754 streaming
-posts/s — inside the control band; the wave adds registry entries and
-imports only, no regression.
-
-CONTROL PROTOCOL AMENDMENT (round 13, from the r12 verdict): every A/B
-window must record THREE numbers — headline total, streaming_posts
-(1x), and streaming_posts_10x. The 10x figure is the one that supports
-the "micro-batch fixed-overhead floor, not per-row ceiling" scale
-claim, and BENCH_r12's recorded 12.1k/s vs r11's 28.2k/s was only
-resolvable by the judge re-running bench (27.5k/s — host noise); with
-the 10x number in all three adjacent windows the next such swing is
-attributable from the round's own artifacts.
-
-Round-13 control (the amended three-number protocol): adjacent windows
-— r13 HEAD 16.195 s headline / 3,421.0 posts/s / 24,006.1 at 10x; the
-r12 tip (e0b4f8d, fresh worktree) 15.072 s / 3,682.1 / 26,845.1; r13
-HEAD again 15.84 s / 3,379.3 / 23,628.4 (this third window overlapped
-a stray test session — discard) and a clean fourth window 15.771 s /
-3,629.9 / 27,304.5. The decisive pair is windows 2 vs 4 (adjacent,
-clean): headline gap 4.6%, streaming 1.4%, 10x 1.7% — equal-code
-within the documented same-code noise band on all three axes. No
-headline query's code changed in round 13 (the round added llm_ext14's
-act-step operators and the streaming dedup twin — none in the headline
-set).
-
-Round-14 control (three-number protocol, five windows on a slower
-host — every window's headline sits 8-20% above the r13 recordings,
-uniformly): r14 HEAD 17.622 s / 2,395.7 posts/s / 20,465.5 at 10x;
-r13 tip (b190b8c, fresh worktree) 17.584 s / 3,223.3 / 23,406.5; r14
-HEAD 35.165 s (DISCARD — load average 4.35, host contention, the
-only 2x outlier); r14 HEAD clean 18.452 s / 2,237.8 / 20,794.4; r13
-tip again 16.939 s / 2,999.3 / 17,883.7. Decisive adjacent pair
-(windows 1 vs 2): headline gap 0.2% — equal-code. The streaming axes
-swing +-25% BETWEEN THE TWO r13-TIP WINDOWS THEMSELVES (2,999-3,223
-at 1x, 17,884-23,407 at 10x), so today's 1x/10x spreads are host
-noise with no code attribution possible — and no headline or
-streaming-pipeline code changed in round 14 (the round added
-llm_ext15's IVF insert/lifecycle operators and the near-dup + IVF
-streaming twins; none are imported by the pipeline or headline set).
-
-Round-15 control (the OPTIMIZATION round — headline code DID change:
-minhash signature plan-size fix, connected_components pre-union
-checkpoint, agg_pricing_summary gated spread; see
-OPTIMIZATION_r15.md): three adjacent windows on a degrading host
-(load 5 -> 9 across them) — r15 HEAD 19.251 s / 3,239.1 / 21,104.8;
-r14 tip (64864eb, fresh worktree) 19.220 s / 2,448.3 / 13,809.5; r15
-HEAD 18.140 s / 1,877.1 / 10,312.3. Headline: HEAD's windows bracket
-the r14 tip (equal-or-better); per-query in the decisive W1-vs-W2
-pair the optimized queries win through the noise
-(dedup_components -15%, dedup_minhash_lsh -7%, _fast -11%). The
-streaming axes fell monotonically WITH LOAD across all three windows
-including between the two HEAD windows (3,239 -> 1,877 at 1x) — no
-attribution, and no streaming-pipeline code changed this round. The
-per-query primary evidence is same-session INTERLEAVED A/Bs
-(OPTIMIZATION_r15.md): agg_pricing old-vs-new alternated twice in one
-session read 2.125/2.054 vs 1.393/1.420 min-of-3 — cross-window
-single-query deltas under ~15% are not attributable on this host.
-A second pair after the final-tip sweeps: r15 HEAD 19.784 s /
-1,343.7 / 6,848.4; r14 tip 20.516 s / 3,186.2 / 22,309.0 — decisive
-adjacent pair, HEAD 3.6% faster headline (components -13%,
-lsh_fast -14%); the HEAD streaming reading was one bad window — an
-immediate HEAD stream-only re-run measured 2,528.6 / 21,170.6, back
-inside the r13/r14 same-code band.
 """
 
 from __future__ import annotations
@@ -160,25 +22,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set: one per major subsystem (enrichment pipeline, core agg,
-# star join, window rank, event-time windows, near-dup LSH, ANN, text
-# stats). Keys are registry names.
-HEADLINE = [
-    "enrich_flagship",
-    "agg_pricing_summary",
-    "join_revenue_by_region",
-    "window_topk_orders_per_segment",
-    "events_tumbling_hourly",
-    "dedup_minhash_lsh",
-    "dedup_minhash_lsh_fast",
-    "sim_cosine_topk",
-    "sim_ann_ivf",
-    "events_funnel",
-    "dedup_components",
-    "text_token_stats",
-    "quality_filter_pipeline",
-    "media_frame_sample",
-]
+# Headline set: one query per major subsystem (registry.HEADLINE).
+from nats_stream_processor_spark.registry import HEADLINE  # noqa: E402
 
 
 STREAM_STATE_PARTITIONS = 8

@@ -5,7 +5,7 @@ pack -> EXPORT): write the corpus as hash-sharded, within-shard-ordered
 parquet so that (a) membership of every document is a pure function of
 its id (same property as train_val_split — reruns and backfills land
 documents in the same shard), (b) each shard is internally ordered, so
-sequence packing (queries/llm.py pack_sequences) reads it back in
+sequence packing (queries/curation.py pack_sequences) reads it back in
 packing order with no extra sort, and (c) shards are independent units
 of work for the training data loader.
 

@@ -333,13 +333,8 @@ def lsh_bucket_sql(demb_expr: str, planes: list[list[float]] | None = None,
 # --------------------------------------------- pinned retrieval query
 
 # Pinned pseudo-random query vector shared by the retrieval-shaped
-# queries (sim_mmr_diverse_topk, sim_rrf_fusion). Defined HERE — a leaf
-# module with no query-module imports — so a Python WORKER re-importing
-# one query module never reaches into a partially-initialized sibling
-# for these constants (the circular-import class caught by the r7
-# llm_ext5 <- llm_ext4 incident: a worker unpickling an llm_ext4 UDF
-# re-imports llm_ext4 -> registry -> llm_ext5, whose oracle builder
-# then imported llm_ext4 names that did not exist yet at line 34).
+# queries (sim_mmr_diverse_topk, sim_rrf_fusion). Defined in this leaf
+# module, which imports no query module.
 PINNED_QUERY_VEC = [((_h32(f"mmr_q_{d}") % 2001) - 1000) / 1000.0
                     for d in range(EMBED_DIM)]
 # Norm via the same left-fold add sequence the engines use; each step is

@@ -15,13 +15,10 @@ from ..functions.sentiment import sentiment_count_sql_defs, sentiment_sql_column
 from ..functions.text import tokens_sql
 from ..functions.topics import topic_count_sql_defs, topics_sql_columns
 from ..operators.enrich import enrich_posts, enriched_route_counts
+from ..partitioning import PY_MIN_SPLIT_BYTES, spread
+from ..registry import register, table
+
 # A CTE prelude shared by every classifier oracle: tokenize once, count once.
-# Defined BEFORE the registry import: a worker entering the package at THIS
-# module triggers the registry's full query-module chain from the import
-# below, and queries/metrics.py pulls these names from the then-partially-
-# initialized module — they must already exist at that point (same
-# circular-import class as the r7 llm_ext5 incident; guarded by
-# tests/test_oracle_parity.py::test_every_query_module_survives_worker_entry_import).
 CLASSIFIER_CTE = (
     "WITH d AS (SELECT *, {toks} AS toks FROM documents), "
     "c AS (SELECT *, {scnt}, {tcnt} FROM d)"
@@ -33,15 +30,13 @@ CLASSIFIER_CTE = (
 _S = sentiment_sql_columns()
 _T = topics_sql_columns()
 
-from ..registry import PY_MIN_SPLIT_BYTES, register, spread, table  # noqa: E402
-
 
 def _docs(spark, sf_dir):
     """The documents scan, spread with the Python-boundary bytes floor
-    (registry.PY_MIN_SPLIT_BYTES): every query here feeds the text
+    (partitioning.PY_MIN_SPLIT_BYTES): every query here feeds the text
     straight into an ArrowEvalPython classifier stage, where ~150-row
     partitions pay more in per-partition Python dispatch than the
-    extra cores return (r15 scaling probe: faster at 8 cores than 32).
+    extra cores return (a scaling probe ran faster at 8 cores than 32).
     No-op at real scale — the spread gate already is."""
     return spread(table(spark, sf_dir, "documents"),
                   min_bytes_per_partition=PY_MIN_SPLIT_BYTES)

@@ -1,44 +1,433 @@
-"""Graph-based ANN: the full HNSW-class index lifecycle as pure
-relational plans — NN-Descent construction, greedy beam search,
-beam-width calibration, incremental insertion, and the rebuild
-decision.
-
-Certification status (the honest-labeling house rule):
-
-- ``graph_nn_descent`` — formal driver row round 9; unchanged since.
-- ``graph_greedy_search`` — formal row round 9; its ORACLE text was
-  refactored in round 10 (query-panel CTE shared with the sweep), so
-  it re-certifies inside the r10 window per the house rule.
-- ``graph_beam_sweep`` / ``graph_knn_insert`` (late round 9) — landed
-  AFTER the r9 window was allocated and sat honestly BEHIND it; they
-  LEAD the r10 window (the rotation the r9 verdict pre-allocated).
-- ``graph_rebuild_decision`` (round 10) — formal row round 10; its
-  builder was factored into the shared ``_rebuild_curve`` /
-  ``_rebuild_curve_ctes`` in round 11 (output-identical — rendered
-  oracle text compared against the r10 tip), so it re-certifies
-  inside the r11 window per the house rule.
-- ``graph_rebuild_policy`` (round 11) — INSIDE the r11 window, formal
-  row round 11 (green).
-- Round 12: ``graph_rebuild_execute`` (new — the ACT step: run the
-  full rebuild and measure the recall it buys back) plus house-rule
-  re-certs of the whole family inside the r12 window, because the
-  shared builders changed: ``_graph_ctes`` gained tag/lead parameters
-  (rendered text byte-identical for every existing oracle — verified
-  by md5 against the r11 tip) and ``_rebuild_curve`` was factored
-  through the new ``_insert_replay`` (output-identical; the curve
-  tail is unchanged).
-"""
+"""Graph queries over the embedding k-NN graph: the shared k-NN graph
+builder (Spark frame + DuckDB CTE), PageRank, components, BFS, NN-descent,
+greedy/beam search, incremental insert and the rebuild policy
+(``graph_``)."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# Registry import FIRST among intra-package imports (worker re-import
-# ordering; see llm_ext2.py's header note).
-from ..registry import REGISTRY, pin, register, spread, table
-
+from ..registry import REGISTRY, pin, register, table
+from ..partitioning import spread
 from ..operators import similarity as sim
+
+
+# The shared k-NN graph (sim_knn_graph, graph_pagerank_knn,
+# graph_knn_hubness and the graph_knn_* family): the Spark builder and
+# its DuckDB CTE twin.
+KNN_GRAPH_K = 3
+
+
+_KNN_CTE = f"""
+WITH e AS (SELECT vec_id, {sim.as_double_sql('embedding')} AS demb
+           FROM embeddings),
+n AS (SELECT vec_id, demb, {sim.norm_sql('demb')} AS nrm FROM e),
+b AS (SELECT vec_id, {sim.lsh_buckets_multi_sql('demb')} AS buckets
+      FROM n),
+x AS (SELECT vec_id, i AS tbl, buckets[i + 1] AS bucket
+      FROM b CROSS JOIN
+           (SELECT unnest(range(0, {sim.LSH_TABLES})) AS i) u),
+cand AS (SELECT DISTINCT a.vec_id AS va, c.vec_id AS vb
+         FROM x a JOIN x c ON c.tbl = a.tbl AND c.bucket = a.bucket
+                          AND a.vec_id < c.vec_id),
+sc AS MATERIALIZED (SELECT cand.va, cand.vb,
+              round({sim.dot_unrolled_sql('na.demb', 'nb.demb')}
+                    / (na.nrm * nb.nrm), 6) AS cosine
+       FROM cand JOIN n na ON na.vec_id = cand.va
+                 JOIN n nb ON nb.vec_id = cand.vb),
+dir AS (SELECT va AS src, vb AS dst, cosine FROM sc
+        UNION ALL
+        SELECT vb AS src, va AS dst, cosine FROM sc),
+knn AS MATERIALIZED (SELECT src, dst, cosine, rn FROM (
+            SELECT *, row_number() OVER (PARTITION BY src
+                                         ORDER BY cosine DESC, dst) AS rn
+            FROM dir)
+        WHERE rn <= {KNN_GRAPH_K})
+"""
+
+
+def _knn_graph_df(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, cosine, rn<=K): the directed approximate k-NN graph —
+    shared by sim_knn_graph, the PageRank centrality query and the
+    hubness histogram."""
+
+    e = spread(table(spark, sf_dir, "embeddings")).select(
+        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
+    n = pin(e.select("vec_id", "demb",
+                     sim.norm(F.col("demb")).alias("nrm")))
+    x = pin(n.select(
+        "vec_id",
+        F.posexplode(sim.lsh_buckets_multi(F.col("demb")))
+         .alias("tbl", "bucket")).select("vec_id", "tbl", "bucket"))
+    a = x.select(F.col("vec_id").alias("va"), "tbl", "bucket")
+    c = x.select(F.col("vec_id").alias("vb"), "tbl", "bucket")
+    cand = (a.join(c, ["tbl", "bucket"])
+            .filter(F.col("va") < F.col("vb"))
+            .select("va", "vb").distinct())
+    na = n.select(F.col("vec_id").alias("va"),
+                  F.col("demb").alias("demb_a"), F.col("nrm").alias("nrm_a"))
+    nb = n.select(F.col("vec_id").alias("vb"),
+                  F.col("demb").alias("demb_b"), F.col("nrm").alias("nrm_b"))
+    sc = (cand.join(na, "va").join(nb, "vb")
+          .select("va", "vb",
+                  sim.cosine(sim.dot(F.col("demb_a"), F.col("demb_b")),
+                             F.col("nrm_a"), F.col("nrm_b"))
+                     .alias("cosine")))
+    directed = (
+        sc.select(F.col("va").alias("src"), F.col("vb").alias("dst"),
+                  "cosine")
+        .unionAll(sc.select(F.col("vb").alias("src"),
+                            F.col("va").alias("dst"), "cosine")))
+    w = Window.partitionBy("src").orderBy(F.col("cosine").desc(), "dst")
+    return (
+        directed.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= KNN_GRAPH_K)
+    )
+
+
+# --------------------------------- PageRank centrality on the kNN graph
+
+PR_ROUNDS = 3
+PR_DAMP = "CAST(0.85 AS DOUBLE)"
+PR_TELE = "CAST(0.15 AS DOUBLE)"
+PR_QUANT = 1e12
+
+
+def _pagerank_ctes(rounds: int = PR_ROUNDS) -> str:
+    """CTE chain for power iteration over the knn edge set: per-edge
+    contributions quantized to a 1e-12 int grid and summed as int64
+    (order-independent, same discipline as the JS/LM queries); dangling
+    mass redistributed uniformly each round."""
+    parts = [
+        "edges AS (SELECT src, dst FROM knn)",
+        "deg AS (SELECT src, count(*) AS deg FROM edges GROUP BY 1)",
+        "nodes AS (SELECT vec_id FROM e)",
+        "nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM nodes)",
+        "r0 AS (SELECT vec_id, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn)",
+    ]
+    for t in range(1, rounds + 1):
+        p = t - 1
+        parts.append(
+            f"c{t} AS (SELECT ed.dst, CAST(sum(CAST(floor("
+            f"(r.r / deg.deg) * {PR_QUANT!r} + 0.5) AS BIGINT)) AS BIGINT)"
+            f" AS cq"
+            f" FROM edges ed JOIN r{p} r ON r.vec_id = ed.src"
+            f" JOIN deg ON deg.src = ed.src GROUP BY ed.dst)")
+        parts.append(
+            f"d{t} AS (SELECT CAST(coalesce(sum(CAST(floor("
+            f"r.r * {PR_QUANT!r} + 0.5) AS BIGINT)), 0) AS BIGINT) AS dq"
+            f" FROM r{p} r LEFT JOIN deg ON deg.src = r.vec_id"
+            f" WHERE deg.src IS NULL)")
+        parts.append(
+            f"r{t} AS (SELECT no.vec_id,"
+            f" (({PR_TELE} / nn.n)"
+            f" + {PR_DAMP} * (coalesce(c.cq, 0) / {PR_QUANT!r}))"
+            f" + {PR_DAMP} * ((d.dq / {PR_QUANT!r}) / nn.n) AS r"
+            f" FROM nodes no LEFT JOIN c{t} c ON c.dst = no.vec_id"
+            f" CROSS JOIN d{t} d CROSS JOIN nn)")
+    return ",\n".join(parts)
+
+
+@register(
+    "graph_pagerank_knn",
+    oracle=f"""
+    {_KNN_CTE},
+    {_pagerank_ctes()}
+    SELECT vec_id, {sim.round6_stable_sql('r')} AS pagerank6
+    FROM r{PR_ROUNDS} ORDER BY vec_id
+    """,
+    tags=("llm", "graph-pagerank", "iterative"),
+)
+def q_pagerank_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """PageRank centrality over the approximate k-NN similarity graph —
+    a representativeness weight for data selection: vectors that many
+    other vectors point to as a nearest neighbor are central to the
+    corpus distribution; tail/outlier items score near the teleport
+    floor. {PR_ROUNDS} power-iteration rounds with damping 0.85 and
+    uniform redistribution of dangling mass (nodes with no outgoing
+    edges keep the total mass conserved).
+
+    Exactness: every edge contribution r/deg quantizes to a 1e-12 int64
+    grid before summation (partition-order independent; the same
+    discipline as the JS-divergence and LM queries), the dangling sum is
+    one quantized scalar, and the per-round update is one fixed IEEE op
+    sequence — so ranks stay bit-identical to the oracle's CTE replay
+    round for round.
+
+    Scale shape: the edge list is corpus x k; each round is one join on
+    src (edges x current ranks, both partitioned by the key), one
+    dst-keyed aggregate, and a 1-row dangling scalar broadcast back —
+    the standard distributed PageRank plan. The driver never sees data,
+    only the loop index; rank lineage is truncated per round with an
+    eager localCheckpoint (same pattern as connected_components)."""
+    knn = _knn_graph_df(spark, sf_dir)
+    edges = pin(knn.select("src", "dst"))
+    deg = pin(edges.groupBy("src").agg(F.count("*").alias("deg")))
+    nodes = table(spark, sf_dir, "embeddings").select("vec_id")
+    nn = nodes.agg(F.count("*").cast("bigint").alias("n"))
+    qf = F.lit(PR_QUANT)
+    damp, tele = F.expr(PR_DAMP), F.expr(PR_TELE)
+
+    r = (nodes.crossJoin(F.broadcast(nn))
+         .select("vec_id", (F.lit(1.0) / F.col("n")).alias("r"))
+         .localCheckpoint(eager=True))
+    for _t in range(PR_ROUNDS):
+        contrib = (
+            edges.join(r.withColumnRenamed("vec_id", "src"), "src")
+            .join(deg, "src")
+            .groupBy("dst")
+            .agg(F.sum(F.floor((F.col("r") / F.col("deg")) * qf
+                               + F.lit(0.5)).cast("long"))
+                  .cast("bigint").alias("cq")))
+        dang = (
+            r.join(deg.withColumnRenamed("src", "vec_id"), "vec_id",
+                   "left_anti")
+            .agg(F.coalesce(
+                F.sum(F.floor(F.col("r") * qf + F.lit(0.5)).cast("long")),
+                F.lit(0)).cast("bigint").alias("dq")))
+        r = (
+            nodes.join(contrib.withColumnRenamed("dst", "vec_id"),
+                       "vec_id", "left")
+            .crossJoin(F.broadcast(dang))
+            .crossJoin(F.broadcast(nn))
+            .select(
+                "vec_id",
+                (((tele / F.col("n"))
+                  + damp * (F.coalesce("cq", F.lit(0)) / qf))
+                 + damp * ((F.col("dq") / qf) / F.col("n"))).alias("r"))
+            .localCheckpoint(eager=True))
+    return (
+        r.select("vec_id", sim.round6_stable(F.col("r")).alias("pagerank6"))
+        .orderBy("vec_id")
+    )
+
+
+# ------------------------------------------- kNN hubness diagnostic
+
+
+def _hubness_oracle() -> str:
+    return f"""
+    {_KNN_CTE},
+    ind AS (SELECT e.vec_id,
+                   coalesce(k.c, 0) AS in_degree
+            FROM (SELECT vec_id FROM embeddings) e
+            LEFT JOIN (SELECT dst, CAST(count(*) AS BIGINT) AS c
+                       FROM knn GROUP BY 1) k ON k.dst = e.vec_id)
+    SELECT in_degree, CAST(count(*) AS BIGINT) AS n_nodes
+    FROM ind GROUP BY 1 ORDER BY in_degree
+    """
+
+
+@register(
+    "graph_knn_hubness",
+    oracle=_hubness_oracle(),
+    tags=("llm", "knn-graph", "hubness"),
+)
+def q_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hubness diagnostic over the k-NN graph: the IN-degree histogram
+    (out-degree is K by construction; in-degree is not). A heavy tail
+    here is the classic high-dimensional ANN failure mode — a few hub
+    vectors appear in everyone's neighbor list and drag retrieval
+    quality — and the fix (re-centering, cosine vs dot) is chosen from
+    this table. Nodes nobody points at (in-degree 0) are included via
+    the left join.
+
+    Scale shape: reuses the bucket-bounded kNN build (one pinned LSH
+    bucket self-join), then two small aggregates on ids only."""
+
+    knn = _knn_graph_df(spark, sf_dir)
+    e = table(spark, sf_dir, "embeddings").select("vec_id")
+    indeg = knn.groupBy("dst").agg(F.count("*").alias("c"))
+    ind = (e.join(indeg, e["vec_id"] == indeg["dst"], "left")
+           .select(F.coalesce("c", F.lit(0)).alias("in_degree")))
+    return (ind.groupBy("in_degree").agg(F.count("*").alias("n_nodes"))
+            .orderBy("in_degree"))
+
+
+# --------------------------------------- two-hop kNN reach
+
+@register(
+    "graph_knn_two_hop",
+    oracle=None,  # set below (imports the shared kNN CTE lazily)
+    tags=("llm", "graph", "two-hop"),
+)
+def q_knn_two_hop(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-hop neighborhood size over the approximate kNN graph — the
+    expansion statistic that predicts label-propagation / graph-dedup
+    fan-out (hub-heavy graphs explode at hop 2). reach(v) = |{u != v :
+    dist(v,u) <= 2 hops}|, reported as a histogram.
+
+    Scale shape: one self-join of a k-bounded edge list on the hop key —
+    each node contributes at most k^2 candidate second hops (k=3), so
+    the join output is k^2 * |V|, never |V|^2; the distinct and the two
+    aggregations are keyed shuffles on node ids."""
+
+    g = pin(_knn_graph_df(spark, sf_dir).select("src", "dst"))
+    a, b = g.alias("a"), g.alias("b")
+    two = (a.join(b, F.col("a.dst") == F.col("b.src"))
+           .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst")))
+    reach = (g.unionAll(two)
+             .filter(F.col("dst") != F.col("src"))
+             .distinct()
+             .groupBy("src").agg(F.count("*").cast("bigint").alias("reach")))
+    return (reach.groupBy("reach")
+            .agg(F.count("*").cast("bigint").alias("n_nodes"))
+            .orderBy("reach"))
+
+
+def _two_hop_oracle() -> str:
+    return f"""
+    {_KNN_CTE},
+    g AS (SELECT src, dst FROM knn),
+    two AS (SELECT a.src, b.dst FROM g a JOIN g b ON a.dst = b.src),
+    r AS (SELECT src, CAST(count(DISTINCT dst) AS BIGINT) AS reach
+          FROM (SELECT * FROM g UNION ALL SELECT * FROM two)
+          WHERE dst <> src GROUP BY src)
+    SELECT reach, CAST(count(*) AS BIGINT) AS n_nodes
+    FROM r GROUP BY reach ORDER BY reach
+    """
+
+
+REGISTRY["graph_knn_two_hop"].oracle = _two_hop_oracle()
+
+
+# --------------------------------------- kNN semantic components
+
+@register(
+    "graph_knn_components",
+    oracle=None,  # set below
+    tags=("llm", "graph", "components", "iterative"),
+)
+def q_knn_components(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Connected components over the kNN similarity graph — semantic
+    grouping WITHOUT training a quantizer (the graph-native alternative
+    to k-means clustering): mutual-reachability components of the
+    LSH-built kNN edges, reported as a component-size histogram.
+
+    Reuses the shared banded kNN builder and the iterative min-label
+    propagation operator (one shuffle + localCheckpoint per round,
+    driver carries a convergence count only); the oracle replays the
+    fixpoint as a recursive transitive-closure CTE. Isolated vectors
+    (no edges at this k) are counted as singleton components via the
+    left anti side."""
+    from ..operators.dedup import connected_components
+
+    g = pin(_knn_graph_df(spark, sf_dir).select("src", "dst"))
+    # The kNN graph is DIRECTED (dst in src's top-k does not imply the
+    # reverse); canonicalize every edge with least/greatest — filtering
+    # src < dst would silently drop edges present only as (big -> small).
+    edges = (g.select(F.least("src", "dst").alias("doc_a"),
+                      F.greatest("src", "dst").alias("doc_b"))
+             .distinct())
+    comp = connected_components(edges)
+    sizes = comp.groupBy("comp").agg(F.count("*").cast("bigint").alias("sz"))
+    e = table(spark, sf_dir, "embeddings").select("vec_id")
+    n_iso = (e.join(comp.select(F.col("doc_id").alias("vec_id")),
+                    "vec_id", "left_anti")
+             .agg(F.count("*").cast("bigint").alias("n_iso")))
+    hist = (sizes.groupBy("sz")
+            .agg(F.count("*").cast("bigint").alias("n_components")))
+    iso_row = (n_iso.filter(F.col("n_iso") > 0)
+               .select(F.lit(1).cast("bigint").alias("sz"),
+                       F.col("n_iso").alias("n_components")))
+    return (hist.unionAll(iso_row)
+            .groupBy("sz")
+            .agg(F.sum("n_components").cast("bigint").alias("n_components"))
+            .select(F.col("sz").alias("component_size"), "n_components")
+            .orderBy("component_size"))
+
+
+def _knn_components_oracle() -> str:
+    return f"""
+    {_KNN_CTE.replace("WITH ", "WITH RECURSIVE ", 1)},
+    ed AS (SELECT src AS a, dst AS b FROM knn
+           UNION SELECT dst AS a, src AS b FROM knn),
+    nodes AS (SELECT DISTINCT a AS v FROM ed),
+    reach(src, dst) AS (
+        SELECT v, v FROM nodes
+        UNION
+        SELECT r.src, e.b FROM reach r JOIN ed e ON r.dst = e.a),
+    comp AS (SELECT src AS v, min(dst) AS comp FROM reach GROUP BY src),
+    sizes AS (SELECT comp, CAST(count(*) AS BIGINT) AS sz
+              FROM comp GROUP BY comp),
+    iso AS (SELECT CAST(count(*) AS BIGINT) AS n_iso
+            FROM embeddings WHERE vec_id NOT IN (SELECT v FROM comp))
+    SELECT CAST(sz AS BIGINT) AS component_size,
+           CAST(sum(n_components) AS BIGINT) AS n_components
+    FROM (
+        SELECT sz, count(*) AS n_components FROM sizes GROUP BY sz
+        UNION ALL
+        SELECT 1, n_iso FROM iso WHERE n_iso > 0
+    ) GROUP BY sz ORDER BY component_size
+    """
+
+
+REGISTRY["graph_knn_components"].oracle = _knn_components_oracle()
+
+
+# --------------------------------------- native recursive-CTE BFS
+
+BFS_SEED_MAX = 5   # seed set: vec_id < 5
+BFS_MAX_DEPTH = 3  # hop cap (bounds recursive work at any scale)
+
+_BFS_SQL = f"""
+WITH RECURSIVE walk(v, lvl) AS (
+    SELECT vec_id AS v, 0 AS lvl FROM {{emb}} WHERE vec_id < {BFS_SEED_MAX}
+    UNION ALL
+    SELECT e.dst AS v, w.lvl + 1 AS lvl
+    FROM walk w JOIN {{edges}} e ON e.src = w.v
+    WHERE w.lvl < {BFS_MAX_DEPTH}
+)
+SELECT CAST(lvl AS INT) AS lvl,
+       CAST(count(*) AS BIGINT) AS n_first_reached
+FROM (SELECT v, min(lvl) AS lvl FROM walk GROUP BY v)
+GROUP BY lvl ORDER BY lvl
+"""
+
+
+@register(
+    "graph_knn_bfs_recursive",
+    oracle=None,  # set below
+    tags=("llm", "graph", "recursive-cte"),
+)
+def q_knn_bfs_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Bounded-depth BFS from a seed set over the kNN graph via Spark's
+    NATIVE recursive CTE (WITH RECURSIVE, Spark 4.x) — nodes first
+    reached at each hop level. The relational face of iterative graph
+    traversal: where connected_components hand-rolls the driver loop,
+    this lets Catalyst plan the fixpoint (UnionLoop), the same SQL text
+    both engines execute.
+
+    Scale: work per recursion step is seed-frontier x k (k=3 out-edges),
+    capped at {BFS_MAX_DEPTH} hops — bounded regardless of graph size;
+    the min-level dedup is one keyed aggregate over at most
+    |seeds| * k^depth path rows."""
+
+    g = pin(_knn_graph_df(spark, sf_dir).select("src", "dst"))
+    g.createOrReplaceTempView("knn_edges_bfs")
+    table(spark, sf_dir, "embeddings").select("vec_id") \
+        .createOrReplaceTempView("emb_bfs")
+    return spark.sql(_BFS_SQL.format(emb="emb_bfs", edges="knn_edges_bfs"))
+
+
+def _bfs_oracle() -> str:
+    # Same recursive SQL; the kNN edge list comes from the shared CTE.
+    body = _BFS_SQL.format(emb="embeddings", edges="ed")
+    if not body.startswith("\nWITH RECURSIVE "):
+        # Load-bearing format check (the splice below depends on it); an
+        # assert would vanish under `python -O`.
+        raise ValueError("_BFS_SQL must open with a recursive CTE")
+    inner = body[len("\nWITH RECURSIVE "):]
+    return f"""
+    {_KNN_CTE.replace("WITH ", "WITH RECURSIVE ", 1)},
+    ed AS (SELECT src, dst FROM knn),
+    {inner}
+    """
+
+
+REGISTRY["graph_knn_bfs_recursive"].oracle = _bfs_oracle()
+
 
 # ------------------------------------------ NN-Descent kNN-graph build
 
@@ -262,7 +651,7 @@ REGISTRY["graph_nn_descent"].oracle = _nn_descent_oracle()
 # join, one rank window. Three operators share this machinery:
 #
 # - graph_greedy_search  — the navigability report (per-query visited
-#   count + recall@K vs exact), IN the r9 sample window;
+#   count + recall@K vs exact);
 # - graph_beam_sweep     — the cost/recall curve over frontier widths
 #   (the graph-search analog of sim_ann_nprobe_sweep);
 # - graph_knn_insert     — HNSW-style INCREMENTAL insertion: held-out
@@ -290,6 +679,7 @@ GS_TOPK = 10     # answer size / recall@K
 GS_ENTRIES = 8   # stride-pinned entry points per query
 GS_QOFF = 17     # query id stride sample: (GS_QOFF + GS_QSTRIDE*i) % n
 GS_QSTRIDE = 131
+
 
 def _wq():
     return Window.partitionBy("query_id").orderBy(
@@ -627,10 +1017,6 @@ REGISTRY["graph_greedy_search"].oracle = _greedy_search_oracle()
 
 # ------------------------------------------ beam-width cost/recall sweep
 
-# CERTIFICATION STATUS: registered in round 9 AFTER the 50-slot r9
-# sample window was allocated, so it sat honestly BEHIND that window;
-# it LEADS the r10 window (locally oracle-verified at three SFs + a
-# plain driver-style session throughout, pytest-covered).
 GS_SWEEP_BEAMS = (2, 4, 8, 16)
 
 
@@ -710,11 +1096,6 @@ REGISTRY["graph_beam_sweep"].oracle = _beam_sweep_oracle()
 
 # --------------------------------------- incremental insertion (HNSW)
 
-# CERTIFICATION STATUS: registered in round 9 AFTER the 50-slot r9
-# sample window was allocated — sat honestly BEHIND that window; LEADS
-# the r10 window with graph_beam_sweep (locally oracle-verified at
-# three SFs + a plain session throughout, pytest-covered).
-#
 # At 100 TB an embedding index is never rebuilt from scratch for each
 # ingest batch: new vectors are INSERTED — each one beam-searches the
 # existing graph for its neighborhood and connects to the best nodes
@@ -851,12 +1232,6 @@ REGISTRY["graph_knn_insert"].oracle = _knn_insert_oracle()
 
 # ------------------------------- rebuild decision (insertion drift)
 
-# CERTIFICATION STATUS: written in round 10, formal row round 10;
-# builder factored into the shared _rebuild_curve in round 11
-# (rendered oracle byte-identical to the r10 tip), re-certifying
-# inside the r11 window per the house rule. graph_rebuild_policy:
-# written in round 11, INSIDE the r11 window.
-#
 # graph_knn_insert shows ONE batch's insertion quality; the operational
 # question an index maintainer actually asks is the TREND: as batch
 # after batch is inserted without a rebuild, how fast does insertion

@@ -1,188 +1,157 @@
-"""Round-13 operators: the missing ACT steps — substring-dedup
-drop-plan EXECUTE and the IVF inverted-list maintenance pair
-(REBALANCE split / MERGE shrink).
-
-CERTIFICATION STATUS: written in round 13, inside the r13 sample
-window (new code earns its formal row in the round it is written —
-registry.SAMPLE_PREFIX_EXPECTED allocates all three).
-
-Reference scope note: the reference (/root/reference, a single-purpose
-NATS enrichment daemon, main.py + src/service.py) has no analytics
-surface; both operators here are north-star scope, built Spark-first
-and oracle-paired.
-
-- ``dedup_drop_plan_execute`` — closes the substring-dedup lifecycle
-  (detect: dedup_max_duplicated_run; plan: dedup_containment_drop_plan
-  / dedup_span_removal_plan; receipts: dedup_span_df_stats; ACT:
-  this). Applies the containment drop plan to the corpus and
-  RE-VERIFIES the survivor theorem on the post-drop corpus: the 1-row
-  receipt carries corpus counts before/after, the tokens a removal
-  saves, and — the theorem column — the number of full containments
-  REMAINING among survivors, recomputed by running the identical
-  DF-capped pair plan on the survivor corpus. The recount is 0 for ANY
-  corpus, and the theorem is robust to the SPAN_DF_CAP even though the
-  containment relation is cap-relative. Proof: (1) a doc carrying an
-  above-cap span can never itself be counted as contained — the
-  full-sequence run its drop would require breaks at the hot span
-  (hot spans are excluded from pairing) — so every carrier of a hot
-  span SURVIVES; (2) therefore a pre-drop-hot span keeps its full
-  carrier set among survivors and stays above the cap in the
-  survivor-corpus recount — no containment hidden by the cap is ever
-  revealed by dropping docs; (3) hence a span sub-cap in the recount
-  was sub-cap pre-drop (contrapositive of 2) — so a surviving doc
-  contained in a surviving container with all witness spans sub-cap
-  post-drop showed the SAME full-sequence run pre-drop (witnesses
-  already sub-cap, container text unchanged), was counted contained,
-  and was dropped — contradiction. Tests pin the 0 on the real
-  fixtures at every SF AND on a planted hot-boilerplate corpus where
-  the cap actively masks pairs.
-- ``sim_ivf_rebalance`` — closes the IVF maintenance loop
-  (detect: sim_ivf_list_balance; ACT: this). Splits the heaviest
-  inverted lists k=2 (the standard IVF list-split maintenance step:
-  re-train 2 sub-centroids within each split list — Lloyd's, fixed 2
-  iterations, init = the list's two smallest vec_ids, the package's
-  deterministic-k-means discipline so the oracle replays training
-  CTE-for-CTE) and reports the 1-row receipt: list counts, max list
-  size and max load factor before/after, and recall@5 at nprobe=2
-  before/after over the same query panel with the candidate-row scan
-  cost of each — the numbers that tell the nprobe planner what the
-  split bought. Split set = every 2x-overloaded list (the balance
-  operator's verdict) UNION the heaviest IVR_MIN_SPLITS lists — the
-  amortized-maintenance mode (split the heaviest lists every round)
-  that keeps the act path exercised on balanced corpora too; k-means
-  balances the shipped testdata (round-12 lesson), so the genuinely
-  overloaded regime is exercised by the planted near-dup-cluster
-  corpus in tests.
-- ``sim_ivf_merge`` — the symmetric shrink act: REMOVE the lightest
-  inverted lists (every list at/under half of perfect balance, at
-  least IVM_MIN_MERGES per round, never more than half the index) and
-  reassign their members to the nearest surviving centroid — the
-  faiss remove-centroid maintenance step, no retraining. Shares the
-  base assignment and recall-receipt CTEs with the rebalance act on
-  both engines; the receipt honestly shows the shrink's trade on a
-  balanced corpus (fewer lists, more candidates per probe, recall
-  cost) — the numbers that decide whether the shrink is worth it.
-"""
+"""IVF index lifecycle queries (``sim_ivf_``): list balance and drift,
+the rebalance (split) and merge acts, incremental insert, the fused
+lifecycle receipt, plus the shared IVF base/recall builders and act
+chains every one of them composes."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# Registry import FIRST among intra-package imports (worker re-import
-# ordering; see llm_ext2.py's header note).
-from ..registry import pin, register, spread, table
-
+from ..registry import REGISTRY, pin, register, table
+from ..partitioning import spread
 from ..operators import kmeans as km
 from ..operators import similarity as sim
 
-# ------------------------------- drop-plan execute (the act step)
 
-from .llm_ext10 import (  # noqa: E402
-    MR_K,
-    _span_counts,
-    run_ctes_sql,
-    span_pairs_from,
-)
+# Coarse-quantizer size, pinned to operators.kmeans.IVF_NLIST_FLOOR so the
+# oracle strings (which replay training CTE-for-CTE) stay static per sf. In
+# production, size from the corpus instead: km.ivf_nlist_for(N) ~ sqrt(N/39)
+# snapped to a power of two (16 at every tested sf, 4096 at N=1e9), with the
+# training-sample bound km.train_sample_for(nlist) — train_ivf_centroids(e)
+# with no explicit k does exactly that.
+IVF_NLIST = 16   # == km.IVF_NLIST_FLOOR (asserted in tests)
 
 
-def _drop_execute_oracle() -> str:
-    return run_ctes_sql() + f""",
-    drops AS (SELECT DISTINCT
-                     CASE WHEN na.n_spans < nb.n_spans THEN p.doc_a
-                          ELSE p.doc_b END AS doc_id
-              FROM pairs p JOIN ns na ON na.doc_id = p.doc_a
-                           JOIN ns nb ON nb.doc_id = p.doc_b
-              WHERE p.max_run_spans = least(na.n_spans, nb.n_spans)),
-    surv AS (SELECT d.doc_id, d.text FROM documents d
-             ANTI JOIN drops USING (doc_id)),{run_ctes_sql('surv', '2',
-                                                           lead='')},
-    nb0 AS (SELECT CAST(count(*) AS BIGINT) AS n_docs_before
-            FROM documents),
-    nd AS (SELECT CAST(count(*) AS BIGINT) AS n_dropped FROM drops),
-    na0 AS (SELECT CAST(count(*) AS BIGINT) AS n_docs_after FROM surv),
-    tr AS (SELECT coalesce(CAST(sum(ns.n_spans + {MR_K} - 1) AS BIGINT),
-                           0) AS tokens_removed
-           FROM ns JOIN drops USING (doc_id)),
-    rp AS (SELECT CAST(count(*) AS BIGINT) AS surviving_pair_count,
-                  CAST(coalesce(sum(CAST(
-                      p.max_run_spans = least(na.n_spans, nb.n_spans)
-                      AS BIGINT)), 0) AS BIGINT)
-                      AS remaining_full_containments
-           FROM pairs2 p JOIN ns2 na ON na.doc_id = p.doc_a
-                         JOIN ns2 nb ON nb.doc_id = p.doc_b)
-    SELECT n_docs_before, n_dropped, n_docs_after, tokens_removed,
-           surviving_pair_count, remaining_full_containments
-    FROM nb0 CROSS JOIN nd CROSS JOIN na0 CROSS JOIN tr CROSS JOIN rp
+# ------------------------------ IVF inverted-list balance dashboard
+
+# Same coarse quantizer as sim_ann_ivf (IVF_NLIST): nlist pinned
+# to the floor so the oracle replays training CTE-for-CTE; production
+# auto-sizes via km.ivf_nlist_for. Load factor: a list holding exactly
+# corpus/nlist vectors scores 1000; the overload verdict fires at 2x
+# perfect balance — the threshold where probing that list costs double
+# the planner's uniform assumption.
+IVB_OVERLOAD_X1000 = 2000
+
+
+def _ivf_balance_oracle() -> str:
+    return f"""
+    WITH e AS (SELECT vec_id, {sim.as_double_sql('embedding')} AS demb
+               FROM embeddings),
+    n AS (SELECT vec_id, demb, {sim.norm_sql('demb')} AS nrm FROM e),
+    {km.ivf_train_cte_sql(IVF_NLIST)},
+    cent AS (SELECT cent_id, c_demb, {sim.norm_sql('c_demb')} AS c_nrm
+             FROM tcent),
+    assign AS (
+        SELECT vec_id, cent_id
+        FROM (SELECT n.vec_id, cent.cent_id,
+                     row_number() OVER (
+                         PARTITION BY n.vec_id
+                         ORDER BY CAST(floor({sim.dot_sql('n.demb',
+                                                          'cent.c_demb')}
+                                  / (n.nrm * cent.c_nrm) * 1000000 + 0.5)
+                                  AS BIGINT) DESC,
+                                  cent.cent_id) AS rc
+              FROM n CROSS JOIN cent)
+        WHERE rc = 1),
+    sizes AS (SELECT c.cent_id,
+                     CAST(count(a.vec_id) AS BIGINT) AS n_vecs
+              FROM cent c LEFT JOIN assign a ON a.cent_id = c.cent_id
+              GROUP BY c.cent_id),
+    tot AS (SELECT greatest(CAST(sum(n_vecs) AS BIGINT), 1) AS n
+            FROM sizes)
+    SELECT CAST(cent_id AS BIGINT) AS cent_id, n_vecs,
+           CAST(n_vecs * 1000000 // tot.n AS BIGINT) AS share_ppm,
+           CAST(n_vecs * {IVF_NLIST} * 1000 // tot.n AS BIGINT)
+               AS load_x1000,
+           n_vecs * {IVF_NLIST} * 1000 // tot.n >= {IVB_OVERLOAD_X1000}
+               AS overloaded
+    FROM sizes CROSS JOIN tot ORDER BY cent_id
     """
 
 
 @register(
-    "dedup_drop_plan_execute",
-    oracle=_drop_execute_oracle(),
-    tags=("llm", "dedup-substring", "curation", "action"),
+    "sim_ivf_list_balance",
+    oracle=None,  # set below (renders the shared training CTEs)
+    tags=("llm", "ann-ivf", "diagnostic", "skew"),
 )
-def q_drop_plan_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Execute the containment drop plan and re-verify the survivor
-    theorem on the post-drop corpus (module comment above): one row
-    with corpus counts before/after, the dropped-doc count, the tokens
-    removed (the drop plan's tokens_saved summed over the distinct drop
-    set), the surviving pair count, and the recounted full containments
-    among survivors — 0 for ANY corpus, by the cap-robust transitivity
-    theorem (module comment; property-tested with a tiny cap in
-    tests/test_properties.py).
+def q_ivf_list_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF inverted-list balance report (module comment above): one row
+    per trained centroid — empty lists included — with the assigned
+    vector count, corpus share in ppm, load factor vs perfect balance
+    (x1000), and the 2x-overload verdict.
 
-    Scale shape: everything corpus-scale is the audited pair builder,
-    run twice (span_pairs_from — equi-join on span_id over the
-    DF-capped span relation, int-only shuffles, pair-keyed windows);
-    the act layer adds the drop-set projection (distinct doc ids — the
-    only pinned intermediate; corpus text is never cached), one
-    id-keyed anti-join producing the survivor corpus, an id-keyed join
-    for the token receipts, and broadcast crossJoins of 1-row bounds.
-    At 100 TB the drop set is the plan a production pipeline persists;
-    re-deriving it here keeps the operator self-contained while every
-    shuffle still carries ids and span ints, never text."""
-    d = spread(table(spark, sf_dir, "documents")).select("doc_id", "text")
-    p1 = span_pairs_from(d)
-    contained_a = F.col("n_spans_a") < F.col("n_spans_b")
-    drops = pin(
-        p1.filter(F.col("max_run_spans")
-                  == F.least("n_spans_a", "n_spans_b"))
-        .select(F.when(contained_a, F.col("doc_a"))
-                .otherwise(F.col("doc_b")).alias("doc_id"))
-        .distinct())
-    # broadcast the id-only drop set: applying the plan must stay
-    # map-side over the corpus scan (text never shuffles). License: the
-    # drop set is bounded by the corpus's full-containment duplicate
-    # mass, ids only; a corpus whose drop set outgrows broadcast would
-    # drop the hint and pay one id-keyed text shuffle instead.
-    surv = d.join(F.broadcast(drops), "doc_id", "left_anti")
-    p2 = span_pairs_from(surv)
-    nb0 = d.agg(F.count("*").cast("long").alias("n_docs_before"))
-    nd = drops.agg(F.count("*").cast("long").alias("n_dropped"))
-    na0 = surv.agg(F.count("*").cast("long").alias("n_docs_after"))
-    tr = (_span_counts(d).join(F.broadcast(drops), "doc_id")
-          .agg(F.coalesce(F.sum(F.col("n_spans") + MR_K - 1).cast("long"),
-                          F.lit(0).cast("long")).alias("tokens_removed")))
-    rp = p2.agg(
-        F.count("*").cast("long").alias("surviving_pair_count"),
-        F.coalesce(
-            F.sum((F.col("max_run_spans")
-                   == F.least("n_spans_a", "n_spans_b")).cast("long")),
-            F.lit(0)).cast("long").alias("remaining_full_containments"))
-    return (nb0.crossJoin(F.broadcast(nd))
-            .crossJoin(F.broadcast(na0))
-            .crossJoin(F.broadcast(tr))
-            .crossJoin(F.broadcast(rp))
-            .select("n_docs_before", "n_dropped", "n_docs_after",
-                    "tokens_removed", "surviving_pair_count",
-                    "remaining_full_containments"))
+    Scale shape: training touches a bounded sample (K centroids to the
+    driver, the audited kmeans license); the assignment is ONE corpus
+    scan against the broadcast centroid table with a per-vector rank
+    window (partition mass = nlist rows per vector); sizes are a
+    partial+final aggregate onto <= nlist keys and the 1-row total
+    broadcasts back. The report costs one scan regardless of corpus
+    size — the dashboard is read BEFORE queries pay for the skew.
+    Magnitude license: n_vecs * 1e6 needs n_vecs <= 9.2e12 per list —
+    int64-safe for any real corpus."""
+    from pyspark.sql import Window
+
+    e = table(spark, sf_dir, "embeddings").select(
+        "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
+    n = spread(e).select("vec_id", "demb",
+                         sim.norm(F.col("demb")).alias("nrm"))
+    cents = km.train_ivf_centroids(e, IVF_NLIST)
+    cent = spark.createDataFrame(
+        [(i, cents[i]) for i in range(IVF_NLIST)],
+        "cent_id int, c_demb array<double>",
+    ).withColumn("c_nrm", sim.norm(F.col("c_demb")))
+    # ppm-quantized rank key (the graph-family discipline): a raw
+    # double cosine on a near-tie between two centroids can differ by
+    # 1 ulp across engines and flip the assignment; floor(cos*1e6+0.5)
+    # as int64 makes the rank key exact on both sides.
+    w = Window.partitionBy("vec_id").orderBy(
+        F.col("c_cos_ppm").desc(), "cent_id")
+    assign = (n.crossJoin(F.broadcast(cent))
+              .select("vec_id", "cent_id",
+                      F.floor(sim.dot(F.col("demb"), F.col("c_demb"))
+                              / (F.col("nrm") * F.col("c_nrm"))
+                              * F.lit(1000000.0) + F.lit(0.5))
+                      .cast("long").alias("c_cos_ppm"))
+              .withColumn("rc", F.row_number().over(w))
+              .filter(F.col("rc") == 1)
+              .select("vec_id", "cent_id"))
+    # pinned: sizes feeds BOTH the report rows and the 1-row total —
+    # unpinned, the total's aggregate re-runs the whole assignment scan
+    # (the package's pin-sketch-intermediates rule; plan-audited to one
+    # parquet scan)
+    sizes = pin(cent.select("cent_id")
+                .join(assign, "cent_id", "left")
+                .groupBy("cent_id")
+                .agg(F.count("vec_id").cast("long").alias("n_vecs")))
+    # greatest(n, 1): on an EMPTY embeddings table the shares divide by
+    # the guarded 1 instead of diverging (Spark div -> NULL, DuckDB //
+    # -> error) — both engines emit all-zero shares for empty lists.
+    tot = sizes.agg(F.greatest(F.sum("n_vecs").cast("long"),
+                               F.lit(1).cast("long")).alias("n"))
+    return (sizes.crossJoin(F.broadcast(tot))
+            .select(F.col("cent_id").cast("long").alias("cent_id"),
+                    "n_vecs",
+                    F.expr("cast(n_vecs * 1000000 div n as bigint)")
+                    .alias("share_ppm"),
+                    F.expr(f"cast(n_vecs * {IVF_NLIST} * 1000 div n"
+                           " as bigint)").alias("load_x1000"),
+                    F.expr(f"n_vecs * {IVF_NLIST} * 1000 div n"
+                           f" >= {IVB_OVERLOAD_X1000}").alias("overloaded"))
+            .orderBy("cent_id"))
+
+
+def _render_ivf_balance_oracle() -> None:
+    REGISTRY["sim_ivf_list_balance"].oracle = _ivf_balance_oracle()
+
+
+_render_ivf_balance_oracle()
 
 
 # ------------------------------- IVF list rebalance (the act step)
 
 # Split policy: every list the balance operator's 2x verdict flags
-# (IVB_OVERLOAD_X1000 in llm_ext13) is split, and at least the
+# (IVB_OVERLOAD_X1000) is split, and at least the
 # IVR_MIN_SPLITS heaviest eligible lists split every maintenance round
 # (amortized mode — on a balanced corpus the heaviest lists still get
 # halved, so probe-cost variance keeps shrinking). Eligible = >= 2
@@ -221,7 +190,6 @@ def _ivf_base_ctes_sql(mat: bool = False) -> str:
     rebalance text. The default stays un-hinted because the round-13
     certified rebalance/merge oracle texts are md5-pinned byte-for-byte
     (tests/test_llm_ext15.py)."""
-    from .llm import IVF_NLIST
     k = IVF_NLIST
     m = " MATERIALIZED" if mat else ""
     return f"""
@@ -404,8 +372,6 @@ def _ivf_split_act_ctes_sql(out: str = "") -> str:
 
 
 def _ivf_rebalance_oracle() -> str:
-    from .llm import IVF_NLIST
-    from .llm_ext13 import IVB_OVERLOAD_X1000
     k = IVF_NLIST
     return _ivf_base_ctes_sql() + f""",
     ovl AS (SELECT CAST(count(*) AS BIGINT) AS n_over
@@ -480,7 +446,6 @@ def _ivf_base_frames(spark: SparkSession, sf_dir: str):
     corpus-with-norms, broadcastable trained-centroid table, pinned
     ppm-ranked assignment, per-list sizes, guarded total, load factors.
     The Spark twin of _ivf_base_ctes_sql."""
-    from .llm import IVF_NLIST
     k = IVF_NLIST
     e = table(spark, sf_dir, "embeddings").select(
         "vec_id", sim.as_double(F.col("embedding")).alias("demb"))
@@ -696,8 +661,6 @@ def q_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     list-id-keyed against the assignment relation; receipts are 1-row
     aggregates crossJoined broadcast. Nothing here scans more than the
     corpus twice (parent assignment + post-split candidates)."""
-    from .llm import IVF_NLIST
-    from .llm_ext13 import IVB_OVERLOAD_X1000
     k = IVF_NLIST
 
     n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)
@@ -756,7 +719,6 @@ def q_ivf_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _render_ivf_rebalance_oracle() -> None:
-    from ..registry import REGISTRY
     REGISTRY["sim_ivf_rebalance"].oracle = _ivf_rebalance_oracle()
 
 
@@ -813,7 +775,6 @@ def _ivf_merge_act_ctes_sql(out: str = "") -> str:
 
 
 def _ivf_merge_oracle() -> str:
-    from .llm import IVF_NLIST
     k = IVF_NLIST
     return _ivf_base_ctes_sql() + f""",
     und AS (SELECT CAST(count(*) AS BIGINT) AS n_under
@@ -909,7 +870,6 @@ def q_ivf_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     already licensed); receipts and recall reuse the audited rebalance
     panels (broadcast queries, list-id-keyed candidate joins, 1-row
     broadcast crossJoins)."""
-    from .llm import IVF_NLIST
     k = IVF_NLIST
 
     n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)
@@ -961,196 +921,489 @@ def q_ivf_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _render_ivf_merge_oracle() -> None:
-    from ..registry import REGISTRY
     REGISTRY["sim_ivf_merge"].oracle = _ivf_merge_oracle()
 
 
 _render_ivf_merge_oracle()
 
 
-# --------------------------- incremental near-dup dedup (batch vs corpus)
-
-# The incremental form of the MinHash+LSH pipeline — how near-dup dedup
-# actually runs in a LIVING pipeline (the near-dup analog of
-# dedup_incremental_batch's exact form): an incoming batch (doc_id above
-# the deterministic 80% cut, the established incremental-fixture
-# convention) probes the EXISTING corpus's band index, and only then
-# dedups within itself. Semantics, set-based and engine-exact:
-#   1. a batch doc whose verified Jaccard vs ANY corpus doc clears
-#      NEAR_DUP_JACCARD is dup_corpus (canon = min matching corpus id);
-#   2. the remaining batch docs form near-dup components among
-#      THEMSELVES (the certified dedup_components rule, restricted to
-#      the survivor graph); a non-minimum member is dup_batch
-#      (canon = component min);
-#   3. everything else keeps (canon = itself).
-# At 100 TB the corpus band index is a persisted table the batch join
-# probes — the corpus is never re-paired against itself (the whole point
-# of the incremental shape); re-deriving the index in-query here keeps
-# the operator self-contained while the PLAN still contains no
-# corpus-x-corpus candidate join (plan-audited).
+# ------------------------------- IVF incremental insert (the add act)
 
 
-def _inc_near_dup_oracle() -> str:
-    from .llm import NEAR_DUP_JACCARD
-    from ..operators.dedup import (LSH_BANDS, LSH_ROWS, jaccard_sql,
-                                   minhash_signature_sql,
-                                   shingle_ids_tok_sql,
-                                   token_hashes_32_duck_sql)
-    return f"""
-    WITH RECURSIVE
-    cut AS (SELECT CAST(floor(max(doc_id) * 0.8) AS BIGINT) AS c
-            FROM documents),
-    t AS (SELECT doc_id,
-                 regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-          FROM documents),
-    h AS (SELECT doc_id, {token_hashes_32_duck_sql('toks')} AS hs FROM t),
-    s AS (SELECT doc_id, {shingle_ids_tok_sql('hs')} AS sids FROM h),
-    sig AS (SELECT doc_id, sids,
-                   {minhash_signature_sql('sids')} AS sig FROM s),
-    bands AS MATERIALIZED (
-        SELECT doc_id, band_idx,
-               array_to_string(list_slice(sig, band_idx * {LSH_ROWS} + 1,
-                                          (band_idx + 1) * {LSH_ROWS}),
-                               '_') AS bucket
-        FROM sig CROSS JOIN
-             (SELECT unnest(range(0, {LSH_BANDS})) AS band_idx) u),
-    cbc AS (SELECT DISTINCT b.doc_id AS bid, a.doc_id AS cid
-            FROM bands a JOIN bands b
-              ON a.band_idx = b.band_idx AND a.bucket = b.bucket
-            CROSS JOIN cut
-            WHERE a.doc_id <= cut.c AND b.doc_id > cut.c),
-    dupc AS MATERIALIZED (
-        SELECT bid, min(cid) AS canon
-        FROM cbc JOIN s sa ON sa.doc_id = cid JOIN s sb ON sb.doc_id = bid
-        WHERE {jaccard_sql('sa.sids', 'sb.sids')} >= {NEAR_DUP_JACCARD}
-        GROUP BY bid),
-    cbb AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-            FROM bands a JOIN bands b
-              ON a.band_idx = b.band_idx AND a.bucket = b.bucket
-                 AND a.doc_id < b.doc_id
-            CROSS JOIN cut
-            WHERE a.doc_id > cut.c
-              AND a.doc_id NOT IN (SELECT bid FROM dupc)
-              AND b.doc_id NOT IN (SELECT bid FROM dupc)),
-    pairs AS (SELECT doc_a, doc_b
-              FROM cbb JOIN s sa ON sa.doc_id = doc_a
-                       JOIN s sb ON sb.doc_id = doc_b
-              WHERE {jaccard_sql('sa.sids', 'sb.sids')}
-                    >= {NEAR_DUP_JACCARD}),
-    nodes AS (SELECT DISTINCT doc_id FROM (
-        SELECT doc_a AS doc_id FROM pairs
-        UNION SELECT doc_b AS doc_id FROM pairs)),
-    edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-              UNION SELECT doc_b AS a, doc_a AS b FROM pairs),
-    reach(src, dst) AS (
-        SELECT doc_id, doc_id FROM nodes
-        UNION
-        SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-    comp AS (SELECT src AS doc_id, min(dst) AS comp
-             FROM reach GROUP BY src)
-    SELECT d.doc_id,
-           CASE WHEN dupc.canon IS NOT NULL THEN 'dup_corpus'
-                WHEN comp.comp IS NOT NULL AND comp.comp != d.doc_id
-                     THEN 'dup_batch'
-                ELSE 'keep' END AS verdict,
-           CAST(coalesce(dupc.canon, comp.comp, d.doc_id) AS BIGINT)
-               AS canon_id
-    FROM documents d CROSS JOIN cut
-    LEFT JOIN dupc ON dupc.bid = d.doc_id
-    LEFT JOIN comp ON comp.doc_id = d.doc_id
-    WHERE d.doc_id > cut.c
-    ORDER BY d.doc_id
+def _ivf_insert_oracle() -> str:
+    k = IVF_NLIST
+    # Slot note: the shared recall builder hardwires (cent, asg) as its
+    # first probe target and (newc, nasg) as its second. The base
+    # builder's asg assigns EVERY vector to its nearest centroid — for
+    # an insert that IS the post-insert index — so the corpus-only
+    # restriction goes in the (newc, nasg) slot and the receipt maps
+    # h1/c1 -> post, h2/c2 -> pre (documented once, asserted by the
+    # planted-batch test's pre<=post staleness check).
+    # mat=True + local MATERIALIZED hints (identical rows, see
+    # _ivf_base_ctes_sql): the receipt layer reads pld/ld several
+    # times, and un-hinted CTE references re-run their upstream chain
+    # per reference in DuckDB — training included.
+    return _ivf_base_ctes_sql(mat=True) + f""",
+    cut AS (SELECT coalesce(CAST(floor(max(vec_id) * 0.8) AS BIGINT),
+                            -1) AS c FROM e),
+    pasg AS MATERIALIZED (
+        SELECT a.vec_id, a.demb, a.nrm, a.cent_id
+        FROM asg a CROSS JOIN cut WHERE a.vec_id <= cut.c),
+    psz AS (SELECT c.cent_id, CAST(count(a.vec_id) AS BIGINT) AS n_vecs
+            FROM cent c LEFT JOIN pasg a ON a.cent_id = c.cent_id
+            GROUP BY c.cent_id),
+    ptot AS (SELECT greatest(CAST(sum(n_vecs) AS BIGINT), 1) AS nn
+             FROM psz),
+    pld AS MATERIALIZED (SELECT cent_id, n_vecs,
+                   n_vecs * {k} * 1000 // ptot.nn AS load_x1000
+            FROM psz CROSS JOIN ptot),
+    ovb AS (SELECT CAST(count(*) AS BIGINT) AS n_overloaded_before
+            FROM pld WHERE load_x1000 >= {IVB_OVERLOAD_X1000}
+                       AND n_vecs >= 2),
+    ova AS (SELECT CAST(count(*) AS BIGINT) AS n_overloaded_after
+            FROM ld WHERE load_x1000 >= {IVB_OVERLOAD_X1000}
+                      AND n_vecs >= 2),
+    ncp AS (SELECT CAST(count(*) AS BIGINT) AS n_corpus FROM pasg),
+    nbt AS (SELECT CAST(count(*) AS BIGINT) AS n_batch
+            FROM asg a CROSS JOIN cut WHERE a.vec_id > cut.c),
+    newc AS (SELECT CAST(cent_id AS BIGINT) AS nl_id,
+                    c_demb AS s_demb, c_nrm AS s_nrm FROM cent),
+    nasg AS MATERIALIZED (
+        SELECT CAST(cent_id AS BIGINT) AS nl_id, vec_id, demb, nrm
+        FROM pasg),
+    {_ivf_recall_ctes_sql()}
+    SELECT CAST({k} AS BIGINT) AS n_lists, ncp.n_corpus, nbt.n_batch,
+           (SELECT CAST(max(n_vecs) AS BIGINT) FROM pld)
+               AS max_list_before,
+           (SELECT CAST(max(n_vecs) AS BIGINT) FROM ld)
+               AS max_list_after,
+           (SELECT CAST(max(load_x1000) AS BIGINT) FROM pld)
+               AS max_load_x1000_before,
+           (SELECT CAST(max(load_x1000) AS BIGINT) FROM ld)
+               AS max_load_x1000_after,
+           ovb.n_overloaded_before, ova.n_overloaded_after,
+           c2.n_cand AS pre_cand_rows,
+           c1.n_cand AS post_cand_rows,
+           h2.hits * {_PPM} // greatest({IVR_TOPK} * qs.nq, 1)
+               AS pre_recall_ppm,
+           h1.hits * {_PPM} // greatest({IVR_TOPK} * qs.nq, 1)
+               AS post_recall_ppm
+    FROM ovb CROSS JOIN ova CROSS JOIN ncp CROSS JOIN nbt
+         CROSS JOIN c1 CROSS JOIN c2 CROSS JOIN h1 CROSS JOIN h2
+         CROSS JOIN qs
     """
 
 
 @register(
-    "dedup_incremental_near_dup",
-    oracle=None,  # set below
-    tags=("llm", "dedup-minhash-lsh", "dedup-incremental"),
+    "sim_ivf_insert",
+    oracle=None,  # set below (renders the shared training CTEs)
+    tags=("llm", "ann-ivf", "maintenance", "action", "incremental"),
 )
-def q_inc_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental MinHash+LSH near-dup dedup of an incoming batch
-    against an existing corpus (module comment above): one row per
-    batch doc with the verdict (dup_corpus / dup_batch / keep) and its
-    canon — the minimum matching corpus id, the batch component
-    minimum, or itself.
+def q_ivf_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Insert an incoming vector batch into the existing IVF index —
+    nearest-centroid assignment, no retraining — and measure the drift
+    it caused (module comment above): one row with corpus/batch
+    counts, max list size and max load factor before/after, the
+    2x-overload count before/after (the rebalance trigger), and
+    recall@{IVR_TOPK} at nprobe={IVR_NPROBE} before/after against the
+    post-insert brute-force truth (pre-recall = index staleness).
 
-    Scale shape: the certified LSH pipeline end to end — shingle/sig
-    map-side, candidates from (band, bucket)-keyed equi-joins with the
-    batch side as the probe (NO corpus-x-corpus pair join anywhere in
-    the plan: the corpus band rows join only against batch band rows —
-    the incremental advantage, plan-audited), verify joins id-keyed on
-    the pinned shingle table, components only over the batch-survivor
-    pair graph (bounded by batch size, the audited min-label loop)."""
-    from .llm import NEAR_DUP_JACCARD
-    from ..operators.dedup import (connected_components, jaccard,
-                                   minhash_band_explode,
-                                   minhash_signature_col,
-                                   shingle_ids_tok_col,
-                                   token_hashes_32_col)
+    Scale shape: the assignment is the audited shared base (one corpus
+    scan against broadcast centroids, ppm-quantized rank, pinned); the
+    pre-insert index is its corpus-slice restriction — no second
+    assignment scan, no retraining, no driver reads beyond the
+    K-bounded centroid table already licensed. Probe panels broadcast;
+    candidate joins are list-id-keyed; receipts are 1-row broadcast
+    crossJoins. At scale only the batch slice is newly assigned (the
+    corpus assignment is a persisted table — see the module note)."""
+    k = IVF_NLIST
 
-    d = spread(table(spark, sf_dir, "documents"))
-    cut = d.agg(F.floor(F.max("doc_id") * 0.8).cast("long").alias("c"))
-    sh = pin(d.crossJoin(F.broadcast(cut))
-             .select("doc_id", "c",
-                     token_hashes_32_col(F.col("text")).alias("hs"))
-             .select("doc_id", "c",
-                     shingle_ids_tok_col(F.col("hs")).alias("sids")))
-    sig = sh.select("doc_id", "c", "sids",
-                    minhash_signature_col(F.col("sids")).alias("sig"))
-    bands = pin(minhash_band_explode(
-        sig.select("doc_id", "c", "sig"), "doc_id", "sig")
-        .join(sh.select("doc_id", "c").distinct(), ["doc_id"])
-        .select("doc_id", "c", "band", "bucket"))
-    corp_b = bands.filter(F.col("doc_id") <= F.col("c")) \
-                  .select(F.col("doc_id").alias("cid"), "band", "bucket")
-    bat_b = bands.filter(F.col("doc_id") > F.col("c")) \
-                 .select(F.col("doc_id").alias("bid"), "band", "bucket")
-    cbc = (bat_b.join(corp_b, ["band", "bucket"])
-           .select("bid", "cid").distinct())
-    sa = sh.select(F.col("doc_id").alias("cid"),
-                   F.col("sids").alias("sids_a"))
-    sb = sh.select(F.col("doc_id").alias("bid"),
-                   F.col("sids").alias("sids_b"))
-    dupc = pin(cbc.join(sa, "cid").join(sb, "bid")
-               .filter(jaccard(F.col("sids_a"), F.col("sids_b"))
-                       >= NEAR_DUP_JACCARD)
-               .groupBy("bid")
-               .agg(F.min("cid").alias("canon")))
-    bat_surv = bat_b.join(dupc.select("bid"), "bid", "left_anti")
-    a2 = bat_surv.select(F.col("bid").alias("doc_a"), "band", "bucket")
-    b2 = bat_surv.select(F.col("bid").alias("doc_b"), "band", "bucket")
-    cbb = (a2.join(b2, ["band", "bucket"])
-           .filter(F.col("doc_a") < F.col("doc_b"))
-           .select("doc_a", "doc_b").distinct())
-    pa = sh.select(F.col("doc_id").alias("doc_a"),
-                   F.col("sids").alias("sids_a"))
-    pb = sh.select(F.col("doc_id").alias("doc_b"),
-                   F.col("sids").alias("sids_b"))
-    pairs = (cbb.join(pa, "doc_a").join(pb, "doc_b")
-             .filter(jaccard(F.col("sids_a"), F.col("sids_b"))
-                     >= NEAR_DUP_JACCARD)
-             .select("doc_a", "doc_b"))
-    comp = connected_components(pairs).select(
-        F.col("doc_id").alias("bid"), "comp")
-    batch = sh.filter(F.col("doc_id") > F.col("c")).select("doc_id")
-    return (batch
-            .join(dupc.withColumnRenamed("bid", "doc_id"), "doc_id", "left")
-            .join(comp.withColumnRenamed("bid", "doc_id"), "doc_id", "left")
-            .select("doc_id",
-                    F.when(F.col("canon").isNotNull(), F.lit("dup_corpus"))
-                    .when(F.col("comp").isNotNull()
-                          & (F.col("comp") != F.col("doc_id")),
-                          F.lit("dup_batch"))
-                    .otherwise(F.lit("keep")).alias("verdict"),
-                    F.coalesce("canon", "comp", "doc_id").cast("long")
-                    .alias("canon_id"))
-            .orderBy("doc_id"))
-
-
-def _render_inc_near_dup_oracle() -> None:
-    from ..registry import REGISTRY
-    REGISTRY["dedup_incremental_near_dup"].oracle = _inc_near_dup_oracle()
+    n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)
+    cut = n.agg(F.coalesce(F.floor(F.max("vec_id") * 0.8).cast("long"),
+                           F.lit(-1).cast("long")).alias("c"))
+    pasg = pin(asg.crossJoin(F.broadcast(cut))
+               .filter(F.col("vec_id") <= F.col("c"))
+               .select("vec_id", "demb", "nrm", "cent_id"))
+    psz = pin(cent.select("cent_id")
+              .join(pasg, "cent_id", "left")
+              .groupBy("cent_id")
+              .agg(F.count("vec_id").cast("long").alias("n_vecs")))
+    ptot = psz.agg(F.greatest(F.sum("n_vecs").cast("long"),
+                              F.lit(1).cast("long")).alias("nn"))
+    pld = pin(psz.crossJoin(F.broadcast(ptot))
+              .select("cent_id", "n_vecs",
+                      F.expr(f"n_vecs * {k} * 1000 div nn")
+                      .alias("load_x1000")))
+    # Receipt fusion (r16, guide §2): sibling 1-row aggregates over the
+    # same pinned frame collapse into single multi-aggregate passes —
+    # overload count + max stats over pld (before) and over ld (after),
+    # and the corpus/batch counts as one conditional-count pass over
+    # the pinned assignment (pasg is exactly asg where vec_id <= c).
+    befp = pld.agg(
+        F.count(F.when((F.col("load_x1000") >= IVB_OVERLOAD_X1000)
+                       & (F.col("n_vecs") >= 2), F.lit(1)))
+        .cast("long").alias("n_overloaded_before"),
+        F.max("n_vecs").cast("long").alias("max_list_before"),
+        F.max("load_x1000").cast("long").alias("max_load_x1000_before"))
+    afta = ld.agg(
+        F.count(F.when((F.col("load_x1000") >= IVB_OVERLOAD_X1000)
+                       & (F.col("n_vecs") >= 2), F.lit(1)))
+        .cast("long").alias("n_overloaded_after"),
+        F.max("n_vecs").cast("long").alias("max_list_after"),
+        F.max("load_x1000").cast("long").alias("max_load_x1000_after"))
+    cnt = (asg.crossJoin(F.broadcast(cut))
+           .agg(F.count(F.when(F.col("vec_id") <= F.col("c"), F.lit(1)))
+                .cast("long").alias("n_corpus"),
+                F.count(F.when(F.col("vec_id") > F.col("c"), F.lit(1)))
+                .cast("long").alias("n_batch")))
+    newc = cent.select(F.col("cent_id").cast("long").alias("nl_id"),
+                       F.col("c_demb").alias("s_demb"),
+                       F.col("c_nrm").alias("s_nrm"))
+    nasg = pasg.select(F.col("cent_id").cast("long").alias("nl_id"),
+                       "vec_id", "demb", "nrm")
+    # Slot swap (see _ivf_insert_oracle): the builder's first slot gets
+    # the POST-insert index (the base assignment), the second the
+    # PRE-insert corpus slice — so hits1/hc1 are post, hits2/hc2 are pre.
+    qs, hc1, hc2 = _ivf_recall_frames(n, cent, asg, newc, nasg)
+    return (cnt.crossJoin(F.broadcast(befp))
+            .crossJoin(F.broadcast(afta))
+            .crossJoin(F.broadcast(hc1))
+            .crossJoin(F.broadcast(hc2))
+            .crossJoin(F.broadcast(qs))
+            .select(F.lit(k).cast("long").alias("n_lists"),
+                    "n_corpus", "n_batch",
+                    "max_list_before", "max_list_after",
+                    "max_load_x1000_before", "max_load_x1000_after",
+                    "n_overloaded_before", "n_overloaded_after",
+                    F.col("post_cand_rows").alias("pre_cand_rows"),
+                    F.col("pre_cand_rows").alias("post_cand_rows"),
+                    F.expr(f"hits2 * {_PPM} div greatest({IVR_TOPK} * nq,"
+                           " 1)").alias("pre_recall_ppm"),
+                    F.expr(f"hits1 * {_PPM} div greatest({IVR_TOPK} * nq,"
+                           " 1)").alias("post_recall_ppm")))
 
 
-_render_inc_near_dup_oracle()
+def _render_ivf_insert_oracle() -> None:
+    REGISTRY["sim_ivf_insert"].oracle = _ivf_insert_oracle()
+
+
+_render_ivf_insert_oracle()
+
+
+# --------------------- fused ANN lifecycle (build -> decide -> query)
+
+
+def _ivf_lifecycle_oracle() -> str:
+    k = IVF_NLIST
+    split_chain = _ivf_split_act_ctes_sql(out="s")
+    merge_chain = _ivf_merge_act_ctes_sql(out="m")
+    # mat=True + MATERIALIZED detect/decision CTEs (identical rows, see
+    # _ivf_base_ctes_sql): this oracle re-reads ``(SELECT act FROM
+    # dec)`` ~a dozen times as branch guards, and without the hints
+    # each read re-derived dec -> ovl/und -> ld -> the whole training
+    # chain — measured 207 s at sf0.001, vs seconds with the hints.
+    return _ivf_base_ctes_sql(mat=True) + f""",
+    ovl AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n_over
+            FROM ld WHERE load_x1000 >= {IVB_OVERLOAD_X1000}
+                      AND n_vecs >= 2),
+    und AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS n_under
+            FROM ld WHERE load_x1000 <= {IVM_UNDER_X1000}),
+    dec AS MATERIALIZED (SELECT CASE WHEN ovl.n_over >= 1 THEN 'split'
+                        WHEN und.n_under >= 1 THEN 'merge'
+                        ELSE 'hold' END AS act
+            FROM ovl CROSS JOIN und),
+    spl AS MATERIALIZED (SELECT cent_id FROM (
+                SELECT cent_id,
+                       row_number() OVER (ORDER BY n_vecs DESC, cent_id)
+                           AS r
+                FROM ld WHERE n_vecs >= 2) CROSS JOIN ovl
+            WHERE r <= greatest({IVR_MIN_SPLITS}, ovl.n_over)
+              AND (SELECT act FROM dec) = 'split'),
+    mrg AS MATERIALIZED (SELECT cent_id FROM (
+                SELECT cent_id,
+                       row_number() OVER (ORDER BY n_vecs ASC, cent_id)
+                           AS r
+                FROM ld) CROSS JOIN und
+            WHERE r <= least(greatest({IVM_MIN_MERGES}, und.n_under),
+                             {k // 2})
+              AND (SELECT act FROM dec) = 'merge')""" \
+        + split_chain + merge_chain + f""",
+    newc AS MATERIALIZED (
+        SELECT nl_id, s_demb, s_nrm FROM snewc
+        WHERE (SELECT act FROM dec) = 'split'
+        UNION ALL
+        SELECT nl_id, s_demb, s_nrm FROM mnewc
+        WHERE (SELECT act FROM dec) = 'merge'
+        UNION ALL
+        SELECT CAST(cent_id AS BIGINT) AS nl_id, c_demb AS s_demb,
+               c_nrm AS s_nrm
+        FROM cent WHERE (SELECT act FROM dec) = 'hold'),
+    nasg AS MATERIALIZED (
+        SELECT nl_id, vec_id, demb, nrm FROM snasg
+        WHERE (SELECT act FROM dec) = 'split'
+        UNION ALL
+        SELECT nl_id, vec_id, demb, nrm FROM mnasg
+        WHERE (SELECT act FROM dec) = 'merge'
+        UNION ALL
+        SELECT CAST(cent_id AS BIGINT) AS nl_id, vec_id, demb, nrm
+        FROM asg WHERE (SELECT act FROM dec) = 'hold'),
+    nact AS (SELECT CASE WHEN (SELECT act FROM dec) = 'split'
+                         THEN (SELECT CAST(count(*) AS BIGINT) FROM spl)
+                         WHEN (SELECT act FROM dec) = 'merge'
+                         THEN (SELECT CAST(count(*) AS BIGINT) FROM mrg)
+                         ELSE CAST(0 AS BIGINT) END AS n_acted),
+    sz2 AS (SELECT nc.nl_id, CAST(count(na.vec_id) AS BIGINT) AS n_vecs
+            FROM newc nc LEFT JOIN nasg na ON na.nl_id = nc.nl_id
+            GROUP BY nc.nl_id),
+    nl AS (SELECT CAST(count(*) AS BIGINT) AS n_lists FROM newc),
+    ld2 AS MATERIALIZED (SELECT nl_id, n_vecs,
+                   n_vecs * nl.n_lists * 1000 // tot.nn AS load_x1000
+            FROM sz2 CROSS JOIN nl CROSS JOIN tot),
+    {_ivf_recall_ctes_sql()}
+    SELECT (SELECT act FROM dec) AS act,
+           ovl.n_over AS n_overloaded, und.n_under AS n_underloaded,
+           nact.n_acted,
+           CAST({k} AS BIGINT) AS n_lists_before,
+           nl.n_lists AS n_lists_after,
+           (SELECT CAST(max(load_x1000) AS BIGINT) FROM ld)
+               AS max_load_x1000_before,
+           (SELECT CAST(max(load_x1000) AS BIGINT) FROM ld2)
+               AS max_load_x1000_after,
+           (SELECT CAST(min(load_x1000) AS BIGINT) FROM ld)
+               AS min_load_x1000_before,
+           (SELECT CAST(min(load_x1000) AS BIGINT) FROM ld2)
+               AS min_load_x1000_after,
+           c1.n_cand AS pre_cand_rows,
+           c2.n_cand AS post_cand_rows,
+           h1.hits * {_PPM} // greatest({IVR_TOPK} * qs.nq, 1)
+               AS pre_recall_ppm,
+           h2.hits * {_PPM} // greatest({IVR_TOPK} * qs.nq, 1)
+               AS post_recall_ppm
+    FROM ovl CROSS JOIN und CROSS JOIN nact CROSS JOIN nl
+         CROSS JOIN c1 CROSS JOIN c2 CROSS JOIN h1 CROSS JOIN h2
+         CROSS JOIN qs
+    """
+
+
+@register(
+    "sim_ivf_lifecycle",
+    oracle=None,  # set below (renders the shared training CTEs)
+    tags=("llm", "ann-ivf", "maintenance", "end-to-end"),
+)
+def q_ivf_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The fused ANN lifecycle receipt (module comment above): build
+    the IVF index, read the balance verdict, DECIDE
+    split / merge / hold, apply the chosen standalone act's exact
+    construction, and probe the query panel on both sides. One row:
+    the decision, the detect numbers it came from, list counts,
+    max/min load factors before/after, and recall@{IVR_TOPK} at
+    nprobe={IVR_NPROBE} with candidate-row costs on each side.
+
+    Scale shape: ONE corpus assignment scan (the pinned shared base)
+    feeds detect, the chosen act, and both recall panels —
+    plan-audited to a single embeddings scan plus the act's documented
+    touch of the acted lists' members. The decision itself is a 1-row
+    aggregate read on the driver (the established K-bounded license —
+    the driver picks which branch's PLAN to build, never sees corpus
+    rows); the oracle replays the same decision as a scalar CASE over
+    the identical integer load counts, with the non-chosen branches'
+    CTEs guarded empty. Spark builds only the chosen branch."""
+    from pyspark.sql import Window
+    k = IVF_NLIST
+
+    n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)
+    # Receipt fusion (r16, guide §2): the detect counts and the
+    # before-side load extrema are sibling aggregates over the same
+    # pinned ld frame — one multi-aggregate pass, and the 1-row
+    # decision read below becomes a single-stage job (no 1-row join).
+    det = ld.agg(
+        F.count(F.when((F.col("load_x1000") >= IVB_OVERLOAD_X1000)
+                       & (F.col("n_vecs") >= 2), F.lit(1)))
+        .cast("long").alias("n_over"),
+        F.count(F.when(F.col("load_x1000") <= IVM_UNDER_X1000, F.lit(1)))
+        .cast("long").alias("n_under"),
+        F.max("load_x1000").cast("long").alias("max_load_x1000_before"),
+        F.min("load_x1000").cast("long").alias("min_load_x1000_before"))
+    # 1-row decision read (K-bounded license, see docstring): the
+    # branch changes the PLAN shape, so it must resolve at build time.
+    verdict = det.collect()[0]
+    act = ("split" if verdict.n_over >= 1
+           else "merge" if verdict.n_under >= 1 else "hold")
+    if act == "split":
+        wspl = Window.partitionBy(F.lit(0)).orderBy(
+            F.col("n_vecs").desc(), "cent_id")
+        spl = pin(ld.filter(F.col("n_vecs") >= 2)
+                  .withColumn("r", F.row_number().over(wspl))
+                  .crossJoin(F.broadcast(det.select("n_over")))
+                  .filter(F.col("r")
+                          <= F.greatest(
+                              F.lit(IVR_MIN_SPLITS).cast("long"),
+                              F.col("n_over")))
+                  .select("cent_id"))
+        newc, nasg = _ivf_split_frames(spark, cent, asg, spl)
+        nact = spl.agg(F.count("*").cast("long").alias("n_acted"))
+    elif act == "merge":
+        wmrg = Window.partitionBy(F.lit(0)).orderBy(
+            F.col("n_vecs").asc(), "cent_id")
+        mrg = pin(ld.withColumn("r", F.row_number().over(wmrg))
+                  .crossJoin(F.broadcast(det.select("n_under")))
+                  .filter(F.col("r")
+                          <= F.least(
+                              F.greatest(
+                                  F.lit(IVM_MIN_MERGES).cast("long"),
+                                  F.col("n_under")),
+                              F.lit(k // 2).cast("long")))
+                  .select("cent_id"))
+        newc, nasg = _ivf_merge_frames(cent, asg, mrg)
+        nact = mrg.agg(F.count("*").cast("long").alias("n_acted"))
+    else:
+        newc = cent.select(F.col("cent_id").cast("long").alias("nl_id"),
+                           F.col("c_demb").alias("s_demb"),
+                           F.col("c_nrm").alias("s_nrm"))
+        nasg = asg.select(F.col("cent_id").cast("long").alias("nl_id"),
+                          "vec_id", "demb", "nrm")
+        nact = spark.range(1).select(
+            F.lit(0).cast("long").alias("n_acted"))
+    sz2 = pin(newc.select("nl_id")
+              .join(nasg, "nl_id", "left")
+              .groupBy("nl_id")
+              .agg(F.count("vec_id").cast("long").alias("n_vecs")))
+    nldf = newc.agg(F.count("*").cast("long").alias("n_lists"))
+    ld2 = (sz2.crossJoin(F.broadcast(nldf)).crossJoin(F.broadcast(tot))
+           .select("nl_id", "n_vecs",
+                   F.expr("n_vecs * n_lists * 1000 div nn")
+                   .alias("load_x1000")))
+    qs, hc1, hc2 = _ivf_recall_frames(n, cent, asg, newc, nasg)
+    mx2 = ld2.agg(F.max("load_x1000").cast("long")
+                  .alias("max_load_x1000_after"),
+                  F.min("load_x1000").cast("long")
+                  .alias("min_load_x1000_after"))
+    return (det.crossJoin(F.broadcast(nact))
+            .crossJoin(F.broadcast(nldf))
+            .crossJoin(F.broadcast(mx2))
+            .crossJoin(F.broadcast(hc1))
+            .crossJoin(F.broadcast(hc2))
+            .crossJoin(F.broadcast(qs))
+            .select(F.lit(act).alias("act"),
+                    F.col("n_over").alias("n_overloaded"),
+                    F.col("n_under").alias("n_underloaded"),
+                    "n_acted",
+                    F.lit(k).cast("long").alias("n_lists_before"),
+                    F.col("n_lists").alias("n_lists_after"),
+                    "max_load_x1000_before", "max_load_x1000_after",
+                    "min_load_x1000_before", "min_load_x1000_after",
+                    "pre_cand_rows", "post_cand_rows",
+                    F.expr(f"hits1 * {_PPM} div greatest({IVR_TOPK} * nq,"
+                           " 1)").alias("pre_recall_ppm"),
+                    F.expr(f"hits2 * {_PPM} div greatest({IVR_TOPK} * nq,"
+                           " 1)").alias("post_recall_ppm")))
+
+
+def _render_ivf_lifecycle_oracle() -> None:
+    REGISTRY["sim_ivf_lifecycle"].oracle = _ivf_lifecycle_oracle()
+
+
+_render_ivf_lifecycle_oracle()
+
+
+# ----------------- embedding-distribution drift over IVF lists (PSI)
+
+
+def _ivf_drift_psi_oracle() -> str:
+    return _ivf_base_ctes_sql() + """,
+    cut AS (SELECT coalesce(CAST(floor(max(vec_id) * 0.8) AS BIGINT),
+                            -1) AS c FROM e),
+    cb AS (SELECT CAST(c.cent_id AS BIGINT) AS cent_id,
+                  CAST(count(a.vec_id) FILTER (WHERE a.vec_id <= cut.c)
+                       AS BIGINT) AS n_corpus,
+                  CAST(count(a.vec_id) FILTER (WHERE a.vec_id > cut.c)
+                       AS BIGINT) AS n_batch
+           FROM cent c CROSS JOIN cut
+           LEFT JOIN asg a ON a.cent_id = c.cent_id
+           GROUP BY c.cent_id, cut.c),
+    t AS (SELECT cent_id, n_corpus, n_batch,
+                 CAST(sum(n_corpus) OVER () AS BIGINT) AS tot_c,
+                 CAST(sum(n_batch) OVER () AS BIGINT) AS tot_b,
+                 CAST(count(*) OVER () AS BIGINT) AS nb
+          FROM cb),
+    p AS (SELECT cent_id, n_corpus, n_batch,
+                 CAST(floor(((n_corpus + 1) / CAST(tot_c + nb AS DOUBLE)
+                             - (n_batch + 1) / CAST(tot_b + nb AS DOUBLE))
+                            * ln((n_corpus + 1)
+                                 / CAST(tot_c + nb AS DOUBLE)
+                                 / ((n_batch + 1)
+                                    / CAST(tot_b + nb AS DOUBLE)))
+                            * 1e6 + 0.5) AS BIGINT) AS psi_contrib_ppm
+          FROM t)
+    SELECT cent_id, n_corpus, n_batch, psi_contrib_ppm,
+           CAST(sum(psi_contrib_ppm) OVER () AS BIGINT) AS psi_total_ppm
+    FROM p ORDER BY cent_id
+    """
+
+
+@register(
+    "sim_ivf_drift_psi",
+    oracle=None,  # set below (renders the shared training CTEs)
+    tags=("llm", "ann-ivf", "drift-psi", "diagnostic"),
+)
+def q_ivf_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding-DISTRIBUTION drift between the corpus and an incoming
+    batch, measured as PSI over the IVF inverted lists: the lists are
+    a trained, bounded partition of embedding space, so the corpus and
+    batch list-share histograms are directly comparable — drift here
+    means the batch occupies a different region of embedding space
+    than the index was built for, which degrades recall long before
+    any single list overloads. sim_ivf_insert's receipt flags LOAD
+    drift (a hot list); this receipt flags SHAPE drift (a shifted
+    distribution), the complementary signal, with the conventional
+    PSI > 0.1 alarm. One row per list (empty lists included) with
+    corpus/batch counts, the quantized PSI contribution, and the
+    corpus-wide total.
+
+    Determinism and scale follow corpus_psi_drift's certified
+    discipline exactly: Laplace-smoothed shares ((n+1)/(tot+k)), the
+    ln() contribution quantized to an int64 ppm grid per LIST (k
+    chances for libm skew, not one per vector), the total an exact
+    order-free integer sum; the audited shared assignment is the only
+    corpus scan (pinned — the counts, windows and receipt all read
+    the bucket table of <= nlist rows)."""
+    n, cent, asg, sz, tot, ld = _ivf_base_frames(spark, sf_dir)
+    cut = n.agg(F.coalesce(F.floor(F.max("vec_id") * 0.8).cast("long"),
+                           F.lit(-1).cast("long")).alias("c"))
+    cb = (cent.select("cent_id").crossJoin(F.broadcast(cut))
+          .join(asg, "cent_id", "left")
+          .groupBy("cent_id")
+          .agg(F.count(F.when(F.col("vec_id") <= F.col("c"),
+                              F.col("vec_id"))).cast("long")
+               .alias("n_corpus"),
+               F.count(F.when(F.col("vec_id") > F.col("c"),
+                              F.col("vec_id"))).cast("long")
+               .alias("n_batch"))
+          .select(F.col("cent_id").cast("long").alias("cent_id"),
+                  "n_corpus", "n_batch"))
+    w = Window.partitionBy()
+    t = cb.select(
+        "cent_id", "n_corpus", "n_batch",
+        F.sum("n_corpus").over(w).cast("long").alias("tot_c"),
+        F.sum("n_batch").over(w).cast("long").alias("tot_b"),
+        F.count(F.lit(1)).over(w).cast("long").alias("nb"))
+    p_c = (F.col("n_corpus") + 1) / (F.col("tot_c")
+                                     + F.col("nb")).cast("double")
+    p_b = (F.col("n_batch") + 1) / (F.col("tot_b")
+                                    + F.col("nb")).cast("double")
+    contrib = F.floor((p_c - p_b) * F.log(p_c / p_b) * F.lit(1e6)
+                      + F.lit(0.5)).cast("long")
+    p = t.select("cent_id", "n_corpus", "n_batch",
+                 contrib.alias("psi_contrib_ppm"))
+    return (p.select("cent_id", "n_corpus", "n_batch",
+                     "psi_contrib_ppm",
+                     F.sum("psi_contrib_ppm").over(w).cast("long")
+                     .alias("psi_total_ppm"))
+            .orderBy("cent_id"))
+
+
+def _render_ivf_drift_psi_oracle() -> None:
+    REGISTRY["sim_ivf_drift_psi"].oracle = _ivf_drift_psi_oracle()
+
+
+_render_ivf_drift_psi_oracle()

@@ -21,7 +21,8 @@ from pyspark.sql import functions as F
 from ..functions.classify import sentiment_udf, topics_udf
 from ..functions.sentiment import confidence_gate
 from ..functions.text import non_empty_text
-from ..registry import register, spread, table
+from ..partitioning import spread
+from ..registry import register, table
 from .enrich import CLASSIFIER_CTE, _S, _T
 
 

@@ -6,19 +6,14 @@ ops, which the driver checks rows-only). Keys map 1:1 onto SURVEY.md §2's
 operator inventory; every computed column is aliased identically on both
 sides so the driver's sorted-column value-hash comparison is meaningful.
 
-Query definitions live in the ``queries`` subpackage (imported at the
-bottom of this module), grouped by domain:
-
-- ``queries.enrich``     — the reference pipeline (SURVEY.md §2A)
-- ``queries.relational`` — joins/aggs/windows/set-ops (§2B)
-- ``queries.events``     — time windows, as-of joins, rate ticks (§2B + M3)
-- ``queries.llm``        — dedup / similarity / text analysis (north star)
+Query definitions live in the ``queries`` subpackage, one module per
+domain (``DOMAINS``), imported in that order by ``_populate()``.
 """
 
 from __future__ import annotations
 
-import functools
-import os
+import importlib
+import itertools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -99,207 +94,42 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-# Scan estimates are memoized per file set: file sizes are stable for a
-# session (testdata is immutable), so an estimate never needs recomputing
-# — and the first computation is pure os.stat, no Spark planning at all.
-# The memos are LRU-bounded, so a long-lived session scanning many
-# distinct file sets holds at most this many entries in each.
-SCAN_CACHE_ENTRIES = 128
+# The 14 queries the benchmark times (bench.py, perfbench/batch_headline).
+HEADLINE = (
+    "enrich_flagship", "agg_pricing_summary", "join_revenue_by_region",
+    "window_topk_orders_per_segment", "events_tumbling_hourly",
+    "dedup_minhash_lsh", "dedup_minhash_lsh_fast", "sim_cosine_topk",
+    "sim_ann_ivf", "events_funnel", "dedup_components", "text_token_stats",
+    "quality_filter_pipeline", "media_frame_sample",
+)
+
+# Query modules in import order. A module may import only from modules
+# before it.
+DOMAINS = (
+    "enrich", "relational", "advanced", "events", "metrics", "text",
+    "graph", "ivf", "similarity", "dedup", "curation", "media", "sketches",
+)
+
+# The driver checks the first SAMPLE_SIZE registry entries.
+SAMPLE_SIZE = 50
 
 
-@functools.lru_cache(maxsize=SCAN_CACHE_ENTRIES)
-def _file_sizes(files: tuple[str, ...]) -> tuple[int, ...]:
-    """On-disk sizes of a scan's files. Raises ValueError for a non-local
-    URI and OSError for a missing file; lru_cache never caches a raise."""
-    from urllib.parse import urlparse
-
-    sizes = []
-    for f in files:
-        u = urlparse(f)
-        if u.scheme not in ("", "file"):
-            raise ValueError(f"not a local file: {f}")
-        sizes.append(os.path.getsize(u.path))
-    return tuple(sizes)
+def domain(entry: QueryEntry) -> str:
+    """The queries module that registered the entry."""
+    return entry.fn.__wrapped__.__module__.rsplit(".", 1)[-1]
 
 
-def _scan_file_sizes(df: DataFrame) -> tuple[int, ...] | None:
-    """Memoized sizes of the files behind a file scan; None for non-file
-    or non-local sources. ``inputFiles()`` is analysis-only (~2 ms warm)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    try:
-        return _file_sizes(tuple(sorted(files)))
-    except (ValueError, OSError):
-        return None
-
-
-_BYTE_SUFFIX = {"b": 1, "k": 1 << 10, "kb": 1 << 10, "m": 1 << 20,
-                "mb": 1 << 20, "g": 1 << 30, "gb": 1 << 30,
-                "t": 1 << 40, "tb": 1 << 40}
-
-
-def _conf_bytes(spark: SparkSession, key: str, default: int) -> int:
-    """Parse a Spark byte-string conf ('134217728b', '128m', '1g', bare
-    number = bytes) — NOT digits-only stripping, which would read '128m'
-    as 128 bytes and invert the spread() gate."""
-    try:
-        raw = str(spark.conf.get(key, str(default))).strip().lower()
-    except Exception:
-        return default
-    num = raw.rstrip("abcdefghijklmnopqrstuvwxyz")
-    suffix = raw[len(num):]
-    try:
-        return int(float(num)) * _BYTE_SUFFIX.get(suffix, 1)
-    except ValueError:
-        return default
-
-
-_WIDE_PLAN_MARKERS = ("Repartition", "Join", "Aggregate", "Sort",
-                      "Window", "Deduplicate", "CoalescedPartition",
-                      "Coalesce")
-
-
-def _is_scan_narrow_plan(df: DataFrame) -> bool:
-    """True when df is a file scan plus narrow transforms only — the shape
-    every spread() call site passes — so the scan's split count IS the
-    DataFrame's partition count and the file-size estimate applies. Any
-    partitioning-changing operator (repartition/coalesce/join/agg/...)
-    falls back to asking the planner. Reads the LOGICAL plan string (a
-    cheap py4j toString; no analysis, no physical planning)."""
-    try:
-        s = df._jdf.queryExecution().logical().toString()
-    except Exception:
-        return False
-    return not any(m in s for m in _WIDE_PLAN_MARKERS)
-
-
-def _estimated_scan_partitions(spark: SparkSession, df: DataFrame) -> int | None:
-    """How many partitions the file scan will yield, estimated from file
-    sizes with Spark's own FilePartition packing formula (maxSplitBytes =
-    min(maxPartitionBytes, max(openCostInBytes, padded_total /
-    defaultParallelism)); partitions ~ ceil(padded_total / maxSplitBytes)).
-    Returns None for non-file or non-local sources. Cheap by construction:
-    the sizes come from memoized os.stat — unlike ``df.rdd``, which forces
-    a full physical planning round-trip (measured 0.16-1.3 s per call on
-    the wide dedup plans; with ~30 spread sites that was a ~20% tax on the
-    whole bench)."""
-    sizes = _scan_file_sizes(df)
-    if sizes is None:
-        return None
-    max_pb = _conf_bytes(spark, "spark.sql.files.maxPartitionBytes",
-                         128 * 1024 * 1024)
-    open_cost = _conf_bytes(spark, "spark.sql.files.openCostInBytes",
-                            4 * 1024 * 1024)
-    # The estimate depends on the split confs and parallelism, so they are
-    # part of the memo key — a recreated session with different settings
-    # must not inherit another session's count.
-    return _packed_partitions(sizes, max_pb, open_cost,
-                              spark.sparkContext.defaultParallelism)
-
-
-@functools.lru_cache(maxsize=SCAN_CACHE_ENTRIES)
-def _packed_partitions(sizes: tuple[int, ...], max_pb: int, open_cost: int,
-                       par: int) -> int:
-    bytes_per_core = (sum(sizes) + len(sizes) * open_cost) // max(par, 1)
-    max_split = min(max_pb, max(open_cost, bytes_per_core))
-    # Replay FilePartition.getFilePartitions: chunk each file into
-    # max_split splits, sort descending, greedy-pack with open_cost
-    # charged per chunk.
-    chunks: list[int] = []
-    for s in sizes:
-        n_full, rem = divmod(s, max_split)
-        chunks.extend([max_split] * int(n_full))
-        if rem or not s:
-            chunks.append(int(rem))
-    chunks.sort(reverse=True)
-    est, cur = 1, 0
-    for c in chunks:
-        if cur and cur + c > max_split:
-            est += 1
-            cur = 0
-        cur += c + open_cost
-    return est
-
-
-# Input-bytes floor for Python-boundary stages (opt-in per call site,
-# see spread()): fanning a tiny scan out to every core makes each Arrow
-# batch so small that Python-worker dispatch dominates — the r15 scaling
-# probe measured enrich_flagship/media_frame_sample FASTER at 8 cores
-# than 32 (0.67x / 0.63x) on ~150-row partitions. Partitions never drop
-# below this many INPUT bytes, so the fan-out caps at data_size/floor
-# locally; at real scale scan splits are >= maxPartitionBytes and the
-# spread gate is a no-op anyway, so the floor never binds.
-PY_MIN_SPLIT_BYTES = int(os.environ.get(
-    "SPARK_GRAFT_PY_MIN_SPLIT_BYTES", str(64 * 1024)))
-
-
-def _estimated_scan_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes behind a file scan (memoized os.stat, same
-    cheap discipline as _estimated_scan_partitions); None for non-file
-    or non-local sources."""
-    sizes = _scan_file_sizes(df)
-    return None if sizes is None else sum(sizes)
-
-
-def spread(df: DataFrame, n: int | None = None,
-           min_bytes_per_partition: int | None = None) -> DataFrame:
-    """Round-robin repartition to the session's default parallelism —
-    ONLY when the input is under-partitioned.
-
-    The driver's small test tables are single-row-group parquet files, so a
-    scan yields ONE input partition and every CPU-heavy per-row stage
-    (shingling, signatures, classifier UDFs) runs on one core; here the
-    shuffle is what lets local[32] actually use 32 cores. At real scale the
-    scan already produces hundreds of splits, and `repartition(n)` would
-    shuffle every row — including full document text — for nothing. So the
-    repartition is gated: if the plan already yields >= the target number of
-    partitions (or the session conf ``spark.nats_spark.spread.enabled`` is
-    ``false``), the input is returned untouched, plan identity preserved.
-    The partition count comes from a memoized file-size estimate
-    (_estimated_scan_partitions); only non-file inputs fall back to asking
-    the planner via ``df.rdd``. Apply before CPU-bound per-row work or
-    before a PARTIAL aggregate (the round-robin exchange feeds the
-    map-side partial agg, which keeps its own hash exchange for the final
-    agg — q_pricing_summary's shape); never immediately before joins or
-    final aggs that manage their own partitioning.
-
-    ``min_bytes_per_partition`` (opt-in, for Python-boundary stages —
-    see PY_MIN_SPLIT_BYTES): cap the fan-out so no partition carries
-    fewer input bytes than the floor. Pass it where the downstream work
-    is an Arrow/pandas stage whose per-partition dispatch overhead beats
-    the parallelism gain on tiny batches; leave unset for JVM-side
-    CPU-bound work (shingling, hashing), where full fan-out wins even on
-    small inputs.
-    """
-    import math
-
-    spark = df.sparkSession
-    try:
-        enabled = spark.conf.get("spark.nats_spark.spread.enabled", "true")
-    except Exception:
-        enabled = "true"
-    if str(enabled).lower() == "false":
-        return df
-    target = n or spark.sparkContext.defaultParallelism
-    if min_bytes_per_partition:
-        nbytes = (_estimated_scan_bytes(df)
-                  if _is_scan_narrow_plan(df) else None)
-        if nbytes is not None:
-            target = max(1, min(target,
-                                math.ceil(nbytes / min_bytes_per_partition)))
-    current = (_estimated_scan_partitions(spark, df)
-               if _is_scan_narrow_plan(df) else None)
-    if current is None:
-        # Non-file source or partitioning-changing plan: ask the planner
-        # (physical planning, no job).
-        current = df.rdd.getNumPartitions()
-    if current >= target:
-        return df
-    return df.repartition(target)
+def sample_prefix(entries: dict[str, QueryEntry]) -> list[str]:
+    """The names that lead the registry: HEADLINE, then the domains take
+    turns in DOMAINS order, each giving its next query in definition
+    order, until SAMPLE_SIZE names are chosen."""
+    queues: dict[str, list[str]] = {d: [] for d in DOMAINS}
+    for name, entry in entries.items():
+        if name not in HEADLINE:
+            queues[domain(entry)].append(name)
+    turns = itertools.chain.from_iterable(itertools.zip_longest(*queues.values()))
+    rest = [n for n in turns if n is not None]
+    return list(HEADLINE) + rest[:SAMPLE_SIZE - len(HEADLINE)]
 
 
 def queries() -> dict[str, QueryFn]:
@@ -310,229 +140,34 @@ def oracle_sql() -> dict[str, str]:
     return {name: e.oracle for name, e in REGISTRY.items() if e.oracle is not None}
 
 
-
-# Round-14 sampled-prefix rotation. The round driver snapshots the FIRST
-# 50 entries, so the prefix is curated each round to cover what most needs
-# a formal correctness row. The r14 window holds exactly the composition
-# the r13 verdict pre-allocated:
-#  1. the operators NEW in round 14 (llm_ext15: sim_ivf_insert — the
-#     IVF incremental-insert act with the drift receipt — and
-#     sim_ivf_lifecycle, the fused build->detect->decide->act->query
-#     end-to-end receipt);
-#  2. every operator whose code changed in round 14 (house rule:
-#     changed code re-certifies even when output-identical): the
-#     split/merge act chains were factored into
-#     _ivf_split_act_ctes_sql/_ivf_merge_act_ctes_sql and
-#     _ivf_split_frames/_ivf_merge_frames so the lifecycle operator
-#     can reuse them (rendered oracles pinned BYTE-identical by
-#     tests/test_llm_ext15.py's md5 test, but the Spark paths of
-#     sim_ivf_rebalance / sim_ivf_merge changed) -> both re-certify;
-#  3. all 37 remaining r8-era rows alphabetically — after this round
-#     the r8 era is EMPTY;
-#  4. the alphabetically-first 9 of the 48 r9-era rows — the start of
-#     the r9 drain (the remaining 39 lead the r15 fill queue).
-# Everything else — formally green in r9-r13 and unchanged — rotates
-# behind.
-#
-# R15 PRE-ALLOCATION (fill next round's window in this order):
-#  1. the late-r14 llm_ext16 operators (sim_eval_rank_quality,
-#     dedup_lsh_band_efficiency, sim_ivf_drift_psi — behind-window
-#     headers stand until their first formal rows lead the r15
-#     window), then any operator written or changed in round 15
-#     (house rule);
-#  2. the remaining 39 r9-era rows alphabetically
-#     (curation_curriculum_schedule .. train_quality_logreg — every
-#     r9-latest row after corpus_token_gini);
-#  3. any remaining slots: the oldest r10-era rows alphabetically.
-# Operators WRITTEN in round 14 (the overflow-fill safety net below
-# keeps them sampled even if the explicit list ever under-allocates —
-# new code earns its formal row in the round it is written).
-_R14_NEW = ("sim_ivf_insert", "sim_ivf_lifecycle")
-
-SAMPLE_PREFIX_EXPECTED = [
-    # 1. new in round 14 (formal rows in the round they are written)
-    "sim_ivf_insert", "sim_ivf_lifecycle",
-    # 2. code changed in round 14 (house rule re-certs): the IVF act
-    #    chains were factored for the lifecycle operator — registered
-    #    oracles md5-identical (pinned), the Spark paths changed
-    "sim_ivf_rebalance", "sim_ivf_merge",
-    # 3. all 37 remaining r8-era rows — this CLEARS the r8 era
-    "curation_shard_balance", "decontaminate_fuzzy_minhash",
-    "dedup_chunk_level", "dedup_cluster_size_histogram",
-    "dedup_incremental_batch", "dedup_normalized_exact",
-    "dedup_rate_by_source", "dedup_soft_weights",
-    "dedup_winnowing_overlap", "embed_gram_matrix",
-    "embed_quantize_int8", "enrich_flagship", "events_dau_wau",
-    "events_funnel", "events_hourly_zscore",
-    "events_markov_transitions", "events_outliers_mad",
-    "events_tumbling_hourly", "grouped_agg_weighted_avg",
-    "grouped_map_zscore", "join_revenue_by_region",
-    "media_phash_near_dup", "sample_importance_by_quality",
-    "scalar_subquery_above_avg", "sentiment_classify",
-    "sim_ann_range_search", "sim_crossmodal_recall", "sim_rrf_fusion",
-    "text_flesch_readability", "text_length_histogram",
-    "text_unigram_lm_score", "tokenizer_bpe_top_merges",
-    "tokenizer_wordpiece_apply", "topic_classify", "udtf_tokenize",
-    "window_range_frame", "window_topk_orders_per_segment",
-    # 4. the alphabetically-first 9 of the 48 r9-era rows — the start
-    #    of the r9 drain (the remaining 39 lead the r15 fill queue)
-    "agg_approx_distinct", "agg_collect_sorted", "agg_filtered_counts",
-    "agg_percentile_approx_check", "agg_revenue_q6",
-    "asof_join_next_order", "compact_latest_per_key",
-    "corpus_psi_drift", "corpus_token_gini",
-]
-
-
-# Registry population. The query-module import chain lives in _populate()
-# and is invoked from the PACKAGE __init__ — never from this module's
-# bottom. That guarantee matters on Python WORKERS: a worker unpickling a
-# module-level UDF helper imports that query module FIRST, and Python runs
-# the package __init__ (hence this chain, in full, in order) BEFORE the
-# requested module — so no module in the chain can ever observe a
-# partially-initialized sibling. (The previous bottom-of-this-module chain
-# could: entering at llm_ext4 replayed the chain while llm_ext4 sat at its
-# registry-import line, and llm_ext5's oracle builder then imported names
-# that did not exist yet — broke text_mtld_diversity and
-# events_kleinberg_burst workers in r7. Guarded by tests/test_oracle_parity
-# ::test_every_query_module_survives_worker_entry_import.)
+# Population runs from the PACKAGE __init__, never from this module's
+# bottom: a Python worker unpickling a module-level UDF helper imports
+# that query module first, and Python runs the package __init__ (hence
+# the whole import chain, in order) before the requested module, so no
+# query module can observe a partially-initialized sibling. Guarded by
+# tests/test_oracle_parity.py::test_every_query_module_survives_worker_entry_import.
 _POPULATED = False
-
-# Names per late-round module, for the sample-prefix tests (set by
-# _populate).
-_ext3_names: list[str] = []
-_ext4_names: list[str] = []
-_ext5_names: list[str] = []
-_ext6_names: list[str] = []
-_ext9_names: list[str] = []
-_ext10_names: list[str] = []
-_ext11_names: list[str] = []
-_ext12_names: list[str] = []
-_ext13_names: list[str] = []
-_ext14_names: list[str] = []
-_ext15_names: list[str] = []
-_ext16_names: list[str] = []
 
 
 def _populate() -> None:
-    """Import every query module (registration side effects) and curate
-    the sampled prefix. Idempotent; called from the package __init__.
-
-    ORDER MATTERS for external snapshots: harnesses that sample a prefix
-    of the registry see entries in registration order.
-    """
-    global _POPULATED, _ext3_names, _ext4_names, _ext5_names, _ext9_names, \
-        _ext10_names, _ext11_names, _ext12_names
+    """Import every query module (registration side effects), then move
+    sample_prefix() to the front. Idempotent; called from the package
+    __init__."""
+    global _POPULATED
     if _POPULATED:
         return
     # Set the guard up front (re-entrant imports of the chain must
-    # no-op), but RESET it if any module import raises — otherwise a
-    # failed population would leave every later call silently no-oping
-    # on a partial registry instead of retrying or failing loudly.
+    # no-op), but reset it if an import raises, so a failed population
+    # fails loudly on the next call instead of leaving a partial registry.
     _POPULATED = True
     try:
-        _populate_chain()
+        for d in DOMAINS:
+            importlib.import_module(f"{__package__}.queries.{d}")
     except BaseException:
         _POPULATED = False
         raise
-
-
-def _populate_chain() -> None:
-    global _ext3_names, _ext4_names, _ext5_names, _ext6_names, \
-        _ext9_names, _ext10_names, _ext11_names, _ext12_names, \
-        _ext13_names, _ext14_names, _ext15_names, _ext16_names
-
-    from .queries import llm  # noqa: F401
-    from .queries import advanced  # noqa: F401
-    from .queries import enrich  # noqa: F401
-    from .queries import events  # noqa: F401
-    from .queries import metrics  # noqa: F401
-    from .queries import relational  # noqa: F401
-    from .queries import llm_ext  # noqa: F401
-    from .queries import llm_ext2  # noqa: F401
-
-    pre = set(REGISTRY)
-    from .queries import llm_ext3  # noqa: F401
-    _ext3_names = [n for n in REGISTRY if n not in pre]
-
-    pre = set(REGISTRY)
-    from .queries import llm_ext4  # noqa: F401
-    _ext4_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-7 additions: leading the r8 sample window (the r7
-    # window was already fully allocated when these landed).
-    pre = set(REGISTRY)
-    from .queries import llm_ext5  # noqa: F401
-    _ext5_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-8 additions: inside the r8 sample window.
-    pre = set(REGISTRY)
-    from .queries import llm_ext6  # noqa: F401
-    _ext6_names = [n for n in REGISTRY if n not in pre]
-
-    # llm_ext7: graph_nn_descent landed late in round 8 (behind that
-    # round's fully-allocated window; leads the r9 window for its first
-    # formal row), graph_greedy_search (round 9, in-window), and the
-    # late round-9 graph_beam_sweep / graph_knn_insert (behind the r9
-    # window — honest headers in the module — leading r10 with
-    # llm_ext8's late operators).
-    pre = set(REGISTRY)
-    from .queries import llm_ext7  # noqa: F401
-
-    # Round-9 additions: inside the r9 sample window.
-    from .queries import llm_ext8  # noqa: F401
-    _ext9_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-10 additions (certify in the round they are written).
-    pre = set(REGISTRY)
-    from .queries import llm_ext9  # noqa: F401
-    _ext10_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-11 additions (certify in the round they are written).
-    pre = set(REGISTRY)
-    from .queries import llm_ext10  # noqa: F401
-    from .queries import llm_ext11  # noqa: F401
-    _ext11_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-11 additions: landed AFTER the r11 window was fully
-    # allocated; their first formal rows LEAD the r12 window (honest
-    # behind-window headers stood in llm_ext12 through round 11).
-    pre = set(REGISTRY)
-    from .queries import llm_ext12  # noqa: F401
-    _ext12_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-12 additions: landed AFTER the r12 window was fully
-    # allocated — honest behind-window headers stood in llm_ext13
-    # through round 12; their first formal rows lead the r13 window.
-    pre = set(REGISTRY)
-    from .queries import llm_ext13  # noqa: F401
-    _ext13_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-13 additions (certify in the round they are written).
-    pre = set(REGISTRY)
-    from .queries import llm_ext14  # noqa: F401
-    _ext14_names = [n for n in REGISTRY if n not in pre]
-
-    # Round-14 additions (certify in the round they are written).
-    pre = set(REGISTRY)
-    from .queries import llm_ext15  # noqa: F401
-    _ext15_names = [n for n in REGISTRY if n not in pre]
-
-    # Late round-14 additions: landed AFTER the r14 window was fully
-    # allocated — honest behind-window headers in llm_ext16; their
-    # first formal rows lead the r15 window (pre-allocation above).
-    pre = set(REGISTRY)
-    from .queries import llm_ext16  # noqa: F401
-    _ext16_names = [n for n in REGISTRY if n not in pre]
-
-    # Reorder so the curated prefix leads. Every curated name must exist
-    # on a clean import (asserted by test_sample_prefix_has_no_name_drift);
-    # the soft filter below is only a guard against future partial-import
-    # schemes, and the current-round overflow fill keeps new operators
-    # sampled if the explicit list ever under-allocates.
-    prefix = [n for n in SAMPLE_PREFIX_EXPECTED if n in REGISTRY]
-    prefix += [n for n in _R14_NEW
-               if n in REGISTRY and n not in prefix][:50 - len(prefix)]
-    order = prefix + [n for n in REGISTRY if n not in set(prefix)]
-    reordered = {n: REGISTRY[n] for n in order}
+    prefix = sample_prefix(REGISTRY)
+    reordered = {n: REGISTRY[n] for n in prefix}
+    reordered.update(REGISTRY)
     REGISTRY.clear()
     REGISTRY.update(reordered)

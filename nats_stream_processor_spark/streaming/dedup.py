@@ -4,7 +4,7 @@ The streaming half of the incremental-dedup story, making dedup the
 FIFTH batch+stream-twinned axis (after cardinality: streaming/hll.py;
 quantiles: streaming/quantile.py; moments: the stateful power-sum
 aggregation; top-k: streaming/topk.py): ``dedup_incremental_batch``
-(queries/llm_ext.py) is the BATCH shape — dedup an incoming batch
+(queries/dedup.py) is the BATCH shape — dedup an incoming batch
 against a persisted digest store, keep one canonical copy per fresh
 digest. A streaming job maintains the digest store itself as MANAGED
 STATE: rows are sharded by a digest-prefix key (the state distributes —

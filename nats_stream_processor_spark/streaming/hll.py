@@ -1,7 +1,7 @@
 """Per-bucket HLL sketch state for streaming distinct counts.
 
 The streaming half of the mergeable-sketch story:
-``events_sliding_distinct_hll`` (queries/llm_ext9.py) is the BATCH
+``events_sliding_distinct_hll`` (queries/events.py) is the BATCH
 twin — one Datasketches HLL per base hour, sliding windows as unions
 over the hourly sketch binaries. A streaming job keeps the same hourly
 sketches as MANAGED STATE: each micro-batch folds its rows into the

@@ -1,7 +1,7 @@
 """Streaming IVF list-load monitor: inverted-list sizes as managed
 state — the streaming face of the round-14 insert act.
 
-``sim_ivf_insert`` (queries/llm_ext15.py) is the BATCH shape: one
+``sim_ivf_insert`` (queries/ivf.py) is the BATCH shape: one
 incoming batch assigned to the existing lists, one before/after drift
 receipt. A LIVING index takes batches continuously, and the number the
 maintainer watches between maintenance acts is the per-list load
@@ -118,7 +118,7 @@ def centroid_table(spark: SparkSession, corpus: DataFrame,
     exists before the stream starts — the production shape) and return
     the broadcastable (cent_id, c_demb, c_nrm) table."""
     from ..operators import kmeans as km
-    from ..queries.llm import IVF_NLIST
+    from ..queries.ivf import IVF_NLIST
     k = k or IVF_NLIST
     e = corpus.select("vec_id",
                       sim.as_double(F.col("embedding")).alias("demb"))

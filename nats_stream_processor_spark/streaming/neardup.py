@@ -2,7 +2,7 @@
 
 The near-dup sibling of streaming/dedup.py (exact digests), making
 near-dup the SIXTH batch+stream-twinned axis: the certified
-``dedup_incremental_near_dup`` (queries/llm_ext14.py) is the BATCH
+``dedup_incremental_near_dup`` (queries/dedup.py) is the BATCH
 shape — an incoming batch probes the existing corpus's band index,
 then dedups within itself. Here the band index itself is MANAGED
 STATE: a streaming job keeps, per (band, bucket-shard) group, the set
@@ -65,7 +65,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators.dedup import (LSH_BANDS, minhash_signature_col,
                                shingle_ids_tok_col, token_hashes_32_col)
-from ..queries.llm import NEAR_DUP_JACCARD
+from ..queries.dedup import NEAR_DUP_JACCARD
 
 ND_OUT_SCHEMA = "kind string, a long, b long"
 ND_STATE_SCHEMA = "entries binary"

@@ -160,7 +160,7 @@ def dedup_against_store(
 ) -> DataFrame:
     """Incremental content dedup of a document stream against a static
     digest store — the streaming face of the batch
-    ``dedup_incremental_batch`` query (queries/llm_ext.py): documents
+    ``dedup_incremental_batch`` query (queries/dedup.py): documents
     whose md5 content digest already exists in the store are dropped by a
     stream-static LEFT ANTI join, then within-stream duplicates are
     dropped with watermarked key state.

@@ -1,7 +1,7 @@
 """Per-hour value-histogram state for streaming quantiles.
 
 The streaming half of the mergeable-quantile story:
-``events_sliding_quantile_hist`` (queries/llm_ext10.py) is the BATCH
+``events_sliding_quantile_hist`` (queries/events.py) is the BATCH
 twin — one fixed-width value histogram per base hour, sliding-window
 p50/p95 as merges over the hourly bucket counts. A streaming job
 keeps the same hourly histograms as MANAGED STATE: each micro-batch
@@ -89,7 +89,7 @@ def hist_quantiles(hist: dict[int, int], sq_w: int) -> tuple[int, int, int]:
 def _hour_bucket_rows(df: DataFrame, ts_col: str, value_col: str,
                       sq_w: int) -> DataFrame:
     # Same hour bucketing and value bucketing as the batch twin
-    # (queries/llm_ext10.q_sliding_quantile_hist): `div` truncates
+    # (queries/events.q_sliding_quantile_hist): `div` truncates
     # toward zero on both engines; floor(value / SQ_W) is exact for
     # the power-of-two width. Bucketing stays JVM-side so the Python
     # kernel never touches a float.
@@ -101,7 +101,7 @@ def _hour_bucket_rows(df: DataFrame, ts_col: str, value_col: str,
 
 
 def _update_hour(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    from ..queries.llm_ext10 import SQ_W
+    from ..queries.events import SQ_W
     hist = hist_decode(bytes(state.get[0])) if state.exists else {}
     for pdf in pdfs:
         for bk, cnt in pdf["bk"].value_counts().items():
@@ -123,7 +123,7 @@ def hourly_value_hist(df: DataFrame, ts_col: str = "ts",
     per hour is the final histogram. State is partitioned by the hour
     key — horizontal scale is |hours| x |occupied buckets| pairs,
     never event volume — and survives restarts via the checkpoint."""
-    from ..queries.llm_ext10 import SQ_W
+    from ..queries.events import SQ_W
     return (_hour_bucket_rows(df, ts_col, value_col, SQ_W)
             .groupBy("h")
             .applyInPandasWithState(
@@ -136,7 +136,7 @@ def hourly_value_hist(df: DataFrame, ts_col: str = "ts",
 
 
 def _batch_hour(pdf: pd.DataFrame) -> pd.DataFrame:
-    from ..queries.llm_ext10 import SQ_W
+    from ..queries.events import SQ_W
     hist: dict[int, int] = {}
     for bk, cnt in pdf["bk"].value_counts().items():
         hist[int(bk)] = hist.get(int(bk), 0) + int(cnt)
@@ -153,7 +153,7 @@ def hourly_value_hist_batch(df: DataFrame, ts_col: str = "ts",
     """BATCH twin: the identical kernel over a static frame — the
     determinism oracle for the streaming path (and the shape a
     backfill job uses to seed the state store)."""
-    from ..queries.llm_ext10 import SQ_W
+    from ..queries.events import SQ_W
     return (_hour_bucket_rows(df, ts_col, value_col, SQ_W)
             .groupBy("h")
             .applyInPandas(_batch_hour, HIST_OUT_SCHEMA))

@@ -4,7 +4,7 @@ The streaming half of the mergeable TOP-K story, completing the
 batch+stream matrix for every mergeable sliding-window axis
 (cardinality: streaming/hll.py; quantiles: streaming/quantile.py;
 moments: the stateful power-sum aggregation; top-k: THIS):
-``events_sliding_topk`` (queries/llm_ext13.py) is the BATCH twin —
+``events_sliding_topk`` (queries/events.py) is the BATCH twin —
 per-hour top-C (user, count) summaries plus the hour's truncation
 bound, sliding windows merging summary rows under the frequent-items
 containment prune. A streaming job maintains the same per-hour
@@ -82,7 +82,7 @@ def _hour_user_rows(df: DataFrame, ts_col: str, id_col: str) -> DataFrame:
 
 
 def _update_hour(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    from ..queries.llm_ext13 import SLT_C
+    from ..queries.events import SLT_C
     counts = counts_decode(bytes(state.get[0])) if state.exists else {}
     for pdf in pdfs:
         for u, c in pdf["user_id"].value_counts().items():
@@ -112,7 +112,7 @@ def hourly_topk_summaries(df: DataFrame, ts_col: str = "ts",
 
 
 def _batch_hour(pdf: pd.DataFrame) -> pd.DataFrame:
-    from ..queries.llm_ext13 import SLT_C
+    from ..queries.events import SLT_C
     counts: dict[int, int] = {}
     for u, c in pdf["user_id"].value_counts().items():
         counts[int(u)] = counts.get(int(u), 0) + int(c)

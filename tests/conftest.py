@@ -3,6 +3,8 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import tempfile
+import time
 
 import pytest
 
@@ -33,9 +35,37 @@ SF_CORRECT = "/root/testdata/sf0.01"
 # session the serial tests use, which is exactly the oversubscription a
 # 32-core host absorbs.
 
-_PARITY_SHARDS: list[tuple[subprocess.Popen, list[str]]] = []
-_PARITY_N_WORKERS = int(os.environ.get("SPARK_GRAFT_PARITY_WORKERS")
-                        or max(1, min(8, (os.cpu_count() or 4) // 4)))
+# (worker, its shard, its stdout file, its stderr file)
+_PARITY_SHARDS: list[tuple[subprocess.Popen, list[str], object, object]] = []
+
+
+def _parity_worker_count() -> int:
+    """SPARK_GRAFT_PARITY_WORKERS if set, else one worker per 4 cores
+    (1-8). A value that is not a positive integer is a config error."""
+    raw = os.environ.get("SPARK_GRAFT_PARITY_WORKERS", "").strip()
+    if not raw:
+        return max(1, min(8, (os.cpu_count() or 4) // 4))
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n <= 0:
+        raise pytest.UsageError(
+            "SPARK_GRAFT_PARITY_WORKERS must be a positive integer, "
+            f"got {raw!r}")
+    return n
+
+
+def _spawn_worker(argv: list[str], cwd: str, niceness: int = 0):
+    """Start a worker with stdout and stderr going to temp files rather
+    than pipes: nobody reads a worker's output until the join, and a
+    worker that fills a pipe buffer (~64 KB of JVM log output) would
+    block mid-sweep."""
+    out = tempfile.TemporaryFile("w+")
+    err = tempfile.TemporaryFile("w+")
+    p = subprocess.Popen(argv, stdout=out, stderr=err, text=True, cwd=cwd,
+                         preexec_fn=lambda: os.nice(niceness))
+    return p, out, err
 
 
 def _launch_parity_workers() -> None:
@@ -44,18 +74,16 @@ def _launch_parity_workers() -> None:
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     worker = os.path.join(root, "tests", "_parity_worker.py")
     names = list(registry.REGISTRY)
-    for i in range(_PARITY_N_WORKERS):
-        shard = names[i::_PARITY_N_WORKERS]
-        p = subprocess.Popen(
-            [sys.executable, worker, SF_SMOKE, *shard],
-            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
-            text=True, cwd=root,
-            # The workers have huge slack (the sweep finishes in a
-            # fraction of the serial files' window) — deprioritize them
-            # so they back-fill idle cores instead of stealing cycles
-            # from the foreground tests they overlap.
-            preexec_fn=lambda: os.nice(10))
-        _PARITY_SHARDS.append((p, shard))
+    n_workers = _parity_worker_count()
+    for i in range(n_workers):
+        shard = names[i::n_workers]
+        # The workers have huge slack (the sweep finishes in a fraction
+        # of the serial files' window) — deprioritize them so they
+        # back-fill idle cores instead of stealing cycles from the
+        # foreground tests they overlap.
+        p, out, err = _spawn_worker([sys.executable, worker, SF_SMOKE, *shard],
+                                    root, niceness=10)
+        _PARITY_SHARDS.append((p, shard, out, err))
 
 
 def pytest_collection_modifyitems(session, config, items):
@@ -66,40 +94,37 @@ def pytest_collection_modifyitems(session, config, items):
 def pytest_sessionfinish(session, exitstatus):
     # -x / --maxfail can abort before the parity tests join the workers;
     # never leave orphaned JVMs behind.
-    for p, _ in _PARITY_SHARDS:
+    for p, _, _, _ in _PARITY_SHARDS:
         if p.poll() is None:
             p.kill()
-
-
-def parity_shards() -> list[tuple[subprocess.Popen, list[str]]]:
-    return _PARITY_SHARDS
 
 
 _PARITY_JOINED: dict[str, dict] | None = None
 _PARITY_TIMEOUT_S = 1800
 
 
-def parity_join() -> dict[str, dict]:
-    """Join the sharded sweep once and cache the per-query records
-    ({"problem": str | None, "sec": float, "cartesian": bool | None});
-    both the oracle-parity tests and the registry-wide plan audit read
-    this. A worker that died mid-shard yields a synthetic failure record
-    for each unreported query, carrying its stderr tail."""
+def _join_shards(shards, timeout_s: float) -> dict[str, dict]:
+    """Wait for every shard under ONE shared deadline and collect the
+    per-query records each worker printed. A worker that died or timed
+    out mid-shard yields a synthetic failure record for each unreported
+    query, carrying its stderr tail."""
     import json
 
-    global _PARITY_JOINED
-    if _PARITY_JOINED is not None:
-        return _PARITY_JOINED
-    if not _PARITY_SHARDS:  # direct single-file invocation fallback
-        _launch_parity_workers()
+    deadline = time.monotonic() + timeout_s
     results: dict[str, dict] = {}
-    for p, shard in _PARITY_SHARDS:
+    for p, shard, out_f, err_f in shards:
+        note = ""
         try:
-            out, err = p.communicate(timeout=_PARITY_TIMEOUT_S)
+            p.wait(timeout=max(0.0, deadline - time.monotonic()))
         except subprocess.TimeoutExpired:
             p.kill()
-            out, err = p.communicate()
-            err = (err or "") + "\n[parity worker timed out]"
+            p.wait()
+            note = "\n[parity worker timed out]"
+        out_f.seek(0)
+        err_f.seek(0)
+        out, err = out_f.read(), err_f.read() + note
+        out_f.close()
+        err_f.close()
         for line in out.splitlines():
             if not line.startswith("{"):
                 continue
@@ -113,10 +138,23 @@ def parity_join() -> dict[str, dict]:
                 results[name] = {
                     "problem": (
                         f"parity worker died before reaching this query "
-                        f"(rc={p.returncode}): ...{(err or '')[-400:]}"),
+                        f"(rc={p.returncode}): ...{err[-400:]}"),
                     "sec": None, "cartesian": None}
-    _PARITY_JOINED = results
     return results
+
+
+def parity_join() -> dict[str, dict]:
+    """Join the sharded sweep once and cache the per-query records
+    ({"problem": str | None, "sec": float, "cartesian": bool | None});
+    both the oracle-parity tests and the registry-wide plan audit read
+    this."""
+    global _PARITY_JOINED
+    if _PARITY_JOINED is not None:
+        return _PARITY_JOINED
+    if not _PARITY_SHARDS:  # direct single-file invocation fallback
+        _launch_parity_workers()
+    _PARITY_JOINED = _join_shards(_PARITY_SHARDS, _PARITY_TIMEOUT_S)
+    return _PARITY_JOINED
 
 
 @pytest.fixture(scope="session")

@@ -204,7 +204,7 @@ def test_asof_nearest_subsecond_precision(spark):
 
 
 def test_conf_bytes_parses_suffixed_sizes(spark):
-    from nats_stream_processor_spark.registry import _conf_bytes
+    from nats_stream_processor_spark.partitioning import _conf_bytes
 
     for raw, expected in (("134217728b", 134217728), ("128m", 128 << 20),
                           ("1g", 1 << 30), ("64k", 64 << 10),

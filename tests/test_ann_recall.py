@@ -20,6 +20,8 @@ Two corpora:
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +29,7 @@ from pyspark.sql import functions as F
 from nats_stream_processor_spark import registry
 from nats_stream_processor_spark.operators import kmeans as km
 from nats_stream_processor_spark.operators import similarity as sim
+from tests.conftest import SF_SMOKE
 
 SF = "/root/testdata/sf0.01"
 
@@ -186,7 +189,7 @@ def test_ivf_sizing_functions():
     the pinned registry constant for every tested corpus, and grows at
     real scale — so pinned oracles and auto-sized training agree at test
     sf while a 100 TB corpus still gets a sane quantizer."""
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
+    from nats_stream_processor_spark.queries.ivf import IVF_NLIST
     assert km.IVF_NLIST_FLOOR == IVF_NLIST
     for n in (0, 500, 5_000, 38_000):  # every tested sf lands on the floor
         assert km.ivf_nlist_for(n) == km.IVF_NLIST_FLOOR
@@ -314,11 +317,11 @@ def test_knn_insert_quality_on_clustered_corpus(spark, clustered_sf):
     oracle."""
     sf_dir, con = clustered_sf
     rows = _run_vs_oracle(spark, con, sf_dir, "graph_knn_insert")
-    from nats_stream_processor_spark.queries import llm_ext7 as x7
-    nb = N_VECS - x7.GI_M
-    recall = sum(r[2] for r in rows) / (x7.ND_K * len(rows))
+    from nats_stream_processor_spark.queries.graph import GI_M, ND_K
+    nb = N_VECS - GI_M
+    recall = sum(r[2] for r in rows) / (ND_K * len(rows))
     visited_frac = sum(r[1] for r in rows) / (len(rows) * nb)
-    assert len(rows) == x7.GI_M
+    assert len(rows) == GI_M
     assert recall >= 0.5, f"insert recall {recall:.2f}"
     assert all(r[1] < nb for r in rows)
     assert recall > visited_frac, (
@@ -335,8 +338,8 @@ def test_rebuild_decision_curve_on_clustered_corpus(spark, clustered_sf):
     sf_dir, con = clustered_sf
     rows = sorted(_run_vs_oracle(
         spark, con, sf_dir, "graph_rebuild_decision"))
-    from nats_stream_processor_spark.queries import llm_ext7 as x7
-    assert [r[0] for r in rows] == list(range(1, x7.GR_B + 1))
+    from nats_stream_processor_spark.queries.graph import GR_B
+    assert [r[0] for r in rows] == list(range(1, GR_B + 1))
     assert rows[0][5] == 0  # drop measured from batch 1
     for r in rows:
         recall = r[3] / 1e6
@@ -359,10 +362,65 @@ def test_rebuild_execute_regains_recall_on_clustered_corpus(
     seeded fixture, integer ppm arithmetic on both engines)."""
     sf_dir, con = clustered_sf
     rows = _run_vs_oracle(spark, con, sf_dir, "graph_rebuild_execute")
-    from nats_stream_processor_spark.queries import llm_ext7 as x7
+    from nats_stream_processor_spark.queries.graph import GR_B, GR_M, ND_K
     (r,) = rows
-    assert r[0] == x7.GR_B * x7.GR_M              # n_inserted
-    assert r[7] == N_VECS * x7.ND_K               # budget = |corpus| x K
+    assert r[0] == GR_B * GR_M              # n_inserted
+    assert r[7] == N_VECS * ND_K               # budget = |corpus| x K
     assert r[6] == r[7]                           # built == budget here
     assert r[4] >= 400000, f"post-rebuild recall {r[4]} ppm"
     assert r[5] > 0, f"rebuild regained {r[5]} ppm (must be positive)"
+
+
+def test_rrf_matches_python_fusion_of_ranker_outputs(spark):
+    """Recompute the fusion in Python from the two ranker outputs (BM25's
+    query is itself value-certified against its oracle; the dense pool is
+    re-derived exactly via the shared left-fold/ppm helpers in
+    test_llm_ext4) and compare the fused rows exactly."""
+    from nats_stream_processor_spark.queries.similarity import (
+        MMR_QNORM,
+        MMR_QUERY,
+        RRF_K,
+        RRF_POOL,
+        RRF_TOPK,
+    )
+    sf = SF_SMOKE
+    bm = {r.doc_id: r.rank for r in
+          registry.REGISTRY["text_bm25_topk"].fn(spark, sf).collect()}
+    registry.release_pins()
+    vecs = {r.vec_id: [float(x) for x in r.embedding]
+            for r in spark.read.parquet(f"{sf}/embeddings.parquet").collect()}
+
+    def dot(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    rel = {}
+    for v, e in vecs.items():
+        nrm = math.sqrt(dot(e, e))
+        rel[v] = math.floor(dot(MMR_QUERY, e)
+                            / (MMR_QNORM * nrm) * 1e6 + 0.5)
+    pool = sorted(rel, key=lambda v: (-rel[v], v))[:RRF_POOL]
+    dn = {v: i + 1 for i, v in enumerate(pool)}
+    scores = {}
+    for d in set(bm) | set(dn):
+        s = 0
+        if d in bm:
+            s += 1_000_000_000 // (RRF_K + bm[d])
+        if d in dn:
+            s += 1_000_000_000 // (RRF_K + dn[d])
+        scores[d] = s
+    expect = [(d, bm.get(d, 0), dn.get(d, 0), scores[d])
+              for d in sorted(scores, key=lambda d: (-scores[d], d))
+              [:RRF_TOPK]]
+    got = [(r.doc_id, r.rank_bm25, r.rank_dense, r.rrf_score)
+           for r in registry.REGISTRY["sim_rrf_fusion"].fn(spark, sf)
+           .collect()]
+    registry.release_pins()
+    assert got == expect
+    # docs in BOTH pools must outrank equal-rank single-pool docs
+    both = [g for g in got if g[1] > 0 and g[2] > 0]
+    assert got, "fusion returned nothing"
+    if both:
+        assert got[0][3] >= max(g[3] for g in got)

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 import nats_stream_processor_spark.queries  # noqa: F401  (populate registry)
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries.llm import (
-    EVAL_SET_MAX_ID,
+from nats_stream_processor_spark.queries.dedup import EVAL_SET_MAX_ID
+from nats_stream_processor_spark.queries.curation import (
     PACK_SEQ_LEN,
     PACK_SHARDS,
 )

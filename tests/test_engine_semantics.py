@@ -12,8 +12,8 @@ Pinned by these tests (the r10 ADVICE items): Spark's integer `div`
 and DuckDB's integer `//` BOTH truncate toward zero (measured:
 -7 div 2 == -7 // 2 == -3 on the shipped engine versions), and both
 engines' `%` takes the dividend's sign — so the `sum(x) div count(*)`
-mean idiom (llm_ext7) and the `unix_micros(ts) div 3600000000` hour
-bucketing (llm_ext9) agree between the engines for NEGATIVE operands
+mean idiom (queries/graph.py) and the `unix_micros(ts) div 3600000000` hour
+bucketing (queries/events.py) agree between the engines for NEGATIVE operands
 too, not just on the post-epoch / non-negative fixture regime.
 """
 
@@ -38,7 +38,7 @@ _CASES = [
 def test_integer_div_truncates_identically(spark, duck, num, den):
     """Spark `div` == DuckDB `//` on every sign regime (both truncate
     toward zero; neither floors). Guards the sum(...) div count(*)
-    mean-similarity idiom at llm_ext7.py (graph_nn_descent /
+    mean-similarity idiom in queries/graph.py (graph_nn_descent /
     graph_knn_insert / graph_rebuild_decision oracles use `//`)."""
     s = spark.sql(
         f"select cast({num} as bigint) div cast({den} as bigint) as q,"

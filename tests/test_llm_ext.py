@@ -1,4 +1,4 @@
-"""Invariants of the round-3 extension queries (queries/llm_ext.py) that
+"""Invariants of dedup, similarity, text and events queries that
 the oracle hash cannot express: JL cosine preservation, sketch-vs-exact
 tracking, normalization collapse on constructed variants, quartile
 partition/ordering, MAD outlier bounds."""
@@ -280,7 +280,7 @@ def test_chunking_covers_every_token_exactly(spark):
     0..k-1 with starts on the stride grid, every chunk is non-empty and
     at most CHUNK_LEN long, the last chunk ends exactly at n_tokens, and
     consecutive full chunks overlap by CHUNK_LEN - CHUNK_STRIDE."""
-    from nats_stream_processor_spark.queries.llm_ext import (
+    from nats_stream_processor_spark.queries.dedup import (
         CHUNK_LEN,
         CHUNK_STRIDE,
     )
@@ -308,7 +308,7 @@ def test_chunk_dedup_finds_shared_passage(spark, tmp_path):
     """Two documents sharing an identical CHUNK_LEN-token opening produce
     a duplicated full-length chunk; a third unrelated document does not
     appear in any duplicate group."""
-    from nats_stream_processor_spark.queries.llm_ext import CHUNK_LEN
+    from nats_stream_processor_spark.queries.dedup import CHUNK_LEN
 
     shared = " ".join(f"tok{i}" for i in range(CHUNK_LEN))
     docs = spark.createDataFrame(
@@ -336,7 +336,7 @@ def test_int8_quantization_reconstruction_bound(spark):
         for r in spark.read.parquet(f"{SF}/embeddings.parquet")
         .select("vec_id", "embedding").limit(50).collect()
     }
-    from nats_stream_processor_spark.queries.llm_ext import INT8_MAX
+    from nats_stream_processor_spark.queries.similarity import INT8_MAX
 
     assert set(emb) <= set(out)
     for vid, vec in emb.items():

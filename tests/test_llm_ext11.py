@@ -1,4 +1,4 @@
-"""Correctness of the round-11 second-wave operators (queries/llm_ext11.py):
+"""Correctness of the moments, IVM, SCD2, bootstrap, calibration and tagging operators:
 
 - events_moments_merge: plain-Python replication at sf0.001 (quantize ->
   exact integer power sums -> the same IEEE op sequence), a planted
@@ -177,7 +177,7 @@ def test_ivm_planted_watermark_boundary(spark, tmp_path):
     """An order AT the watermark instant belongs to the delta; one
     microsecond earlier belongs to the base (>= semantics, pinned)."""
     import datetime as dt
-    from nats_stream_processor_spark.queries.llm_ext11 import IVM_WATERMARK
+    from nats_stream_processor_spark.queries.relational import IVM_WATERMARK
     wm = dt.datetime.fromisoformat(IVM_WATERMARK)
     rows = [
         (1, 1, "O", 10.0, wm, "1-URGENT"),                    # delta
@@ -337,8 +337,10 @@ def test_scd2_planted_changelog(spark, tmp_path):
 def test_bootstrap_ci_matches_python_reference(spark):
     import duckdb
     import hashlib
-    from nats_stream_processor_spark.queries.llm_ext11 import (
-        BOOT_B, _POIS_CDF_MICRO)
+    from nats_stream_processor_spark.queries.text import (
+        BOOT_B,
+        _POIS_CDF_MICRO,
+    )
 
     def h32(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16)
@@ -438,24 +440,27 @@ def test_calibration_multibin_tail_and_bin9_clamp(spark):
     _cal_tail_sql (DuckDB), with every column replicated in plain
     Python."""
     import duckdb
-    from nats_stream_processor_spark.queries import llm_ext11 as x11
+    from nats_stream_processor_spark.queries.text import (
+        _cal_tail_sql,
+        calibration_from_scored,
+    )
 
     rows = [(1, 1000000), (1, 1000000), (0, 999999), (1, 950000),
             (0, 300000), (1, 349999), (0, 399999),
             (0, 0), (0, 49999), (1, 99999)]
     scored = spark.createDataFrame(rows, "y long, pi long")
     out = {r.bin: r for r in
-           x11.calibration_from_scored(scored).collect()}
+           calibration_from_scored(scored).collect()}
     assert set(out) == {0, 3, 9}
 
     con = duckdb.connect()
     con.sql("CREATE TABLE sc (y BIGINT, pi BIGINT)")
     con.executemany("INSERT INTO sc VALUES (?, ?)", rows)
     oracle_rows = con.sql(
-        "WITH scored AS (SELECT * FROM sc)" + x11._cal_tail_sql()
+        "WITH scored AS (SELECT * FROM sc)" + _cal_tail_sql()
     ).fetchall()
     spark_rows = sorted(tuple(r) for r in
-                        x11.calibration_from_scored(scored).collect())
+                        calibration_from_scored(scored).collect())
     assert spark_rows == sorted(oracle_rows)
 
     def _r6(x):
@@ -525,8 +530,7 @@ def test_calibration_bins_are_consistent(spark):
 def test_mutual_nn_pairs_are_reciprocal_best(spark):
     """Every emitted pair must be reciprocal top-1 in the kNN graph,
     and every reciprocal top-1 in the graph must be emitted."""
-    from nats_stream_processor_spark.queries.knn_shared import (
-        _knn_graph_df)
+    from nats_stream_processor_spark.queries.graph import _knn_graph_df
     g = _knn_graph_df(spark, SF_SMOKE).filter("rn = 1").collect()
     registry.release_pins()
     best = {r["src"]: r["dst"] for r in g}
@@ -574,7 +578,7 @@ def test_mutual_nn_pairs_planted_clusters_align(spark, tmp_path):
 def test_gazetteer_matches_python_reference(spark):
     import duckdb
     import re
-    from nats_stream_processor_spark.queries.llm_ext11 import GAZETTEER
+    from nats_stream_processor_spark.queries.text import GAZETTEER
     out = {r["term_id"]: r for r in registry.REGISTRY[
         "text_gazetteer_mentions"].fn(spark, SF_SMOKE).collect()}
     texts = [t for (t,) in duckdb.sql(

@@ -1,5 +1,5 @@
-"""Correctness of the late round-11 operators (queries/llm_ext12.py,
-behind the r11 window — honest headers in the module):
+"""Correctness of the sketch-intersection, join-estimate, AUC,
+hard-negative, dedup-aware split and point-in-time join operators:
 
 - sketch_hll_overlap_matrix: plain-Python replication of every exact
   column (cardinalities, union, overlap, Jaccard), lattice invariants
@@ -98,7 +98,7 @@ def test_hll_overlap_disjoint_pair_row(spark, tmp_path):
 
 def test_join_size_estimate_matches_reference(spark):
     import duckdb
-    from nats_stream_processor_spark.queries.llm_ext12 import JSE_JOINS
+    from nats_stream_processor_spark.queries.relational import JSE_JOINS
     out = {r["join_name"]: r for r in registry.REGISTRY[
         "join_size_estimate_report"].fn(spark, SF_SMOKE).collect()}
     assert set(out) == {name for name, *_ in JSE_JOINS}
@@ -135,7 +135,7 @@ def test_join_size_estimate_skew_underestimates(spark, tmp_path):
     skew-on-skew join, so err_ppm must be negative."""
     lrows = [(1,) for _ in range(10)] + [(k,) for k in range(2, 6)]
     rrows = [(1,) for _ in range(5)] + [(k,) for k in range(2, 6)]
-    from nats_stream_processor_spark.queries import llm_ext12 as x12
+    from nats_stream_processor_spark.queries import relational as q_relational
     spark.createDataFrame(lrows, "o_custkey long") \
         .selectExpr("o_custkey", "1 AS o_orderkey") \
         .write.mode("overwrite").parquet(str(tmp_path / "orders.parquet"))
@@ -143,13 +143,13 @@ def test_join_size_estimate_skew_underestimates(spark, tmp_path):
         .write.mode("overwrite").parquet(str(tmp_path / "customer.parquet"))
     # restrict to the orders_customer probe: the other profiled tables
     # don't exist in the fixture dir, so monkeypatch the probe list
-    orig = x12.JSE_JOINS
-    x12.JSE_JOINS = (orig[0],)
+    orig = q_relational.JSE_JOINS
+    q_relational.JSE_JOINS = (orig[0],)
     try:
         out = registry.REGISTRY["join_size_estimate_report"].fn(
             spark, str(tmp_path)).collect()
     finally:
-        x12.JSE_JOINS = orig
+        q_relational.JSE_JOINS = orig
     r = out[0]
     assert r["actual"] == 10 * 5 + 4
     assert r["est_uniform"] == (14 * 9) // 5
@@ -243,7 +243,7 @@ def test_hard_negatives_are_cross_label_topk_of_bucket_candidates(spark):
     different-label LSH-bucket candidates (verified against the raw
     bucket relation recomputed independently)."""
     from nats_stream_processor_spark.operators import similarity as sim
-    from nats_stream_processor_spark.queries.llm_ext12 import HN_K
+    from nats_stream_processor_spark.queries.similarity import HN_K
     import duckdb
 
     out = registry.REGISTRY["sim_hard_negatives"].fn(

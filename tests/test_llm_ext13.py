@@ -1,5 +1,5 @@
-"""Correctness of the late round-12 operators (queries/llm_ext13.py,
-behind the r12 window — honest headers in the module):
+"""Correctness of the IVF balance, gate agreement, incremental SCD2 and
+sliding top-k operators:
 
 - sim_ivf_list_balance: numpy replication of the whole report from the
   same trained centroids (assignment argmax with the operator's
@@ -39,7 +39,7 @@ def test_ivf_list_balance_matches_numpy_reference(spark):
     import duckdb
     from nats_stream_processor_spark.operators import kmeans as km
     from nats_stream_processor_spark.operators import similarity as sim
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
+    from nats_stream_processor_spark.queries.ivf import IVF_NLIST
     from pyspark.sql import functions as F
 
     out = {r.cent_id: r for r in registry.REGISTRY[
@@ -83,7 +83,7 @@ def test_ivf_list_balance_flags_planted_skew(spark, tmp_path):
     is k-means doing its job, and an earlier draft of this test
     proved it empirically."""
     import numpy as np
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
+    from nats_stream_processor_spark.queries.ivf import IVF_NLIST
 
     rng = np.random.RandomState(11)
     dim = 8
@@ -105,7 +105,7 @@ def test_ivf_list_balance_flags_planted_skew(spark, tmp_path):
 
 
 def test_gate_agreement_composes_parent_operators(spark):
-    from nats_stream_processor_spark.queries.llm_ext13 import GATE_PAIRS
+    from nats_stream_processor_spark.queries.curation import GATE_PAIRS
 
     out = {(r.gate_a, r.gate_b): r for r in registry.REGISTRY[
         "quality_gate_agreement"].fn(spark, SF_SMOKE).collect()}
@@ -300,8 +300,7 @@ def _py_sliding_topk(cells, sw, top):
 
 def test_sliding_topk_matches_python_reference(spark):
     import duckdb
-    from nats_stream_processor_spark.queries.llm_ext9 import SW_HOURS
-    from nats_stream_processor_spark.queries import llm_ext13 as x13
+    from nats_stream_processor_spark.queries.events import SLT_TOP, SW_HOURS
 
     sf = "/root/testdata/sf0.001"
     out = {(r.window_hour, r.rank): r for r in registry.REGISTRY[
@@ -310,7 +309,7 @@ def test_sliding_topk_matches_python_reference(spark):
         f"SELECT epoch_us(ts) // 3600000000 AS h, user_id, count(*) "
         f"FROM '{sf}/events.parquet' GROUP BY 1, 2").fetchall()
     cells = {(int(h), int(u)): int(c) for h, u, c in raw}
-    expect = _py_sliding_topk(cells, SW_HOURS, x13.SLT_TOP)
+    expect = _py_sliding_topk(cells, SW_HOURS, SLT_TOP)
     assert set(out) == set(expect)
     for k, r in out.items():
         assert (r.user_id, r.n_occ) == expect[k], k
@@ -329,9 +328,9 @@ def test_sliding_topk_truncation_and_fallback_regimes(spark, tmp_path,
     Exactness in both regimes is asserted against the plain-Python
     reference — the operator's output contract is 'exact top-T for any
     input and any summary width'."""
-    from nats_stream_processor_spark.queries import llm_ext13 as x13
-    from nats_stream_processor_spark.queries.llm_ext9 import SW_HOURS
-    monkeypatch.setattr(x13, "SLT_C", 4)
+    from nats_stream_processor_spark.queries import events as q_events
+    from nats_stream_processor_spark.queries.events import SLT_TOP, SW_HOURS
+    monkeypatch.setattr(q_events, "SLT_C", 4)
 
     base_us = 1_700_000_000_000_000
     hour = 3_600_000_000
@@ -361,7 +360,7 @@ def test_sliding_topk_truncation_and_fallback_regimes(spark, tmp_path,
         h = us // hour
         cells[(h, u)] = cells.get((h, u), 0) + 1
     expect = {k: v for k, v in _py_sliding_topk(
-        cells, SW_HOURS, x13.SLT_TOP).items()}
+        cells, SW_HOURS, SLT_TOP).items()}
     assert out == expect
 
     # flat: per hour, 12 users with ONE event each — ties everywhere,
@@ -377,5 +376,5 @@ def test_sliding_topk_truncation_and_fallback_regimes(spark, tmp_path,
     for us, u in flat:
         h = us // hour
         cells2[(h, u)] = cells2.get((h, u), 0) + 1
-    expect2 = _py_sliding_topk(cells2, SW_HOURS, x13.SLT_TOP)
+    expect2 = _py_sliding_topk(cells2, SW_HOURS, SLT_TOP)
     assert out2 == expect2

@@ -1,4 +1,4 @@
-"""Round-13 act-step operators (queries/llm_ext14.py):
+"""Act-step operators (queries/dedup.py, queries/ivf.py):
 
 - dedup_drop_plan_execute: receipt arithmetic cross-checked against the
   certified drop plan, the survivor theorem pinned to 0 on the real
@@ -20,8 +20,15 @@ import pytest
 
 from nats_stream_processor_spark import registry
 from nats_stream_processor_spark.operators import similarity as sim
-from nats_stream_processor_spark.queries import llm_ext10 as x10
-from nats_stream_processor_spark.queries import llm_ext14 as x14
+from nats_stream_processor_spark.queries.text import MR_K
+from nats_stream_processor_spark.queries.dedup import (
+    run_ctes_sql,
+    span_ctes_sql,
+)
+from nats_stream_processor_spark.queries.ivf import (
+    IVM_MIN_MERGES,
+    IVR_MIN_SPLITS,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -61,7 +68,7 @@ def test_drop_execute_planted_containment_chain(spark, tmp_path):
     doc: executing drops B and C (both contained in A), the survivor
     set is {A, unrelated}, tokens_removed is the dropped docs' token
     counts, and the recount is 0."""
-    k = x10.MR_K
+    k = MR_K
     base = [f"w{i:03d}" for i in range(3 * k)]
     a = " ".join(base)                       # doc 0: the container
     b = " ".join(base[k // 2: 2 * k])        # doc 1: contiguous in A
@@ -88,7 +95,7 @@ def test_drop_execute_cap_masked_corpus_still_zero(spark, tmp_path):
     dropping docs never reveals a cap-masked containment, because the
     hot span keeps its full carrier set among survivors."""
     from nats_stream_processor_spark.operators.dedup import SPAN_DF_CAP
-    k = x10.MR_K
+    k = MR_K
     boiler = " ".join(f"bw{j}" for j in range(k))
     texts = [boiler + " " + " ".join(f"u{i}x{j}" for j in range(8))
              for i in range(80)]
@@ -109,7 +116,7 @@ def test_drop_execute_oracle_parity_on_planted_corpus(spark, tmp_path):
     """The registered oracle replays the execute on the planted chain
     corpus value-for-value (the same side-by-side the driver runs, on
     a corpus where every receipt column is nonzero)."""
-    k = x10.MR_K
+    k = MR_K
     base = [f"w{i:03d}" for i in range(3 * k)]
     texts = [" ".join(base), " ".join(base[k // 2: 2 * k]),
              " ".join(f"n{i:03d}" for i in range(2 * k))]
@@ -133,7 +140,7 @@ def test_rebalance_receipts_structural_invariants(spark):
     pre-split index on the fixture panel."""
     (r,) = _run(spark, "sim_ivf_rebalance", SF)
     assert r.n_lists_after == r.n_lists_before + r.n_split
-    assert r.n_split >= x14.IVR_MIN_SPLITS
+    assert r.n_split >= IVR_MIN_SPLITS
     assert r.max_list_after <= r.max_list_before
     assert r.n_overloaded == 0  # k-means balances the real testdata
     assert r.pre_recall_ppm > 0 and r.post_recall_ppm > 0
@@ -215,18 +222,18 @@ def test_span_cte_generators_render_certified_oracles():
     for the execute step can never drift the certified operators (the
     md5-identity discipline, as a persistent test)."""
     assert registry.REGISTRY["dedup_max_duplicated_run"].oracle \
-        .startswith(x10.run_ctes_sql())
+        .startswith(run_ctes_sql())
     assert registry.REGISTRY["dedup_containment_drop_plan"].oracle \
-        .startswith(x10.run_ctes_sql())
+        .startswith(run_ctes_sql())
     assert registry.REGISTRY["dedup_span_df_stats"].oracle \
-        .startswith(x10.span_ctes_sql())
+        .startswith(span_ctes_sql())
     # and the tagged variant is the same chain, only renamed: stripping
     # the tag and the lead reproduces the default text
-    tagged = x10.run_ctes_sql("surv", "2", lead="")
+    tagged = run_ctes_sql("surv", "2", lead="")
     import re as _re
     untagged = _re.sub(r"\b(t|h|g|sp|ns|hot|spc|m|r|runs|pairs)2\b",
                        r"\1", tagged).replace("FROM surv", "FROM documents")
-    assert "WITH " + untagged.lstrip() == x10.run_ctes_sql().lstrip()
+    assert "WITH " + untagged.lstrip() == run_ctes_sql().lstrip()
 
 
 def test_merge_receipts_structural_invariants(spark):
@@ -234,10 +241,10 @@ def test_merge_receipts_structural_invariants(spark):
     may only gain reassigned ones, so counts subtract and the min
     surviving list size can never shrink; at least IVM_MIN_MERGES lists
     merge (amortized mode) and never more than half the index."""
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
+    from nats_stream_processor_spark.queries.ivf import IVF_NLIST
     (r,) = _run(spark, "sim_ivf_merge", SF)
     assert r.n_lists_after == r.n_lists_before - r.n_merged
-    assert x14.IVM_MIN_MERGES <= r.n_merged <= IVF_NLIST // 2
+    assert IVM_MIN_MERGES <= r.n_merged <= IVF_NLIST // 2
     assert r.min_list_after >= r.min_list_before
     assert r.n_under == 0  # k-means balances the real testdata
     assert r.pre_recall_ppm > 0 and r.post_recall_ppm > 0
@@ -274,7 +281,7 @@ def test_merge_planted_underloaded_lists(spark, tmp_path):
     """The genuinely-underloaded regime: ~15 nearly-empty lists. The
     act must flag them, merge the capped maximum (half the index), and
     the receipt shows the shrink."""
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
+    from nats_stream_processor_spark.queries.ivf import IVF_NLIST
     sf_dir = _planted_underloaded_embeddings(spark, tmp_path)
     (r,) = _run(spark, "sim_ivf_merge", sf_dir)
     assert r.n_under >= 10

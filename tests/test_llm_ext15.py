@@ -1,4 +1,4 @@
-"""Round-14 IVF lifecycle operators (queries/llm_ext15.py):
+"""IVF lifecycle operators (queries/ivf.py):
 
 - sim_ivf_insert: structural receipts on the real fixture (batch
   vectors only ever ADD to lists; recall staleness is visible), the

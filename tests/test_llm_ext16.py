@@ -1,4 +1,4 @@
-"""Late round-14 eval/tuning receipts (queries/llm_ext16.py):
+"""Eval/tuning receipts (queries/similarity.py, dedup.py, ivf.py):
 
 - sim_eval_rank_quality: metric-range invariants on the real fixture,
   the PERFECT-retrieval regime on a planted clustered corpus (every
@@ -22,7 +22,7 @@ from nats_stream_processor_spark import registry
 from nats_stream_processor_spark.operators import similarity as sim
 from nats_stream_processor_spark.operators.dedup import LSH_BANDS
 from nats_stream_processor_spark.operators.kmeans import TRAIN_SAMPLE_N
-from nats_stream_processor_spark.queries.llm_ext14 import IVR_NQ, IVR_TOPK
+from nats_stream_processor_spark.queries.ivf import IVR_NQ, IVR_TOPK
 
 SF = "/root/testdata/sf0.001"
 
@@ -117,7 +117,7 @@ def test_band_efficiency_structural_on_fixture(spark):
     Jaccard bin at/above the threshold bin, expectation inside
     (0, B*1e6]; the fixture carries at least one verified pair (the
     corpus's near-dups exist — 7 groups at sf0.001)."""
-    from nats_stream_processor_spark.queries.llm import NEAR_DUP_JACCARD
+    from nats_stream_processor_spark.queries.dedup import NEAR_DUP_JACCARD
     rows = _run(spark, "dedup_lsh_band_efficiency", SF)
     assert rows, "fixture unexpectedly free of verified near-dups"
     for r in rows:
@@ -176,7 +176,7 @@ def test_ivf_drift_psi_structure_on_fixture(spark):
     the corpus at the 80% cut, every contribution is non-negative
     (PSI terms are (p-q)ln(p/q) >= 0), and the total is the exact
     integer sum of the contributions on every row."""
-    from nats_stream_processor_spark.queries.llm import IVF_NLIST
+    from nats_stream_processor_spark.queries.ivf import IVF_NLIST
     rows = _run(spark, "sim_ivf_drift_psi", SF)
     assert [r.cent_id for r in rows] == list(range(IVF_NLIST))
     assert sum(r.n_corpus for r in rows) == 400
@@ -189,7 +189,7 @@ def test_ivf_drift_psi_structure_on_fixture(spark):
 
 def test_ivf_drift_psi_flags_planted_shape_drift(spark, tmp_path):
     """The regime the receipt exists for: a batch aimed entirely at
-    one list (the llm_ext15 skewed-batch fixture) is a textbook
+    one list (the test_llm_ext15 skewed-batch fixture) is a textbook
     distribution shift — the total PSI must blow through the
     conventional 0.1 alarm, with the hot list carrying the largest
     contribution."""

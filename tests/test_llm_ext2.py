@@ -1,4 +1,4 @@
-"""Invariants of the round-4 extension queries (queries/llm_ext2.py) the
+"""Invariants of similarity, curation and dedup queries the
 oracle hash cannot express: power-iteration PCA must actually recover a
 planted dominant direction, PSI must be ~0 on identical distributions and
 positive under drift, and the cascade funnel must account every document

@@ -1,4 +1,4 @@
-"""Invariants of the round-5 extension queries (queries/llm_ext3.py) that
+"""Invariants of retrieval, sketch, curation and analytics queries that
 the oracle hash cannot express: the Bloom filter's one-sided error, the
 Count-Min overestimate contract, BM25 ranking against a hand-scored
 fixture, Gini bounds, curriculum-phase partitioning, attribution
@@ -12,7 +12,47 @@ import pytest
 from pyspark.sql import functions as F
 
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries import llm_ext3 as x3
+from nats_stream_processor_spark.queries.relational import (
+    Q19_BRACKETS,
+    Q6_DISC_HI,
+    Q6_DISC_LO,
+    Q6_MAX_QTY,
+    Q6_YEAR,
+)
+from nats_stream_processor_spark.queries.events import (
+    BOT_CV2_MAX,
+    BOT_MIN_EVENTS,
+    RFM_NTILES,
+)
+from nats_stream_processor_spark.queries.text import (
+    BM25_B,
+    BM25_K1,
+    BM25_TERMS,
+    BM25_TOPK,
+    BOILER_MIN_DOCS,
+)
+from nats_stream_processor_spark.queries.graph import (
+    BFS_MAX_DEPTH,
+    BFS_SEED_MAX,
+)
+from nats_stream_processor_spark.queries.similarity import (
+    MRL_PANEL,
+    MRL_PREFIXES,
+    NORM_OUTLIER_FACTOR,
+)
+from nats_stream_processor_spark.queries.dedup import (
+    BLOOM_K,
+    BLOOM_M,
+    EDIT_MAX_RATIO_PPM,
+    EDIT_PREFIX,
+)
+from nats_stream_processor_spark.queries.curation import (
+    ANNEAL_FRAC_DEN,
+    CONTAM_BENCHES,
+    CURRICULUM_CUTS,
+    EPOCH_MAX,
+)
+from nats_stream_processor_spark.queries.sketches import CMS_D, CMS_W
 
 SF = "/root/testdata/sf0.001"
 
@@ -59,22 +99,22 @@ def test_bm25_ranks_match_reference_formula(spark):
     N = len(docs)
     avgdl = sum(len(t) for t in docs.values()) / N
     df = {t: sum(1 for toks in docs.values() if t in toks)
-          for t in x3.BM25_TERMS}
+          for t in BM25_TERMS}
     expect = {}
     for d, toks in docs.items():
         s = 0
-        for t in x3.BM25_TERMS:
+        for t in BM25_TERMS:
             tf = toks.count(t)
             if not tf or not df[t]:
                 continue
             idf = math.log((N - df[t] + 0.5) / (df[t] + 0.5) + 1)
             dl = len(toks)
-            term = idf * tf * (x3.BM25_K1 + 1) / (
-                tf + x3.BM25_K1 * (1 - x3.BM25_B + x3.BM25_B * dl / avgdl))
+            term = idf * tf * (BM25_K1 + 1) / (
+                tf + BM25_K1 * (1 - BM25_B + BM25_B * dl / avgdl))
             s += math.floor(term * 1e6 + 0.5)
         if s:
             expect[d] = s
-    top = sorted(expect.items(), key=lambda kv: (-kv[1], kv[0]))[:x3.BM25_TOPK]
+    top = sorted(expect.items(), key=lambda kv: (-kv[1], kv[0]))[:BM25_TOPK]
     got = [(r.doc_id, r.bm25_ppm)
            for r in _run(spark, "text_bm25_topk").collect()]
     assert got == top
@@ -136,7 +176,7 @@ def test_rfm_segments_partition_users(spark):
         code = r.rfm_code
         rq, fq, mq = code // 100, (code // 10) % 10, code % 10
         for q in (rq, fq, mq):
-            assert 1 <= q <= x3.RFM_NTILES, code
+            assert 1 <= q <= RFM_NTILES, code
 
 
 def test_ablation_counts_consistent_with_gopher(spark):
@@ -157,7 +197,7 @@ def test_ablation_counts_consistent_with_gopher(spark):
 def test_two_hop_reach_bounds(spark):
     """Reach is bounded by k + k^2 (k=3 -> 12) and covers every node that
     has at least one edge."""
-    from nats_stream_processor_spark.queries.knn_shared import KNN_GRAPH_K
+    from nats_stream_processor_spark.queries.graph import KNN_GRAPH_K
     rows = _run(spark, "graph_knn_two_hop").collect()
     cap = KNN_GRAPH_K + KNN_GRAPH_K * KNN_GRAPH_K
     for r in rows:
@@ -209,12 +249,12 @@ def test_compact_latest_is_max_ts_per_user(spark):
 
 def test_param_invariants():
     """Constant relationships the operators' exactness arguments rely on."""
-    assert x3.BLOOM_M & (x3.BLOOM_M - 1) == 0  # power of two
-    assert 1 <= x3.BLOOM_K <= 8
-    assert x3.CMS_D >= 2 and x3.CMS_W >= 64
-    assert x3.BOILER_MIN_DOCS >= 2
-    assert len(x3.CURRICULUM_CUTS) == len(set(x3.CURRICULUM_CUTS))
-    assert list(x3.CURRICULUM_CUTS) == sorted(x3.CURRICULUM_CUTS, reverse=True)
+    assert BLOOM_M & (BLOOM_M - 1) == 0  # power of two
+    assert 1 <= BLOOM_K <= 8
+    assert CMS_D >= 2 and CMS_W >= 64
+    assert BOILER_MIN_DOCS >= 2
+    assert len(CURRICULUM_CUTS) == len(set(CURRICULUM_CUTS))
+    assert list(CURRICULUM_CUTS) == sorted(CURRICULUM_CUTS, reverse=True)
 
 
 def test_dataset_card_cross_checks_other_queries(spark):
@@ -248,7 +288,7 @@ def test_norm_outliers_integer_cut_is_exact(spark):
     assert set(got) == set(nsq)
     for lab, vals in nsq.items():
         expect_out = sum(1 for x in vals
-                         if x * n_all > x3.NORM_OUTLIER_FACTOR * s_all)
+                         if x * n_all > NORM_OUTLIER_FACTOR * s_all)
         assert got[lab].n_vecs == len(vals)
         assert got[lab].n_outliers == expect_out, lab
 
@@ -267,12 +307,12 @@ def test_q6_matches_python_filter(spark):
     import datetime
     import math as m
     li = spark.read.parquet(f"{SF}/lineitem.parquet").collect()
-    lo = datetime.datetime(x3.Q6_YEAR, 1, 1)
-    hi = datetime.datetime(x3.Q6_YEAR + 1, 1, 1)
+    lo = datetime.datetime(Q6_YEAR, 1, 1)
+    hi = datetime.datetime(Q6_YEAR + 1, 1, 1)
     keep = [r for r in li
             if lo <= r.l_shipdate < hi
-            and x3.Q6_DISC_LO <= r.l_discount <= x3.Q6_DISC_HI
-            and r.l_quantity < x3.Q6_MAX_QTY]
+            and Q6_DISC_LO <= r.l_discount <= Q6_DISC_HI
+            and r.l_quantity < Q6_MAX_QTY]
     rev = sum(m.floor(r.l_extendedprice * r.l_discount * 1e6 + 0.5)
               for r in keep)
     got = _run(spark, "agg_revenue_q6").collect()[0]
@@ -387,7 +427,7 @@ def test_annealing_budgets_conserve_and_upweight_quality(spark):
     its raw-size share only via quality weighting."""
     rows = _run(spark, "curation_annealing_mixture").collect()
     t_all = sum(r.n_tokens for r in rows)
-    ab = t_all // x3.ANNEAL_FRAC_DEN
+    ab = t_all // ANNEAL_FRAC_DEN
     assert sum(r.pretrain_tokens for r in rows) <= t_all - ab
     assert sum(r.anneal_tokens for r in rows) <= ab
     share = sum(r.anneal_share_ppm for r in rows)
@@ -435,8 +475,8 @@ def test_bot_flags_only_on_active_regular_users(spark):
     for r in rows:
         assert r.cv2 >= -1e-6 or r.n_events < 2
         if r.flag_regular:
-            assert r.n_events >= x3.BOT_MIN_EVENTS
-            assert r.cv2 < x3.BOT_CV2_MAX
+            assert r.n_events >= BOT_MIN_EVENTS
+            assert r.cv2 < BOT_CV2_MAX
 
 
 def test_bfs_levels_bounded_and_rooted(spark):
@@ -445,10 +485,10 @@ def test_bfs_levels_bounded_and_rooted(spark):
     rows = sorted(_run(spark, "graph_knn_bfs_recursive").collect(),
                   key=lambda r: r.lvl)
     n_seeds = (spark.read.parquet(f"{SF}/embeddings.parquet")
-               .filter(F.col("vec_id") < x3.BFS_SEED_MAX).count())
+               .filter(F.col("vec_id") < BFS_SEED_MAX).count())
     assert rows[0].lvl == 0 and rows[0].n_first_reached == n_seeds
     for r in rows:
-        assert 0 <= r.lvl <= x3.BFS_MAX_DEPTH
+        assert 0 <= r.lvl <= BFS_MAX_DEPTH
         assert r.n_first_reached >= 1
 
 
@@ -477,7 +517,7 @@ def test_q19_brackets_match_python_filter(spark):
         p = parts[r.l_partkey]
         if any(p.p_brand == b and slo <= p.p_size <= shi
                and qlo <= r.l_quantity <= qhi
-               for b, slo, shi, qlo, qhi in x3.Q19_BRACKETS):
+               for b, slo, shi, qlo, qhi in Q19_BRACKETS):
             n += 1
             rev += m.floor(r.l_extendedprice * (1 - r.l_discount) * 1e6 + 0.5)
     got = _run(spark, "join_disjunctive_brackets").collect()[0]
@@ -499,7 +539,7 @@ def test_edit_distance_pairs_symmetric_reference(spark):
             prev = cur
         return prev[-1]
 
-    docs = {r.doc_id: r.text[:x3.EDIT_PREFIX]
+    docs = {r.doc_id: r.text[:EDIT_PREFIX]
             for r in spark.read.parquet(f"{SF}/documents.parquet").collect()}
     rows = _run(spark, "dedup_edit_distance_verify").collect()
     for r in rows:
@@ -507,7 +547,7 @@ def test_edit_distance_pairs_symmetric_reference(spark):
         mx = max(len(docs[r.doc_a]), len(docs[r.doc_b]), 1)
         assert r.lev == d, (r.doc_a, r.doc_b)
         assert r.ratio_ppm == d * 1_000_000 // mx
-        assert r.ratio_ppm <= x3.EDIT_MAX_RATIO_PPM
+        assert r.ratio_ppm <= EDIT_MAX_RATIO_PPM
 
 
 def test_epoch_decay_effective_bounded_by_target(spark):
@@ -516,7 +556,7 @@ def test_epoch_decay_effective_bounded_by_target(spark):
     clamp."""
     rows = _run(spark, "curation_epoch_decay_schedule").collect()
     for r in rows:
-        assert 0 <= r.full_epochs <= x3.EPOCH_MAX
+        assert 0 <= r.full_epochs <= EPOCH_MAX
         assert r.effective_tokens <= r.target_tokens + 1e-6
         if r.target_tokens >= r.n_tokens:
             assert r.effective_tokens >= r.n_tokens - 1e-6
@@ -528,8 +568,8 @@ def test_matryoshka_recall_monotone_in_prefix(spark):
     recall 1.0 (so every prefix is <= 1e6)."""
     rows = sorted(_run(spark, "sim_matryoshka_recall").collect(),
                   key=lambda r: r.prefix_len)
-    assert [r.prefix_len for r in rows] == sorted(x3.MRL_PREFIXES)
-    n_q = min(x3.MRL_PANEL,
+    assert [r.prefix_len for r in rows] == sorted(MRL_PREFIXES)
+    n_q = min(MRL_PANEL,
               spark.read.parquet(f"{SF}/embeddings.parquet").count())
     recalls = []
     for r in rows:
@@ -572,7 +612,7 @@ def test_contamination_grid_complete_and_bounded(spark):
     for r in rows:
         per[r.source][r.bench] = r
     for s, cells in per.items():
-        assert sorted(cells) == list(range(x3.CONTAM_BENCHES))
+        assert sorted(cells) == list(range(CONTAM_BENCHES))
         nd = {c.n_docs for c in cells.values()}
         assert len(nd) == 1
         for c in cells.values():

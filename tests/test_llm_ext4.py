@@ -1,5 +1,5 @@
-"""Invariants and Python-reference replications for the round-7
-extension queries (queries/llm_ext4.py): winnowing fingerprint
+"""Invariants and Python-reference replications for the
+fingerprinting, sampling, change-detection and tokenizer queries: winnowing fingerprint
 selection, sorted-neighborhood blocking, Kneser-Ney normalization, MMR
 greedy equivalence, Neyman allocation arithmetic, and aspect-bucket
 batch accounting. Each heavy operator is recomputed end-to-end in plain
@@ -15,7 +15,41 @@ import re
 import pytest
 
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries import llm_ext4 as x4
+from nats_stream_processor_spark.queries.events import (
+    BURST_S,
+    CUSUM_H_DEN,
+    CUSUM_H_NUM,
+    _burst_decode,
+)
+from nats_stream_processor_spark.queries.text import (
+    UNI_MAX_PIECE,
+    UNI_VOCAB_K,
+    UNI_WORDS_K,
+    UNI_WORD_MAXLEN,
+    _mtld_of,
+)
+from nats_stream_processor_spark.queries.similarity import (
+    MMR_CAND,
+    MMR_K,
+    MMR_QNORM,
+    MMR_QUERY,
+)
+from nats_stream_processor_spark.queries.dedup import (
+    SNM_BLOCKLEN,
+    SNM_DUP_PPM,
+    SNM_KEYLEN,
+    SNM_WINDOW,
+    WIN_HH_DOCS,
+    WIN_K,
+    WIN_MIN_SHARED,
+    WIN_POS_BITS,
+    WIN_W,
+)
+from nats_stream_processor_spark.queries.curation import NEYMAN_BUDGET
+from nats_stream_processor_spark.queries.media import (
+    ASPECT_BATCH,
+    ASPECT_BUCKETS,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -49,8 +83,8 @@ def _winnow_fps(toks):
     """Classic winnowing reference: each complete w-window contributes
     its min hash, rightmost position on ties (via the same packed-int
     trick the engines use)."""
-    k, w = x4.WIN_K, x4.WIN_W
-    mod = 1 << x4.WIN_POS_BITS
+    k, w = WIN_K, WIN_W
+    mod = 1 << WIN_POS_BITS
     hs = [_h32(" ".join(toks[i:i + k])) for i in range(len(toks) - k + 1)]
     u = [h * mod + (mod // 2 - (i + 1)) for i, h in enumerate(hs)]
     return {min(u[q:q + w]) // mod for q in range(len(u) - w + 1)}
@@ -65,7 +99,7 @@ def test_winnowing_matches_python_reference(spark):
     for s in fps.values():
         for h in s:
             df[h] = df.get(h, 0) + 1
-    kept = {h for h, n in df.items() if 2 <= n <= x4.WIN_HH_DOCS}
+    kept = {h for h, n in df.items() if 2 <= n <= WIN_HH_DOCS}
     expect = {}
     ids = sorted(fps)
     by_h = {}
@@ -79,7 +113,7 @@ def test_winnowing_matches_python_reference(spark):
                 key = (a, b) if a < b else (b, a)
                 shared[key] = shared.get(key, 0) + 1
     for (a, b), n in shared.items():
-        if n >= x4.WIN_MIN_SHARED:
+        if n >= WIN_MIN_SHARED:
             expect[(a, b)] = (n, n * 1_000_000
                               // min(len(fps[a]), len(fps[b])))
     got = {(r.doc_a, r.doc_b): (r.n_shared, r.overlap_ppm)
@@ -92,7 +126,7 @@ def test_winnowing_guarantee_on_planted_overlap(spark):
     """The winnowing guarantee: two token streams sharing a run of
     >= W + K - 1 tokens share at least one fingerprint (checked on a
     synthetic pair, independent of the fixtures)."""
-    shared_run = [f"tok{i}" for i in range(x4.WIN_W + x4.WIN_K - 1)]
+    shared_run = [f"tok{i}" for i in range(WIN_W + WIN_K - 1)]
     a = ["aaa", "bbb"] + shared_run + ["ccc"]
     b = ["xxx"] + shared_run + ["yyy", "zzz"]
     assert _winnow_fps(a) & _winnow_fps(b)
@@ -104,22 +138,22 @@ def test_winnowing_guarantee_on_planted_overlap(spark):
 def test_snm_matches_python_reference(spark):
     docs = _docs(spark)
     key = {r.doc_id:
-           re.sub("[^a-z0-9]", "", r.text.lower())[:x4.SNM_KEYLEN]
+           re.sub("[^a-z0-9]", "", r.text.lower())[:SNM_KEYLEN]
            for r in docs}
     toks = {r.doc_id: set(_toks(r.text)) for r in docs}
     blocks = {}
     for d, k in key.items():
-        blocks.setdefault(k[:x4.SNM_BLOCKLEN], []).append(d)
+        blocks.setdefault(k[:SNM_BLOCKLEN], []).append(d)
     expect = {}
     for blk, ds in blocks.items():
         order = sorted(ds, key=lambda d: (key[d], d))
         for i, a in enumerate(order):
-            for j in range(i + 1, min(i + x4.SNM_WINDOW, len(order))):
+            for j in range(i + 1, min(i + SNM_WINDOW, len(order))):
                 b = order[j]
                 inter = len(toks[a] & toks[b])
                 un = max(len(toks[a] | toks[b]), 1)
                 jac = inter * 1_000_000 // un
-                expect[(a, b)] = (jac, int(jac >= x4.SNM_DUP_PPM))
+                expect[(a, b)] = (jac, int(jac >= SNM_DUP_PPM))
     got = {(r.doc_a, r.doc_b): (r.jaccard_ppm, r.is_dup)
            for r in _run(spark, "dedup_sorted_neighborhood").collect()}
     assert got == expect
@@ -213,13 +247,13 @@ def test_mmr_matches_python_greedy(spark):
         return math.floor(x * 1e6 + 0.5)
 
     nrm = {v: math.sqrt(dot(e, e)) for v, e in vecs.items()}
-    rel = {v: ppm(dot(x4.MMR_QUERY, e) / (x4.MMR_QNORM * nrm[v]))
+    rel = {v: ppm(dot(MMR_QUERY, e) / (MMR_QNORM * nrm[v]))
            for v, e in vecs.items()}
-    cand = sorted(rel, key=lambda v: (-rel[v], v))[:x4.MMR_CAND]
+    cand = sorted(rel, key=lambda v: (-rel[v], v))[:MMR_CAND]
     sims = {(a, b): ppm(dot(vecs[a], vecs[b]) / (nrm[a] * nrm[b]))
             for a in cand for b in cand if a != b}
     selected, expect = [], []
-    for step in range(1, x4.MMR_K + 1):
+    for step in range(1, MMR_K + 1):
         best = None
         for u in sorted(cand):
             if u in selected:
@@ -233,7 +267,7 @@ def test_mmr_matches_python_greedy(spark):
     got = [(r.step, r.vec_id, r.rel_ppm, r.mmr_score)
            for r in _run(spark, "sim_mmr_diverse_topk").collect()]
     assert got == expect
-    assert len(set(v for _, v, _, _ in got)) == x4.MMR_K
+    assert len(set(v for _, v, _, _ in got)) == MMR_K
 
 
 # ------------------------------------------------------- Neyman
@@ -255,7 +289,7 @@ def test_neyman_matches_python_reference(spark):
     tw = max(sum(w for _, _, w in stats.values()), 1)
     expect = {}
     for src, (n, std_micro, w) in stats.items():
-        alloc = min(n, x4.NEYMAN_BUDGET * w // tw)
+        alloc = min(n, NEYMAN_BUDGET * w // tw)
         order = sorted(by_src[src],
                        key=lambda t: (_h32(f"neyman_{t[0]}"), t[0]))
         picked = order[:alloc]
@@ -267,9 +301,9 @@ def test_neyman_matches_python_reference(spark):
            for r in _run(spark, "sample_neyman_allocation").collect()}
     assert got == expect
     total = sum(a for _, _, a, _, _ in got.values())
-    assert total <= x4.NEYMAN_BUDGET
+    assert total <= NEYMAN_BUDGET
     # floor rounding loses < 1 doc per stratum
-    assert total > x4.NEYMAN_BUDGET - len(got)
+    assert total > NEYMAN_BUDGET - len(got)
 
 
 # ------------------------------------------------- aspect buckets
@@ -277,8 +311,8 @@ def test_neyman_matches_python_reference(spark):
 
 def test_aspect_buckets_match_python_reference(spark):
     docs = _docs(spark)
-    bppms = [w * 1_000_000 // h for _, w, h in x4.ASPECT_BUCKETS]
-    names = [nm for nm, _, _ in x4.ASPECT_BUCKETS]
+    bppms = [w * 1_000_000 // h for _, w, h in ASPECT_BUCKETS]
+    names = [nm for nm, _, _ in ASPECT_BUCKETS]
     assign = {}
     for r in docs:
         k = int(hashlib.md5(r.text.encode("utf-8")).hexdigest()[:8], 16)
@@ -289,23 +323,23 @@ def test_aspect_buckets_match_python_reference(spark):
     expect = {}
     for bi, dists in assign.items():
         n = len(dists)
-        nb = (n + x4.ASPECT_BATCH - 1) // x4.ASPECT_BATCH
-        expect[names[bi]] = (n, nb, n - (nb - 1) * x4.ASPECT_BATCH,
+        nb = (n + ASPECT_BATCH - 1) // ASPECT_BATCH
+        expect[names[bi]] = (n, nb, n - (nb - 1) * ASPECT_BATCH,
                              sum(dists) // n)
     got = {r.bucket: (r.n_images, r.n_batches, r.tail_fill, r.mad_ppm)
            for r in _run(spark, "media_aspect_bucket_batches").collect()}
     assert got == expect
     assert sum(v[0] for v in got.values()) == len(docs)
     for n, nb, tail, _ in got.values():
-        assert 1 <= tail <= x4.ASPECT_BATCH
-        assert nb == (n + x4.ASPECT_BATCH - 1) // x4.ASPECT_BATCH
+        assert 1 <= tail <= ASPECT_BATCH
+        assert nb == (n + ASPECT_BATCH - 1) // ASPECT_BATCH
 
 
 def test_phash_planted_twins_surface(spark):
     """Round-7 de-vacuization: every planted twin pair must appear in
     media_phash_near_dup at Hamming 0, making the formal row
     non-vacuous (r6 verdict flagged the 0-vs-0 match)."""
-    from nats_stream_processor_spark.queries.llm_ext3 import (
+    from nats_stream_processor_spark.queries.media import (
         PHASH_PLANT_MOD,
         PHASH_PLANT_OFFSET,
     )
@@ -323,7 +357,7 @@ def test_phash_organic_mode_returns_pre_plant_result(spark):
     organic pairs — the plant-mode result minus every row touching a
     planted id — so non-certification consumers never see synthetic
     rows."""
-    from nats_stream_processor_spark.queries.llm_ext3 import (
+    from nats_stream_processor_spark.queries.media import (
         PHASH_PLANT_CONF,
         PHASH_PLANT_OFFSET,
     )
@@ -369,8 +403,8 @@ def test_cusum_closed_form_equals_sequential_recurrence(spark):
             x = days[day] * nd - total
             s = max(0, s + x)
             expect[(et, day)] = (days[day], s,
-                                 int(s * x4.CUSUM_H_DEN
-                                     > total * x4.CUSUM_H_NUM))
+                                 int(s * CUSUM_H_DEN
+                                     > total * CUSUM_H_NUM))
     got = {(r.event_type, r.day): (r.n, r.cusum, r.is_drift)
            for r in _run(spark, "events_cusum_drift").collect()}
     assert got == expect
@@ -386,25 +420,25 @@ def test_mtld_hand_computed_cases():
     degenerate sentinels."""
     # 'a a a ...': factor completes at tokens=2 (types=1, 1/2 <= .72),
     # every 2 tokens -> 5 whole factors, no tail: mtld = 10/5 = 2.
-    n, w, ppm = x4._mtld_of(["a"] * 10)
+    n, w, ppm = _mtld_of(["a"] * 10)
     assert (n, w, ppm) == (10, 5, 2_000_000)
     # all-distinct: no factor ever completes, TTR stays 1.0 -> partial
     # credit is 0/0.28 = 0 factors -> sentinel 0.
-    n, w, ppm = x4._mtld_of(["a", "b", "c", "d"])
+    n, w, ppm = _mtld_of(["a", "b", "c", "d"])
     assert (n, w, ppm) == (4, 0, 0)
     # empty doc
-    assert x4._mtld_of([]) == (0, 0, 0)
+    assert _mtld_of([]) == (0, 0, 0)
     # partial tail: 'a a' completes one factor; 'b c' is a 2-token
     # tail with TTR 1.0 -> partial 0; mtld = 4 / 1 = 4.
-    n, w, ppm = x4._mtld_of(["a", "a", "b", "c"])
+    n, w, ppm = _mtld_of(["a", "a", "b", "c"])
     assert (n, w, ppm) == (4, 1, 4_000_000)
     # tail TTR 2/3 = 0.667 <= 0.72 completes a SECOND factor: 'a a' |
     # 'b c b' -> 2 whole factors, empty tail, mtld = 5/2.
-    n, w, ppm = x4._mtld_of(["a", "a", "b", "c", "b"])
+    n, w, ppm = _mtld_of(["a", "a", "b", "c", "b"])
     assert (n, w, ppm) == (5, 2, 2_500_000)
     # tail with repetition ABOVE threshold: 'b c d b' TTR 3/4 = 0.75
     # stays open -> partial (1 - 3/4)/0.28 credit.
-    n, w, ppm = x4._mtld_of(["a", "a", "b", "c", "d", "b"])
+    n, w, ppm = _mtld_of(["a", "a", "b", "c", "d", "b"])
     # denom = 1*280*4 + 1000*(4-3) = 2120; ppm = 6*280*4*1e6 // 2120
     assert (n, w, ppm) == (6, 1, 6 * 280 * 4 * 1_000_000 // 2120)
 
@@ -415,7 +449,7 @@ def test_mtld_spark_rows_match_per_doc_automaton(spark):
     docs = _docs(spark)
     expect = {}
     for r in docs:
-        n, w, ppm = x4._mtld_of(_toks(r.text))
+        n, w, ppm = _mtld_of(_toks(r.text))
         expect[r.doc_id] = (n, w, ppm)
     got = {r.doc_id: (r.n_tokens, r.n_factors, r.mtld_ppm)
            for r in _run(spark, "text_mtld_diversity").collect()}
@@ -469,24 +503,24 @@ def test_unigram_viterbi_full_python_replication(spark):
     pieces = Counter()
     for tok, c in wc.items():
         for i in range(len(tok)):
-            for l in range(1, min(x4.UNI_MAX_PIECE, len(tok) - i) + 1):
+            for l in range(1, min(UNI_MAX_PIECE, len(tok) - i) + 1):
                 pieces[tok[i:i + l]] += c
     chars = {p: c for p, c in pieces.items() if len(p) == 1}
     multi = dict(sorted(((p, c) for p, c in pieces.items() if len(p) >= 2),
-                        key=lambda kv: (-kv[1], kv[0]))[:x4.UNI_VOCAB_K])
+                        key=lambda kv: (-kv[1], kv[0]))[:UNI_VOCAB_K])
     vocab_cnt = {**chars, **multi}
     total = sum(vocab_cnt.values())
     sc = {p: math.floor(math.log(c / total) * 1e6 + 0.5)
           for p, c in vocab_cnt.items()}
-    words = sorted((t for t in wc if len(t) <= x4.UNI_WORD_MAXLEN),
-                   key=lambda t: (-wc[t], t))[:x4.UNI_WORDS_K]
+    words = sorted((t for t in wc if len(t) <= UNI_WORD_MAXLEN),
+                   key=lambda t: (-wc[t], t))[:UNI_WORDS_K]
     expect = {}
     for word in words:
         n = len(word)
         best, seg = [None] * (n + 1), [""] * (n + 1)
         best[0] = 0
         for i in range(1, n + 1):
-            for l in range(min(x4.UNI_MAX_PIECE, i), 0, -1):
+            for l in range(min(UNI_MAX_PIECE, i), 0, -1):
                 j = i - l
                 piece = word[j:i]
                 if best[j] is None or piece not in sc:
@@ -526,7 +560,7 @@ def test_burst_dp_is_optimal_vs_brute_force():
     for gaps in cases:
         n = len(gaps)
         T = max(sum(gaps), 1)
-        lam0, lam1 = n / T, x4.BURST_S * n / T
+        lam0, lam1 = n / T, BURST_S * n / T
         lnl0, lnl1 = math.log(lam0), math.log(lam1)
         trans = math.floor(math.log(n) * 1e6 + 0.5)
         k = [(math.floor((lam0 * float(g) - lnl0) * 1e6 + 0.5),
@@ -548,12 +582,12 @@ def test_burst_dp_is_optimal_vs_brute_force():
                 best_cost, opt_stats = cost, {stats}
             elif cost == best_cost:
                 opt_stats.add(stats)
-        got_n, got_b, got_r, got_c = x4._burst_decode(gaps)
+        got_n, got_b, got_r, got_c = _burst_decode(gaps)
         assert got_n == n
         assert got_c == best_cost, gaps
         assert (got_b, got_r) in opt_stats, gaps
     # the clear-burst case must actually detect one
-    assert x4._burst_decode(cases[0])[1] == 1
+    assert _burst_decode(cases[0])[1] == 1
 
 
 def test_burst_spark_rows_match_per_user_decode(spark):
@@ -572,7 +606,7 @@ def test_burst_spark_rows_match_per_user_decode(spark):
         us = [(t - epoch) // datetime.timedelta(microseconds=1)
               for t, _ in rows]
         gaps = [us[i + 1] - us[i] for i in range(len(us) - 1)]
-        expect[uid] = x4._burst_decode(gaps)
+        expect[uid] = _burst_decode(gaps)
     got = {r.user_id: (r.n_gaps, r.n_bursts, r.burst_gaps, r.path_cost_q)
            for r in _run(spark, "events_kleinberg_burst").collect()}
     assert got == expect

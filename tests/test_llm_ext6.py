@@ -1,5 +1,5 @@
-"""Invariants and Python-reference replications for the round-8
-extension queries (queries/llm_ext6.py): Flesch readability arithmetic,
+"""Invariants and Python-reference replications for the readability,
+substring-removal and cross-modal queries: Flesch readability arithmetic,
 exact-substring removal materialization, and cross-modal recall@K.
 Each operator is recomputed end-to-end in plain Python over the
 sf0.001 corpus and compared row-for-row — independent of the DuckDB
@@ -14,7 +14,27 @@ import re
 import pytest
 
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries import llm_ext6 as x6
+from nats_stream_processor_spark.queries.text import (
+    FLESCH_BANDS,
+    WP_MAX_PIECE,
+    WP_VOCAB_K,
+    WP_WORDS_K,
+    WP_WORD_MAXLEN,
+)
+from nats_stream_processor_spark.queries.similarity import (
+    XM_NQ,
+    XM_QBUCKETS,
+    XM_QNORMS,
+    XM_QVECS,
+    XM_TOPK,
+)
+from nats_stream_processor_spark.queries.dedup import SUBSTR_MAX_DOC_TOKENS
+from nats_stream_processor_spark.queries.media import (
+    SCENE_FRAMES,
+    SCENE_SAMPLES,
+    SCENE_THRESH,
+    SCENE_WINDOW,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -56,7 +76,7 @@ def _flesch_row(text):
     ww, ss = max(n_words, 1), max(n_sent, 1)
     micro = 206835000 - (1015000 * ww) // ss - (84600000 * n_syl) // ww
     band = "very_difficult"
-    for lo, label in x6.FLESCH_BANDS:
+    for lo, label in FLESCH_BANDS:
         if micro >= lo:
             band = label
             break
@@ -95,7 +115,7 @@ def test_substring_apply_matches_python_reference(spark):
         MERSENNE_P,
         SHINGLE_COMB,
     )
-    from nats_stream_processor_spark.queries.llm_ext2 import _SPAN_K as K
+    from nats_stream_processor_spark.queries.dedup import _SPAN_K as K
     docs = _docs(spark)
     toks = {r.doc_id: _toks(r.text) for r in docs}
     hs = {d: [_h32(t) for t in ts] for d, ts in toks.items()}
@@ -173,8 +193,8 @@ def test_crossmodal_recall_matches_python_reference(spark):
 
     doc_b = {vid: buckets(v) for vid, v in vecs.items()}
     expect = {}
-    for q in range(x6.XM_NQ):
-        qv, qn, qb = x6.XM_QVECS[q], x6.XM_QNORMS[q], x6.XM_QBUCKETS[q]
+    for q in range(XM_NQ):
+        qv, qn, qb = XM_QVECS[q], XM_QNORMS[q], XM_QBUCKETS[q]
         scored = []
         for vid, v in vecs.items():
             ppm = math.floor(fold_dot(qv, v) / (qn * fold_norm(v))
@@ -183,11 +203,11 @@ def test_crossmodal_recall_matches_python_reference(spark):
                        for t in range(sim.LSH_TABLES))
             scored.append((vid, ppm, cand))
         order = sorted(scored, key=lambda r: (-r[1], r[0]))
-        exact = {vid for vid, _, _ in order[:x6.XM_TOPK]}
+        exact = {vid for vid, _, _ in order[:XM_TOPK]}
         cands = [r for r in order if r[2]]
-        ann = {vid for vid, _, _ in cands[:x6.XM_TOPK]}
+        ann = {vid for vid, _, _ in cands[:XM_TOPK]}
         hits = len(exact & ann)
-        expect[q] = (len(cands), hits, hits * 1000000 // x6.XM_TOPK)
+        expect[q] = (len(cands), hits, hits * 1000000 // XM_TOPK)
     got = {r.query_id: (r.n_candidates, r.n_hits, r.recall_ppm)
            for r in _run(spark, "sim_crossmodal_recall").collect()}
     assert got == expect
@@ -206,15 +226,15 @@ def test_scene_cuts_matches_python_reference(spark):
     for r in docs:
         p = r.text.encode("utf-8")
         n = len(p)
-        step = x6.SCENE_WINDOW // x6.SCENE_SAMPLES
+        step = SCENE_WINDOW // SCENE_SAMPLES
         feats = []
-        for j in range(x6.SCENE_FRAMES):
-            off = (j * n) // x6.SCENE_FRAMES
+        for j in range(SCENE_FRAMES):
+            off = (j * n) // SCENE_FRAMES
             feats.append(sum(p[off + s * step]
-                             for s in range(x6.SCENE_SAMPLES)
+                             for s in range(SCENE_SAMPLES)
                              if off + s * step < n))
         ads = [0] + [abs(b - a) for a, b in zip(feats, feats[1:])]
-        cuts = [1 if a >= x6.SCENE_THRESH else 0 for a in ads]
+        cuts = [1 if a >= SCENE_THRESH else 0 for a in ads]
         shot_len = {}
         sid = 0
         for i, c in enumerate(cuts):
@@ -228,7 +248,7 @@ def test_scene_cuts_matches_python_reference(spark):
     assert got == expect
     # the detector must discriminate WITHIN videos: at least one doc
     # where some transitions cut and some do not
-    assert any(0 < v[0] < x6.SCENE_FRAMES - 1 for v in got.values())
+    assert any(0 < v[0] < SCENE_FRAMES - 1 for v in got.values())
 
 
 # --------------------------------------------- WordPiece greedy apply
@@ -243,7 +263,7 @@ def test_wordpiece_matches_python_reference(spark):
     counts = {}
     for w, c in wc.items():
         for i in range(len(w)):
-            for l in range(1, min(x6.WP_MAX_PIECE, len(w) - i) + 1):
+            for l in range(1, min(WP_MAX_PIECE, len(w) - i) + 1):
                 key = (w[i:i + l], 0 if i == 0 else 1)
                 counts[key] = counts.get(key, 0) + c
     vocab = {0: set(), 1: set()}
@@ -254,16 +274,16 @@ def test_wordpiece_matches_python_reference(spark):
         else:
             multi[ic].append((-c, p))
     for ic in (0, 1):
-        for _, p in sorted(multi[ic])[:x6.WP_VOCAB_K]:
+        for _, p in sorted(multi[ic])[:WP_VOCAB_K]:
             vocab[ic].add(p)
-    words = sorted((w for w in wc if len(w) <= x6.WP_WORD_MAXLEN),
-                   key=lambda w: (-wc[w], w))[:x6.WP_WORDS_K]
+    words = sorted((w for w in wc if len(w) <= WP_WORD_MAXLEN),
+                   key=lambda w: (-wc[w], w))[:WP_WORDS_K]
     expect = {}
     for word in words:
         pos, segs, ncont = 0, [], 0
         while pos < len(word):
             v = vocab[0] if pos == 0 else vocab[1]
-            l = min(x6.WP_MAX_PIECE, len(word) - pos)
+            l = min(WP_MAX_PIECE, len(word) - pos)
             while l > 1 and word[pos:pos + l] not in v:
                 l -= 1
             piece = word[pos:pos + l]
@@ -311,7 +331,7 @@ def test_substring_apply_excludes_over_cap_docs(spark, tmp_path):
     span_a = " ".join(f"aa{i}" for i in range(16))
     span_b = " ".join(f"bb{i}" for i in range(16))
     big = span_b + " " + " ".join(
-        "zz" for _ in range(x6.SUBSTR_MAX_DOC_TOKENS))
+        "zz" for _ in range(SUBSTR_MAX_DOC_TOKENS))
     docs = [
         (0, f"{span_a} left {span_b} tail0"),
         (1, f"{span_a} tail1"),

@@ -1,5 +1,5 @@
 """Python-reference replication and invariants for the graph-ANN
-family in queries/llm_ext7.py: graph_nn_descent (the full stride-init
+family in queries/graph.py: graph_nn_descent (the full stride-init
 + 2-round NN-Descent loop recomputed in plain Python over the sf0.001
 embeddings, plus the per-node dominance invariant),
 graph_greedy_search / graph_beam_sweep / graph_knn_insert (the full
@@ -15,7 +15,23 @@ import math
 import pytest
 
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries import llm_ext7 as x7
+from nats_stream_processor_spark.queries.graph import (
+    GI_M,
+    GRP_DROP_FLOOR_PPM,
+    GR_B,
+    GR_M,
+    GS_BEAM,
+    GS_ENTRIES,
+    GS_HOPS,
+    GS_NQ,
+    GS_QOFF,
+    GS_QSTRIDE,
+    GS_SWEEP_BEAMS,
+    GS_TOPK,
+    ND_K,
+    ND_ROUNDS,
+    ND_STRIDE,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,8 +58,8 @@ def _python_nn_descent(vecs):
     n = len(vecs)
     init = set()
     for u in vecs:
-        for j in range(1, x7.ND_K + 1):
-            w = (u + j * x7.ND_STRIDE) % n
+        for j in range(1, ND_K + 1):
+            w = (u + j * ND_STRIDE) % n
             w = (w + (1 if w == u else 0)) % n
             if w != u:
                 init.add((u, w))
@@ -59,7 +75,7 @@ def _python_nn_descent(vecs):
         stats.append((r, n, q if tot >= 0 else -q))
 
     stat(0, edges)
-    for t in range(1, x7.ND_ROUNDS + 1):
+    for t in range(1, ND_ROUNDS + 1):
         by_u = {}
         for (u, w) in edges:
             by_u.setdefault(u, set()).add(w)
@@ -77,7 +93,7 @@ def _python_nn_descent(vecs):
             scored.setdefault(u, []).append((-ppm(u, w), w))
         edges = {}
         for u, lst in scored.items():
-            for negppm, w in sorted(lst)[:x7.ND_K]:
+            for negppm, w in sorted(lst)[:ND_K]:
                 edges[(u, w)] = -negppm
         stat(t, edges)
     return stats
@@ -103,7 +119,7 @@ def test_nn_descent_mean_similarity_rises_on_fixture(spark):
     improve at least once here, or the refinement is vacuous."""
     rows = registry.REGISTRY["graph_nn_descent"].fn(spark, SF).collect()
     means = [r.mean_sim_ppm for r in sorted(rows, key=lambda r: r.round)]
-    assert len(means) == x7.ND_ROUNDS + 1
+    assert len(means) == ND_ROUNDS + 1
     assert all(b >= a for a, b in zip(means, means[1:])), means
     assert means[-1] > means[0], "no refinement happened at all"
 
@@ -131,8 +147,8 @@ def test_nn_descent_per_node_dominance_invariant(spark):
     n = len(vecs)
     edges = set()
     for u in vecs:
-        for j in range(1, x7.ND_K + 1):
-            w = (u + j * x7.ND_STRIDE) % n
+        for j in range(1, ND_K + 1):
+            w = (u + j * ND_STRIDE) % n
             w = (w + (1 if w == u else 0)) % n
             if w != u:
                 edges.add((u, w))
@@ -144,7 +160,7 @@ def test_nn_descent_per_node_dominance_invariant(spark):
         return {u: sorted(v, reverse=True) for u, v in d.items()}
 
     prev = by_node(edges)
-    for _t in range(1, x7.ND_ROUNDS + 1):
+    for _t in range(1, ND_ROUNDS + 1):
         by_u = {}
         for (u, w) in edges:
             by_u.setdefault(u, set()).add(w)
@@ -161,7 +177,7 @@ def test_nn_descent_per_node_dominance_invariant(spark):
             scored.setdefault(u, []).append((-ppm(u, w), w))
         edges = set()
         for u, lst in scored.items():
-            for negppm, w in sorted(lst)[:x7.ND_K]:
+            for negppm, w in sorted(lst)[:ND_K]:
                 edges.add((u, w))
         cur = by_node(edges)
         for u, old in prev.items():
@@ -197,13 +213,13 @@ def _python_graph_und(vecs, ppm):
     n = len(vecs)
     init = set()
     for u in vecs:
-        for j in range(1, x7.ND_K + 1):
-            w = (u + j * x7.ND_STRIDE) % n
+        for j in range(1, ND_K + 1):
+            w = (u + j * ND_STRIDE) % n
             w = (w + (1 if w == u else 0)) % n
             if w != u:
                 init.add((u, w))
     edges = set(init)
-    for _t in range(1, x7.ND_ROUNDS + 1):
+    for _t in range(1, ND_ROUNDS + 1):
         by_u = {}
         for (u, w) in edges:
             by_u.setdefault(u, set()).add(w)
@@ -220,7 +236,7 @@ def _python_graph_und(vecs, ppm):
             scored.setdefault(u, []).append((-ppm(u, w), w))
         edges = set()
         for u, lst in scored.items():
-            for _s, w in sorted(lst)[:x7.ND_K]:
+            for _s, w in sorted(lst)[:ND_K]:
                 edges.add((u, w))
     und = {}
     for (u, w) in edges | init:
@@ -256,18 +272,18 @@ def _python_greedy_search(vecs):
     ppm = _ppm_fn(vecs)
     und = _python_graph_und(vecs, ppm)
     n = len(vecs)
-    qids = [(x7.GS_QOFF + x7.GS_QSTRIDE * i) % n for i in range(x7.GS_NQ)]
-    entries = [j * (n // x7.GS_ENTRIES) for j in range(x7.GS_ENTRIES)]
+    qids = [(GS_QOFF + GS_QSTRIDE * i) % n for i in range(GS_NQ)]
+    entries = [j * (n // GS_ENTRIES) for j in range(GS_ENTRIES)]
     out = []
     for q, qid in enumerate(qids):
         seen = _python_beam(und, lambda w: ppm(qid, w), entries, qid,
-                            x7.GS_BEAM, x7.GS_HOPS)
-        found = set(sorted(seen, key=lambda k: (-seen[k], k))[:x7.GS_TOPK])
+                            GS_BEAM, GS_HOPS)
+        found = set(sorted(seen, key=lambda k: (-seen[k], k))[:GS_TOPK])
         exact = set(sorted((u for u in vecs if u != qid),
-                           key=lambda u: (-ppm(qid, u), u))[:x7.GS_TOPK])
+                           key=lambda u: (-ppm(qid, u), u))[:GS_TOPK])
         hits = len(found & exact)
         out.append((q, len(seen), hits,
-                    hits * 1000000 // x7.GS_TOPK, max(seen.values())))
+                    hits * 1000000 // GS_TOPK, max(seen.values())))
     return out
 
 
@@ -290,11 +306,11 @@ def test_greedy_search_output_invariants(spark):
     embs = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     n = len(embs)
     rows = registry.REGISTRY["graph_greedy_search"].fn(spark, SF).collect()
-    assert [r.query_id for r in rows] == list(range(x7.GS_NQ))
+    assert [r.query_id for r in rows] == list(range(GS_NQ))
     for r in rows:
         assert 0 < r.n_visited < n
-        assert 0 <= r.n_hits <= x7.GS_TOPK
-        assert r.recall_ppm == r.n_hits * 1000000 // x7.GS_TOPK
+        assert 0 <= r.n_hits <= GS_TOPK
+        assert r.recall_ppm == r.n_hits * 1000000 // GS_TOPK
 
 
 # --------------------------------------------------- beam-width sweep
@@ -306,23 +322,23 @@ def test_beam_sweep_matches_python_reference(spark):
     ppm = _ppm_fn(vecs)
     und = _python_graph_und(vecs, ppm)
     n = len(vecs)
-    qids = [(x7.GS_QOFF + x7.GS_QSTRIDE * i) % n for i in range(x7.GS_NQ)]
-    entries = [j * (n // x7.GS_ENTRIES) for j in range(x7.GS_ENTRIES)]
+    qids = [(GS_QOFF + GS_QSTRIDE * i) % n for i in range(GS_NQ)]
+    entries = [j * (n // GS_ENTRIES) for j in range(GS_ENTRIES)]
     expect = []
-    for beam in x7.GS_SWEEP_BEAMS:
+    for beam in GS_SWEEP_BEAMS:
         visited = hits = 0
         for qid in qids:
             seen = _python_beam(und, lambda w: ppm(qid, w), entries, qid,
-                                beam, x7.GS_HOPS)
+                                beam, GS_HOPS)
             found = set(sorted(seen,
-                               key=lambda k: (-seen[k], k))[:x7.GS_TOPK])
+                               key=lambda k: (-seen[k], k))[:GS_TOPK])
             exact = set(sorted((u for u in vecs if u != qid),
                                key=lambda u: (-ppm(qid, u), u))
-                        [:x7.GS_TOPK])
+                        [:GS_TOPK])
             visited += len(seen)
             hits += len(found & exact)
         expect.append((beam, visited, hits,
-                       hits * 1000000 // (x7.GS_NQ * x7.GS_TOPK)))
+                       hits * 1000000 // (GS_NQ * GS_TOPK)))
     got = [(r.beam, r.n_visited, r.n_hits, r.recall_ppm)
            for r in registry.REGISTRY["graph_beam_sweep"].fn(
                spark, SF).collect()]
@@ -337,14 +353,14 @@ def test_beam_sweep_curve_shape_on_fixture(spark):
     visited > 0 and recall consistency.)"""
     rows = sorted(registry.REGISTRY["graph_beam_sweep"].fn(
         spark, SF).collect(), key=lambda r: r.beam)
-    assert [r.beam for r in rows] == list(x7.GS_SWEEP_BEAMS)
+    assert [r.beam for r in rows] == list(GS_SWEEP_BEAMS)
     vis = [r.n_visited for r in rows]
     rec = [r.recall_ppm for r in rows]
     assert all(b > a for a, b in zip(vis, vis[1:])), vis
     assert all(b >= a for a, b in zip(rec, rec[1:])), rec
     for r in rows:
         assert r.recall_ppm == r.n_hits * 1000000 // (
-            x7.GS_NQ * x7.GS_TOPK)
+            GS_NQ * GS_TOPK)
 
 
 # ---------------------------------------------- incremental insertion
@@ -354,21 +370,21 @@ def test_knn_insert_matches_python_reference(spark):
     embs = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     vecs = {r.vec_id: [float(x) for x in r.embedding] for r in embs}
     nf = len(vecs)
-    base = {u: v for u, v in vecs.items() if u < nf - x7.GI_M}
+    base = {u: v for u, v in vecs.items() if u < nf - GI_M}
     ppm = _ppm_fn(vecs)  # norms over the FULL table (queries included)
     und = _python_graph_und(base, ppm)
     nb = len(base)
-    entries = [j * (nb // x7.GS_ENTRIES) for j in range(x7.GS_ENTRIES)]
+    entries = [j * (nb // GS_ENTRIES) for j in range(GS_ENTRIES)]
     expect = []
-    for qid in sorted(u for u in vecs if u >= nf - x7.GI_M):
+    for qid in sorted(u for u in vecs if u >= nf - GI_M):
         seen = _python_beam(und, lambda w: ppm(qid, w), entries, qid,
-                            x7.GS_BEAM, x7.GS_HOPS)
-        edges = sorted(seen, key=lambda k: (-seen[k], k))[:x7.ND_K]
+                            GS_BEAM, GS_HOPS)
+        edges = sorted(seen, key=lambda k: (-seen[k], k))[:ND_K]
         exact = set(sorted(base, key=lambda u: (-ppm(qid, u), u))
-                    [:x7.ND_K])
+                    [:ND_K])
         hits = len(set(edges) & exact)
         expect.append((qid, len(seen), hits,
-                       hits * 1000000 // x7.ND_K,
+                       hits * 1000000 // ND_K,
                        _trunc_div(sum(seen[e] for e in edges),
                                   len(edges))))
     got = [(r.vec_id, r.n_visited, r.n_hits, r.recall_ppm,
@@ -384,12 +400,12 @@ def test_knn_insert_invariants(spark):
     embs = spark.read.parquet(f"{SF}/embeddings.parquet").collect()
     nf = len(embs)
     rows = registry.REGISTRY["graph_knn_insert"].fn(spark, SF).collect()
-    assert len(rows) == x7.GI_M
-    assert [r.vec_id for r in rows] == list(range(nf - x7.GI_M, nf))
+    assert len(rows) == GI_M
+    assert [r.vec_id for r in rows] == list(range(nf - GI_M, nf))
     for r in rows:
-        assert 0 < r.n_visited < nf - x7.GI_M
-        assert 0 <= r.n_hits <= x7.ND_K
-        assert r.recall_ppm == r.n_hits * 1000000 // x7.ND_K
+        assert 0 < r.n_visited < nf - GI_M
+        assert 0 <= r.n_hits <= ND_K
+        assert r.recall_ppm == r.n_hits * 1000000 // ND_K
 
 
 # ------------------------------------------------- rebuild decision
@@ -401,36 +417,36 @@ def _python_rebuild_decision(vecs):
     its predecessors, with the scoring table growing too."""
     nf = len(vecs)
     base = {u: v for u, v in vecs.items()
-            if u < nf - x7.GR_B * x7.GR_M}
+            if u < nf - GR_B * GR_M}
     ppm = _ppm_fn(vecs)  # norms over the FULL table
     und = _python_graph_und(base, ppm)
     cur_nodes = set(base)
     rows = []
-    for b in range(1, x7.GR_B + 1):
-        lo, hi = x7.GR_B - b + 1, x7.GR_B - b
+    for b in range(1, GR_B + 1):
+        lo, hi = GR_B - b + 1, GR_B - b
         batch = sorted(u for u in vecs
-                       if nf - lo * x7.GR_M <= u < nf - hi * x7.GR_M)
+                       if nf - lo * GR_M <= u < nf - hi * GR_M)
         n_cur = len(cur_nodes)
-        entries = [j * (n_cur // x7.GS_ENTRIES)
-                   for j in range(x7.GS_ENTRIES)]
+        entries = [j * (n_cur // GS_ENTRIES)
+                   for j in range(GS_ENTRIES)]
         visited = hits = sim_sum = edge_cnt = 0
         new_edges = []
         for qid in batch:
             seen = _python_beam(und, lambda w: ppm(qid, w), entries,
-                                qid, x7.GS_BEAM, x7.GS_HOPS)
-            edges = sorted(seen, key=lambda k: (-seen[k], k))[:x7.ND_K]
+                                qid, GS_BEAM, GS_HOPS)
+            edges = sorted(seen, key=lambda k: (-seen[k], k))[:ND_K]
             exact = set(sorted(cur_nodes,
                                key=lambda u: (-ppm(qid, u), u))
-                        [:x7.ND_K])
+                        [:ND_K])
             visited += len(seen)
             hits += len(set(edges) & exact)
             sim_sum += sum(seen[e] for e in edges)
             edge_cnt += len(edges)
             new_edges += [(qid, e) for e in edges]
         rows.append((b, visited, hits,
-                     hits * 1000000 // (x7.GR_M * x7.ND_K),
+                     hits * 1000000 // (GR_M * ND_K),
                      _trunc_div(sim_sum, edge_cnt)))
-        if b < x7.GR_B:
+        if b < GR_B:
             for (u, w) in new_edges:
                 und.setdefault(u, set()).add(w)
                 und.setdefault(w, set()).add(u)
@@ -458,15 +474,15 @@ def test_rebuild_decision_invariants(spark):
     nf = len(embs)
     rows = registry.REGISTRY["graph_rebuild_decision"].fn(
         spark, SF).collect()
-    assert [r.batch for r in rows] == list(range(1, x7.GR_B + 1))
+    assert [r.batch for r in rows] == list(range(1, GR_B + 1))
     first = rows[0].recall_ppm
     assert rows[0].recall_drop_ppm == 0
     for i, r in enumerate(rows):
-        n_cur = nf - (x7.GR_B - i) * x7.GR_M
-        assert 0 < r.n_visited < x7.GR_M * n_cur
-        assert 0 <= r.n_hits <= x7.GR_M * x7.ND_K
+        n_cur = nf - (GR_B - i) * GR_M
+        assert 0 < r.n_visited < GR_M * n_cur
+        assert 0 <= r.n_hits <= GR_M * ND_K
         assert r.recall_ppm == r.n_hits * 1000000 // (
-            x7.GR_M * x7.ND_K)
+            GR_M * ND_K)
         assert r.recall_drop_ppm == first - r.recall_ppm
 
 
@@ -480,19 +496,19 @@ def test_rebuild_policy_matches_curve(spark):
         spark, SF).collect()
     nf = spark.read.parquet(f"{SF}/embeddings.parquet").count()
     crossing = [r.batch for r in curve
-                if r.recall_drop_ppm >= x7.GRP_DROP_FLOOR_PPM]
+                if r.recall_drop_ppm >= GRP_DROP_FLOOR_PPM]
     rb = min(crossing) if crossing else None
-    vecs = None if rb is None else nf - (x7.GR_B - rb) * x7.GR_M
+    vecs = None if rb is None else nf - (GR_B - rb) * GR_M
     rows = registry.REGISTRY["graph_rebuild_policy"].fn(
         spark, SF).collect()
     assert len(rows) == 1
     p = rows[0]
-    assert p.drop_floor_ppm == x7.GRP_DROP_FLOOR_PPM
+    assert p.drop_floor_ppm == GRP_DROP_FLOOR_PPM
     assert p.max_drop_ppm == max(r.recall_drop_ppm for r in curve)
     assert p.rebuild_after_batch == rb
     assert p.index_vectors_at_decision == vecs
     assert p.rebuild_edge_budget == (None if vecs is None
-                                     else vecs * x7.ND_K)
+                                     else vecs * ND_K)
     # the sf0.001 fixture actually crosses the floor — the decision row
     # is exercised non-vacuously (the flat-curve NULL regime is covered
     # at sf0.01 by the oracle-parity sweep)

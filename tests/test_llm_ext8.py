@@ -1,5 +1,5 @@
 """Plain-Python replication and cross-operator consistency for
-media_shot_curation (queries/llm_ext8.py)."""
+media_shot_curation (queries/media.py)."""
 
 from __future__ import annotations
 
@@ -8,8 +8,27 @@ import re
 import pytest
 
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries import llm_ext6 as x6
-from nats_stream_processor_spark.queries import llm_ext8 as x8
+from nats_stream_processor_spark.queries.media import (
+    SCENE_THRESH,
+    scene_frame_features,
+)
+from nats_stream_processor_spark.queries.relational import (
+    IOV_CHUNK_US,
+    IOV_TYPE_GAP_US,
+    IOV_USER_GAP_US,
+    _sessionize,
+    _sessionize_chunked,
+)
+from nats_stream_processor_spark.queries.events import COHORT_EPOCH
+from nats_stream_processor_spark.queries.media import (
+    SHOT_MIN_DOC_TOKENS,
+    SHOT_MIN_FEAT,
+    SHOT_MIN_FRAMES,
+    ZL_BITS,
+    ZL_FILES,
+    ZL_PROBES,
+    ZL_PROBE_W,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -28,13 +47,13 @@ def _python_shot_curation(docs):
     for doc_id, text in docs:
         p = text.encode("utf-8")
         toks = len(re.findall(r"[a-z0-9]+", text.lower()))
-        feats = [f for _j, f in x6.scene_frame_features(p)]
+        feats = [f for _j, f in scene_frame_features(p)]
         shots = {}
         shot = 0
         prev = None
         for f in feats:
             ad = 0 if prev is None else abs(f - prev)
-            if ad >= x6.SCENE_THRESH:
+            if ad >= SCENE_THRESH:
                 shot += 1
             st = shots.setdefault(shot, [0, 0, 0])
             st[0] += 1       # n_frames
@@ -44,9 +63,9 @@ def _python_shot_curation(docs):
         for s in sorted(shots):
             nf, fs, sd = shots[s]
             fm = fs // nf    # nonneg: truncation == floor
-            keep = int(nf >= x8.SHOT_MIN_FRAMES
-                       and fm >= x8.SHOT_MIN_FEAT
-                       and toks >= x8.SHOT_MIN_DOC_TOKENS)
+            keep = int(nf >= SHOT_MIN_FRAMES
+                       and fm >= SHOT_MIN_FEAT
+                       and toks >= SHOT_MIN_DOC_TOKENS)
             out.append((doc_id, s, nf, fm, sd, toks, keep))
     return sorted(out)
 
@@ -91,16 +110,16 @@ def test_shot_curation_decision_genuinely_splits(spark):
     kept = [r for r in rows if r.keep == 1]
     dropped = [r for r in rows if r.keep == 0]
     assert kept and dropped
-    assert any(r.n_frames < x8.SHOT_MIN_FRAMES for r in dropped)
-    assert any(r.n_frames >= x8.SHOT_MIN_FRAMES
-               and r.feat_mean < x8.SHOT_MIN_FEAT for r in dropped)
-    assert any(r.n_frames >= x8.SHOT_MIN_FRAMES
-               and r.feat_mean >= x8.SHOT_MIN_FEAT
-               and r.doc_tokens < x8.SHOT_MIN_DOC_TOKENS for r in dropped)
+    assert any(r.n_frames < SHOT_MIN_FRAMES for r in dropped)
+    assert any(r.n_frames >= SHOT_MIN_FRAMES
+               and r.feat_mean < SHOT_MIN_FEAT for r in dropped)
+    assert any(r.n_frames >= SHOT_MIN_FRAMES
+               and r.feat_mean >= SHOT_MIN_FEAT
+               and r.doc_tokens < SHOT_MIN_DOC_TOKENS for r in dropped)
     for r in kept:
-        assert r.n_frames >= x8.SHOT_MIN_FRAMES
-        assert r.feat_mean >= x8.SHOT_MIN_FEAT
-        assert r.doc_tokens >= x8.SHOT_MIN_DOC_TOKENS
+        assert r.n_frames >= SHOT_MIN_FRAMES
+        assert r.feat_mean >= SHOT_MIN_FEAT
+        assert r.doc_tokens >= SHOT_MIN_DOC_TOKENS
 
 
 # ---------------------------------------------------- cohort retention
@@ -111,7 +130,7 @@ def test_cohort_retention_matches_python_reference(spark):
 
     ev = (spark.read.parquet(f"{SF}/events.parquet")
           .select("user_id", "ts").collect())
-    epoch = datetime.date.fromisoformat(x8.COHORT_EPOCH)
+    epoch = datetime.date.fromisoformat(COHORT_EPOCH)
     uw = {(r.user_id, (r.ts.date() - epoch).days // 7) for r in ev}
     cohort = {}
     for u, w in uw:
@@ -171,13 +190,13 @@ def test_zorder_report_matches_python_reference(spark):
     ps = [(r.l_partkey, r.l_suppkey) for r in li]
     minp, maxp = min(p for p, _ in ps), max(p for p, _ in ps)
     mins, maxs = min(s for _, s in ps), max(s for _, s in ps)
-    g = (1 << x8.ZL_BITS) - 1
-    fdiv = (1 << x8.ZL_BITS) // x8.ZL_FILES
-    zdiv = (1 << (2 * x8.ZL_BITS)) // x8.ZL_FILES
+    g = (1 << ZL_BITS) - 1
+    fdiv = (1 << ZL_BITS) // ZL_FILES
+    zdiv = (1 << (2 * ZL_BITS)) // ZL_FILES
 
     def interleave(x, y):
         z = 0
-        for i in range(x8.ZL_BITS):
+        for i in range(ZL_BITS):
             z += ((x >> i) & 1) << (2 * i)
             z += ((y >> i) & 1) << (2 * i + 1)
         return z
@@ -197,16 +216,16 @@ def test_zorder_report_matches_python_reference(spark):
                 b[1] = max(b[1], x)
                 b[2] = min(b[2], y)
                 b[3] = max(b[3], y)
-    probes = [((1 << x8.ZL_BITS) // x8.ZL_PROBES * i
-               + (1 << x8.ZL_BITS) // (2 * x8.ZL_PROBES))
-              for i in range(x8.ZL_PROBES)]
+    probes = [((1 << ZL_BITS) // ZL_PROBES * i
+               + (1 << ZL_BITS) // (2 * ZL_PROBES))
+              for i in range(ZL_PROBES)]
     expect = {}
     for strat in ("linear", "zorder"):
         boxes = [b for (s2, _), b in st.items() if s2 == strat]
         xh = sum(1 for b in boxes for lo in probes
-                 if lo + x8.ZL_PROBE_W - 1 >= b[0] and lo <= b[1])
+                 if lo + ZL_PROBE_W - 1 >= b[0] and lo <= b[1])
         yh = sum(1 for b in boxes for lo in probes
-                 if lo + x8.ZL_PROBE_W - 1 >= b[2] and lo <= b[3])
+                 if lo + ZL_PROBE_W - 1 >= b[2] and lo <= b[3])
         expect[strat] = (len(boxes), xh, yh)
     got = {r.strategy: (r.n_files, r.x_probe_file_hits,
                         r.y_probe_file_hits)
@@ -353,8 +372,8 @@ def test_interval_overlap_matches_python_reference(spark):
             out.append((k, start, prev))
         return out
 
-    us = sessions(lambda r: r.user_id, x8.IOV_USER_GAP_US)
-    tb = sessions(lambda r: r.event_type, x8.IOV_TYPE_GAP_US)
+    us = sessions(lambda r: r.user_id, IOV_USER_GAP_US)
+    tb = sessions(lambda r: r.event_type, IOV_TYPE_GAP_US)
     pairs = set()
     for (u, s1, e1) in us:
         for (t, s2, e2) in tb:
@@ -386,14 +405,14 @@ def test_chunked_sessionize_equals_single_pass(spark):
     boundary and the merge pass does almost all the work. Checked on
     the real events table for both sides' keys."""
     ev = registry.table(spark, SF, "events")
-    for key, gap in (("event_type", x8.IOV_TYPE_GAP_US),
-                     ("user_id", x8.IOV_USER_GAP_US)):
+    for key, gap in (("event_type", IOV_TYPE_GAP_US),
+                     ("user_id", IOV_USER_GAP_US)):
         single = sorted(
             (r[0], r.start_us, r.end_us)
-            for r in x8._sessionize(ev, key, gap, key).collect())
-        for chunk_us in (x8.IOV_CHUNK_US, gap // 3 + 1):
+            for r in _sessionize(ev, key, gap, key).collect())
+        for chunk_us in (IOV_CHUNK_US, gap // 3 + 1):
             chunked = sorted(
                 (r[0], r.start_us, r.end_us)
-                for r in x8._sessionize_chunked(
+                for r in _sessionize_chunked(
                     ev, key, gap, key, chunk_us).collect())
             assert chunked == single, (key, chunk_us)

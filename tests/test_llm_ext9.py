@@ -1,5 +1,5 @@
 """Correctness of the mergeable frequent-items workflow
-(queries/llm_ext9.py): fixture replication against a plain-Python
+(queries/sketches.py): fixture replication against a plain-Python
 exact count, a synthetic high-cardinality corpus that forces the
 PRUNING regime (the fixtures' 31-token vocabulary never truncates a
 summary), a flat-distribution corpus that forces the exactness-guard
@@ -16,7 +16,12 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from nats_stream_processor_spark import registry
-from nats_stream_processor_spark.queries import llm_ext9 as x9
+from nats_stream_processor_spark.queries.events import SW_HOURS
+from nats_stream_processor_spark.queries.curation import WR_K, _pf_batch
+from nats_stream_processor_spark.queries.sketches import (
+    FI_TOP,
+    _fi_batch_summary,
+)
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,7 +47,7 @@ def test_freq_items_matches_exact_on_fixture(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet").collect()
     tokens = [t for r in docs for t in _tokenize(r.text)]
     expect = [(i + 1, tok, n)
-              for i, (tok, n) in enumerate(_exact_topk(tokens, x9.FI_TOP))]
+              for i, (tok, n) in enumerate(_exact_topk(tokens, FI_TOP))]
     got = [(r.rank, r.token, r.n_occ)
            for r in registry.REGISTRY["sketch_freq_items_topk"].fn(
                spark, SF).collect()]
@@ -80,7 +85,7 @@ def test_freq_items_pruning_regime_is_exact(spark, tmp_path):
     sf_dir = _write_docs(spark, tmp_path, texts)
     tokens = [t for txt in texts for t in _tokenize(txt)]
     expect = [(i + 1, tok, n)
-              for i, (tok, n) in enumerate(_exact_topk(tokens, x9.FI_TOP))]
+              for i, (tok, n) in enumerate(_exact_topk(tokens, FI_TOP))]
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch",
                          "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "400")
@@ -93,7 +98,7 @@ def test_freq_items_pruning_regime_is_exact(spark, tmp_path):
         # the deployed kernel over the same 400-row batching.
         errs, ests = 0, {}
         for i in range(0, len(tokens), 400):
-            kept, err = x9._fi_batch_summary(
+            kept, err = _fi_batch_summary(
                 pd.Series(tokens[i:i + 400]).value_counts())
             errs += err
             for tok, est in kept.items():
@@ -122,12 +127,12 @@ def test_freq_items_fallback_on_flat_distribution(spark, tmp_path):
         got = [(r.rank, r.token, r.n_occ)
                for r in registry.REGISTRY["sketch_freq_items_topk"].fn(
                    spark, sf_dir).collect()]
-        expect = [(i + 1, f"w{i:05d}", 1) for i in range(x9.FI_TOP)]
+        expect = [(i + 1, f"w{i:05d}", 1) for i in range(FI_TOP)]
         assert got == expect
         # The guard really is on the fallback side of the boundary:
         # every 100-row batch truncates 100-64 keys with error 1 each.
         assert 1 <= sum(
-            x9._fi_batch_summary(pd.Series([f"t{j}" for j in
+            _fi_batch_summary(pd.Series([f"t{j}" for j in
                                             range(100)]).value_counts())[1]
             for _ in range(1)), "flat batches must truncate"
     finally:
@@ -144,7 +149,7 @@ def _fi_reference(batches, k, t):
     for batch in batches:
         if not batch:
             continue
-        kept, err = x9._fi_batch_summary(pd.Series(batch).value_counts(),
+        kept, err = _fi_batch_summary(pd.Series(batch).value_counts(),
                                          k=k)
         derr += err
         for key, est in kept.items():
@@ -260,7 +265,7 @@ def test_pareto_local_merge_law(points, n_batches):
             continue
         pdf = pd.DataFrame(chunk, columns=["doc_id", "x", "y"])
         survivors.extend(
-            tuple(r) for r in x9._pf_batch(pdf).itertuples(index=False))
+            tuple(r) for r in _pf_batch(pdf).itertuples(index=False))
     assert _brute_skyline(survivors) == expect
 
 
@@ -288,7 +293,7 @@ def _py_reservoir(docs, k):
 def test_weighted_reservoir_matches_python_reference(spark):
     docs = [(r.doc_id, r.text) for r in
             spark.read.parquet(f"{SF}/documents.parquet").collect()]
-    expect = _py_reservoir(docs, x9.WR_K)
+    expect = _py_reservoir(docs, WR_K)
     got = [(r.rank, r.doc_id, r.weight, r.key_micro)
            for r in registry.REGISTRY["sample_weighted_reservoir"].fn(
                spark, SF).collect()]
@@ -307,12 +312,12 @@ def test_weighted_reservoir_pulls_heavy_weights(spark, tmp_path):
     sf_dir = _write_docs(spark, tmp_path, texts)
     rows = registry.REGISTRY["sample_weighted_reservoir"].fn(
         spark, sf_dir).collect()
-    assert len(rows) == x9.WR_K
+    assert len(rows) == WR_K
     got_ids = {r.doc_id for r in rows}
     assert set(range(5)) <= got_ids, (
         "a 400x-weight doc missed the sample")
     assert all(r.weight > 0 for r in rows)
-    assert [r.rank for r in rows] == list(range(1, x9.WR_K + 1))
+    assert [r.rank for r in rows] == list(range(1, WR_K + 1))
 
 
 # -------------------------------------- sliding-window HLL distinct
@@ -332,9 +337,9 @@ def test_sliding_distinct_matches_python_reference(spark):
     hmax = max(by_hour)
     expect = []
     wins = sorted({w for h in by_hour
-                   for w in range(h, min(h + x9.SW_HOURS - 1, hmax) + 1)})
+                   for w in range(h, min(h + SW_HOURS - 1, hmax) + 1)})
     for w in wins:
-        hrs = [h for h in by_hour if w - (x9.SW_HOURS - 1) <= h <= w]
+        hrs = [h for h in by_hour if w - (SW_HOURS - 1) <= h <= w]
         users = set().union(*(by_hour[h] for h in hrs))
         expect.append((w, len(hrs), len(users), True))
     got = [(r.window_hour, r.n_hours, r.exact_users,
@@ -345,4 +350,4 @@ def test_sliding_distinct_matches_python_reference(spark):
     # the sketch estimate held the 5% contract on every window (the
     # boolean is computed Spark-side; the oracle pins it TRUE)
     assert all(r[3] for r in got)
-    assert all(1 <= r[1] <= x9.SW_HOURS for r in got)
+    assert all(1 <= r[1] <= SW_HOURS for r in got)

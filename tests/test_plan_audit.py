@@ -15,7 +15,7 @@ from contextlib import redirect_stdout
 
 import pytest
 
-from nats_stream_processor_spark import registry
+from nats_stream_processor_spark import partitioning, registry
 
 SF = "/root/testdata/sf0.001"
 
@@ -146,7 +146,7 @@ def test_substring_spans_shuffle_excludes_text(spark):
     (gram/span_id, doc_id) — never the document text. (The round-robin
     spread() exchange before the per-row hashing legitimately carries
     text locally; at real scale the scan already yields many splits and
-    that repartition is a no-op — registry.spread.) Text crossing the
+    that repartition is a no-op — partitioning.spread.) Text crossing the
     hash-partitioned aggregation exchange would ship the full 100 TB
     corpus through the shuffle."""
     p = plan_str(spark, "dedup_substring_spans")
@@ -180,16 +180,16 @@ def test_spread_is_gated_on_input_partitioning(spark):
     included, through one pointless exchange)."""
     dp = spark.sparkContext.defaultParallelism
     single = spark.read.parquet(f"{SF}/documents.parquet")
-    assert registry.spread(single) is not single  # 1 split -> repartition
-    assert registry.spread(single).rdd.getNumPartitions() == dp
+    assert partitioning.spread(single) is not single  # 1 split -> repartition
+    assert partitioning.spread(single).rdd.getNumPartitions() == dp
 
     pre = single.repartition(dp * 2)
-    assert registry.spread(pre) is pre  # already wide -> identity
+    assert partitioning.spread(pre) is pre  # already wide -> identity
 
     # Session kill-switch: a real cluster's bench can disable it outright.
     spark.conf.set("spark.nats_spark.spread.enabled", "false")
     try:
-        assert registry.spread(single) is single
+        assert partitioning.spread(single) is single
     finally:
         spark.conf.set("spark.nats_spark.spread.enabled", "true")
 
@@ -211,35 +211,35 @@ def test_scan_partition_estimate_matches_planner(spark):
     what the planner actually produces, for every driver table."""
     for t in ("documents", "embeddings", "lineitem", "events", "orders"):
         df = spark.read.parquet(f"{SF}/{t}.parquet")
-        assert registry._is_scan_narrow_plan(df)
-        est = registry._estimated_scan_partitions(spark, df)
+        assert partitioning._is_scan_narrow_plan(df)
+        est = partitioning._estimated_scan_partitions(spark, df)
         assert est == df.rdd.getNumPartitions(), t
     # narrow transforms keep the fast path; wide ones must leave it
     nr = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id")
-    assert registry._is_scan_narrow_plan(nr)
-    assert not registry._is_scan_narrow_plan(nr.repartition(4))
-    assert not registry._is_scan_narrow_plan(nr.groupBy("doc_id").count())
+    assert partitioning._is_scan_narrow_plan(nr)
+    assert not partitioning._is_scan_narrow_plan(nr.repartition(4))
+    assert not partitioning._is_scan_narrow_plan(nr.groupBy("doc_id").count())
 
 
 def test_scan_estimate_memos_stay_bounded(tmp_path):
     """The scan-size memos behind spread() are LRU-bounded: a long run of
     distinct file sets (a long-lived session) never grows them past
     SCAN_CACHE_ENTRIES, and every lookup still returns the right size."""
-    cap = registry.SCAN_CACHE_ENTRIES
+    cap = partitioning.SCAN_CACHE_ENTRIES
     for i in range(3 * cap):
         f = tmp_path / f"part-{i}.parquet"
         f.write_bytes(b"x" * (i + 1))
         files = (f"file:{f}",)
-        assert registry._file_sizes(files) == (i + 1,)
-        registry._packed_partitions((i + 1,), 128 << 20, 4 << 20, 4)
-        assert registry._file_sizes.cache_info().currsize <= cap
-        assert registry._packed_partitions.cache_info().currsize <= cap
+        assert partitioning._file_sizes(files) == (i + 1,)
+        partitioning._packed_partitions((i + 1,), 128 << 20, 4 << 20, 4)
+        assert partitioning._file_sizes.cache_info().currsize <= cap
+        assert partitioning._packed_partitions.cache_info().currsize <= cap
     # a failed stat raises instead of caching a stale None
     missing = (f"file:{tmp_path}/gone.parquet",)
     with pytest.raises(OSError):
-        registry._file_sizes(missing)
+        partitioning._file_sizes(missing)
     (tmp_path / "gone.parquet").write_bytes(b"ab")
-    assert registry._file_sizes(missing) == (2,)
+    assert partitioning._file_sizes(missing) == (2,)
 
 
 def test_chunking_is_map_only_before_sort(spark):
@@ -420,7 +420,7 @@ def test_bfs_is_union_loop_with_depth_literal(spark):
     """The recursive BFS must plan Spark 4's UnionLoop (native recursive
     CTE — no driver-side iteration) with the BFS_MAX_DEPTH literal
     bounding the frontier filter."""
-    from nats_stream_processor_spark.queries.llm_ext3 import BFS_MAX_DEPTH
+    from nats_stream_processor_spark.queries.graph import BFS_MAX_DEPTH
     p = plan_str(spark, "graph_knn_bfs_recursive")
     assert "UnionLoop" in p and "UnionLoopRef" in p
     assert re.search(rf"lvl#\d+ < {BFS_MAX_DEPTH}\)", p), p[:600]
@@ -458,7 +458,7 @@ def test_longest_streak_is_single_user_window(spark):
     assert "windowspecdefinition(user_id" in p
 
 
-# ----------------- round-7 operators (queries/llm_ext4.py) -----------------
+# ---------------------- fingerprinting / sampling / tokenizers ----------------------
 
 
 def test_winnowing_windows_per_doc_and_joins_on_hash(spark):
@@ -848,13 +848,17 @@ def test_interval_overlap_burst_sessionization_is_chunked(spark):
     hashex = re.findall(r"hashpartitioning\(([^)]*)\)", p)
     assert any("event_type" in h and "chunk" in h for h in hashex), hashex
 
-    from nats_stream_processor_spark.queries import llm_ext8 as x8
+    from nats_stream_processor_spark.queries.relational import (
+        IOV_CHUNK_US,
+        IOV_TYPE_GAP_US,
+        _sessionize_chunked,
+    )
     ev = registry.table(spark, SF, "events")
     buf = io.StringIO()
     with redirect_stdout(buf):
-        x8._sessionize_chunked(ev, "event_type", x8.IOV_TYPE_GAP_US,
+        _sessionize_chunked(ev, "event_type", IOV_TYPE_GAP_US,
                                "event_type",
-                               x8.IOV_CHUNK_US).explain("formatted")
+                               IOV_CHUNK_US).explain("formatted")
     iso = buf.getvalue()
     bare = [h for h in re.findall(r"hashpartitioning\(([^)]*)\)", iso)
             if "event_type" in h and "chunk" not in h]
@@ -881,17 +885,21 @@ def test_freq_items_pass1_narrow_reconcile_candidate_bounded(spark):
     BEFORE its aggregate, so the only hash exchange carries candidate
     keys that already passed the prune; and the returned head must be
     TakeOrderedAndProject, never a full-relation window sort."""
-    from nats_stream_processor_spark.queries import llm_ext9 as x9
+    from nats_stream_processor_spark.queries.sketches import (
+        _fi_candidates,
+        _fi_pass1,
+        _fi_reconcile,
+    )
 
     spark.conf.set("spark.nats_spark.spread.enabled", "false")
     try:
         d = registry.table(spark, SF, "documents")
-        p1 = _frame_plan(x9._fi_pass1(d))
+        p1 = _frame_plan(_fi_pass1(d))
         assert "MapInPandas" in p1
         assert "Exchange" not in p1, p1[:600]
 
-        derr, cand = x9._fi_candidates(x9._fi_pass1(d))
-        p2 = _frame_plan(x9._fi_reconcile(d, cand))
+        derr, cand = _fi_candidates(_fi_pass1(d))
+        p2 = _frame_plan(_fi_reconcile(d, cand))
         assert "BroadcastHashJoin" in p2 and "LeftSemi" in p2, p2[:600]
         # the semi join must sit BELOW the aggregate: the map-side
         # partial agg consumes the join output (formatted mode prints
@@ -931,14 +939,17 @@ def test_pareto_frontier_local_skyline_is_pure_map(spark):
     and the one exchange in the full plan feeds the explicit
     single-partition global pass with local-skyline SURVIVORS only
     (its input is the mapInPandas output schema, never text)."""
-    from nats_stream_processor_spark.queries import llm_ext9 as x9
+    from nats_stream_processor_spark.queries.curation import (
+        _pf_local,
+        _pf_metrics,
+    )
 
     spark.conf.set("spark.nats_spark.spread.enabled", "false")
     try:
         d = registry.table(spark, SF, "documents")
         p1 = _frame_plan(
-            x9._pf_metrics(d).mapInPandas(
-                x9._pf_local, "doc_id long, x long, y long"))
+            _pf_metrics(d).mapInPandas(
+                _pf_local, "doc_id long, x long, y long"))
         assert "MapInPandas" in p1
         assert "Exchange" not in p1, p1[:600]
 

@@ -217,7 +217,7 @@ def test_normalized_key_matches_duckdb(spark, batch):
     import duckdb
 
     import pyspark.sql.functions as SF
-    from nats_stream_processor_spark.queries.llm_ext import _NORM_RE
+    from nats_stream_processor_spark.queries.dedup import _NORM_RE
 
     df = spark.createDataFrame([(t,) for t in batch], "text string")
     norm = SF.lower(SF.trim(SF.regexp_replace(SF.col("text"), _NORM_RE, " ")))
@@ -242,7 +242,7 @@ def test_chunk_grid_covers_all_tokens(n):
     (start, len) windows cover every token index, starts sit on the
     stride grid, only the final chunk may be short, and overlap between
     consecutive full chunks is exactly CHUNK_LEN - CHUNK_STRIDE."""
-    from nats_stream_processor_spark.queries.llm_ext import (
+    from nats_stream_processor_spark.queries.dedup import (
         CHUNK_LEN,
         CHUNK_STRIDE,
     )
@@ -264,7 +264,7 @@ def test_chunk_grid_covers_all_tokens(n):
                 min_size=1, max_size=12),
        st.integers(min_value=1, max_value=99))
 def test_waterfill_sql_invariants(sizes, pct):
-    """The water-filling allocation SQL (queries/llm_ext2.
+    """The water-filling allocation SQL (queries/curation.
     waterfill_alloc_sql — the exact text the registered oracle uses) must
     satisfy, for ANY per-source token profile and target percentage:
     sum(allocated) == budget exactly; uncapped sources are taken whole;
@@ -277,7 +277,7 @@ def test_waterfill_sql_invariants(sizes, pct):
     source, ties everywhere) that the parquet fixtures never produce."""
     import duckdb
 
-    from nats_stream_processor_spark.queries.llm_ext2 import (
+    from nats_stream_processor_spark.queries.curation import (
         waterfill_alloc_sql,
     )
 
@@ -410,7 +410,11 @@ def test_bot_flags_oracle_matches_python_moments(events):
     import math
 
     from nats_stream_processor_spark import registry
-    from nats_stream_processor_spark.queries import llm_ext3 as x3
+    from nats_stream_processor_spark.queries.events import (
+        BOT_CV2_MAX,
+        BOT_GAP_CAP_S,
+        BOT_MIN_EVENTS,
+    )
 
     rows = [(eid, u, s) for eid, (u, s) in enumerate(events)]
     vals = ", ".join(
@@ -430,7 +434,7 @@ def test_bot_flags_oracle_matches_python_moments(events):
         per[u].append((s * 1_000_000, eid))
     for u, evs in per.items():
         evs.sort()
-        gaps = [min((b[0] - a[0]) // 1_000_000, x3.BOT_GAP_CAP_S)
+        gaps = [min((b[0] - a[0]) // 1_000_000, BOT_GAP_CAP_S)
                 for a, b in zip(evs, evs[1:])]
         n_ev, n_g = len(evs), len(gaps)
         sg, sg2 = sum(gaps), sum(g * g for g in gaps)
@@ -442,12 +446,12 @@ def test_bot_flags_oracle_matches_python_moments(events):
         assert r[2] == mean, (u, r[2], mean)
         cv2 = r6(n_g * sg2 / (sg * sg) - 1) if (n_g > 1 and sg > 0) else 0.0
         assert r[3] == cv2
-        exp_flag = int(n_ev >= x3.BOT_MIN_EVENTS and n_g > 1 and sg > 0
-                       and cv2 < x3.BOT_CV2_MAX)
+        exp_flag = int(n_ev >= BOT_MIN_EVENTS and n_g > 1 and sg > 0
+                       and cv2 < BOT_CV2_MAX)
         assert r[4] == exp_flag
 
 
-# ---------------------------- round-7 pure-Python kernels (llm_ext4)
+# ---------------------------- pure-Python kernels (test_llm_ext4)
 
 
 @settings(max_examples=300, deadline=None)
@@ -459,10 +463,13 @@ def test_burst_dp_optimal_for_any_gap_sequence(gaps):
     an optimal path (exhaustive 2^n enumeration, n <= 10)."""
     from itertools import product as iproduct
 
-    from nats_stream_processor_spark.queries import llm_ext4 as x4
+    from nats_stream_processor_spark.queries.events import (
+        BURST_S,
+        _burst_decode,
+    )
     n = len(gaps)
     T = max(sum(gaps), 1)
-    lam0, lam1 = n / T, x4.BURST_S * n / T
+    lam0, lam1 = n / T, BURST_S * n / T
     lnl0, lnl1 = math.log(lam0), math.log(lam1)
     trans = math.floor(math.log(n) * 1e6 + 0.5)
     k = [(math.floor((lam0 * float(g) - lnl0) * 1e6 + 0.5),
@@ -481,7 +488,7 @@ def test_burst_dp_optimal_for_any_gap_sequence(gaps):
             best, stats = cost, {(bursts, sum(path))}
         elif cost == best:
             stats.add((bursts, sum(path)))
-    gn, gb, gr, gc = x4._burst_decode(gaps)
+    gn, gb, gr, gc = _burst_decode(gaps)
     assert gn == n and gc == best and (gb, gr) in stats
 
 
@@ -492,13 +499,13 @@ def test_mtld_automaton_invariants(toks):
     bounded by n/2 (a factor needs >= 2 tokens to drop TTR below 0.72
     over alphabet >= 1), the score is nonnegative, and repeating the
     stream never RAISES the per-token diversity."""
-    from nats_stream_processor_spark.queries import llm_ext4 as x4
-    n, w, ppm = x4._mtld_of(toks)
+    from nats_stream_processor_spark.queries.text import _mtld_of
+    n, w, ppm = _mtld_of(toks)
     assert n == len(toks)
     assert 0 <= w <= max(n // 2, 0) or (w <= n)
     assert ppm >= 0
     if toks:
-        n2, w2, ppm2 = x4._mtld_of(toks + toks)
+        n2, w2, ppm2 = _mtld_of(toks + toks)
         # doubling a stream adds at least as many completed factors
         assert w2 >= w
 
@@ -536,7 +543,7 @@ def test_zorder_interleave_is_bijective(x, y):
     would be identical cross-engine (parity stays green); only an
     independent reimplementation (the pure-Python recovery below)
     can catch it."""
-    from nats_stream_processor_spark.queries.llm_ext8 import (
+    from nats_stream_processor_spark.queries.media import (
         ZL_BITS,
         _duck_shift,
         _interleave_expr,
@@ -566,7 +573,7 @@ def test_scene_frame_features_bounds(payload):
     order, every feature an int in [0, 255 * SCENE_SAMPLES], and
     deterministic — for ANY payload, including empty and
     shorter-than-window ones."""
-    from nats_stream_processor_spark.queries.llm_ext6 import (
+    from nats_stream_processor_spark.queries.media import (
         SCENE_FRAMES,
         SCENE_SAMPLES,
         scene_frame_features,
@@ -663,8 +670,7 @@ def test_poisson_weight_kernel_properties(uniforms):
     """corpus_bootstrap_ci's CASE-ladder Poisson(1) inverse CDF: weights
     in 0..5, monotone in the uniform, and the breakpoints are exactly
     the pinned micro-unit CDF literals."""
-    from nats_stream_processor_spark.queries.llm_ext11 import (
-        _POIS_CDF_MICRO)
+    from nats_stream_processor_spark.queries.text import _POIS_CDF_MICRO
 
     def w(u):
         for i, t in enumerate(_POIS_CDF_MICRO):
@@ -758,7 +764,7 @@ def test_hist_quantile_containment_theorem(values):
     est <= exact < est + SQ_W, where exact is the k-th smallest value
     (k = the operator's integer ceil arithmetic) — the claim the batch
     oracle pins to literal TRUE."""
-    from nats_stream_processor_spark.queries.llm_ext10 import SQ_W
+    from nats_stream_processor_spark.queries.events import SQ_W
     from nats_stream_processor_spark.streaming import quantile as qh
     hist: dict = {}
     for v in values:
@@ -919,7 +925,7 @@ def test_scd2_incremental_merge_equals_full_fold(seq, cut_frac):
     assert assembled == fold(events)
 
 
-# ---------------------- round-13 pure kernels (llm_ext14 / streaming.dedup)
+# ---------------------- pure kernels (queries/dedup.py / streaming.dedup)
 
 
 @given(st.data())
@@ -1025,7 +1031,7 @@ def _cap_relative_drop_and_recount(toks, k, cap):
 @given(st.data())
 @settings(max_examples=40, deadline=None)
 def test_drop_execute_recount_zero_is_cap_robust(data):
-    """The llm_ext14 cap-robustness theorem, hammered with a TINY cap so
+    """The incremental near-dup cap-robustness theorem, hammered with a TINY cap so
     masking is common: random corpora of base slices (containment
     chains, equal docs) plus shared-boilerplate plants; whatever the cap
     masks, dropping the visible containments never reveals a masked one

@@ -431,9 +431,7 @@ def test_streaming_cusum_drift_matches_batch(spark, tmp_path):
     production monitor runs it). The final snapshot must equal the
     batch operator row-for-row — same helper, same statistic."""
     from nats_stream_processor_spark import registry
-    from nats_stream_processor_spark.queries.llm_ext4 import (
-        cusum_over_daily,
-    )
+    from nats_stream_processor_spark.queries.events import cusum_over_daily
 
     sf = "/root/testdata/sf0.001"
     src = registry.table(spark, sf, "events").select("event_type", "ts")
@@ -473,7 +471,7 @@ def test_streaming_hourly_hll_state_matches_batch(spark, tmp_path):
     within the batch operator's 5% tolerance of the exact per-window
     distinct counts."""
     from nats_stream_processor_spark import registry
-    from nats_stream_processor_spark.queries.llm_ext9 import SW_HOURS
+    from nats_stream_processor_spark.queries.events import SW_HOURS
     from nats_stream_processor_spark.streaming import hll
 
     sf = "/root/testdata/sf0.001"
@@ -548,8 +546,7 @@ def test_streaming_hourly_quantile_hist_state_matches_batch(spark, tmp_path):
     within a tolerance: same buckets, same counts, same `div`
     truncation on both paths."""
     from nats_stream_processor_spark import registry
-    from nats_stream_processor_spark.queries.llm_ext9 import SW_HOURS
-    from nats_stream_processor_spark.queries.llm_ext10 import SQ_W
+    from nats_stream_processor_spark.queries.events import SQ_W, SW_HOURS
     from nats_stream_processor_spark.streaming import quantile as qh
 
     sf = "/root/testdata/sf0.001"
@@ -631,9 +628,11 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
     second, single-hour planted corpus with width+1 users exercises the
     truncation-bound row through the streaming path."""
     from nats_stream_processor_spark import registry
-    from nats_stream_processor_spark.queries.llm_ext9 import SW_HOURS
-    from nats_stream_processor_spark.queries.llm_ext13 import (SLT_C,
-                                                               SLT_TOP)
+    from nats_stream_processor_spark.queries.events import (
+        SLT_C,
+        SLT_TOP,
+        SW_HOURS,
+    )
     from nats_stream_processor_spark.streaming import topk as tk
 
     sf = "/root/testdata/sf0.001"
@@ -744,7 +743,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
 
 def test_streaming_hourly_power_sums_match_batch_moments(spark, tmp_path):
     """The streaming half of the mergeable-moments story
-    (queries/llm_ext11.hourly_power_sums): the SAME builder that feeds
+    (queries/events.hourly_power_sums): the SAME builder that feeds
     events_moments_merge runs as a stateful Structured Streaming
     aggregation (update mode, one parquet file per micro-batch, Spark
     managing the per-(type, hour) sums as aggregation state). Because
@@ -754,8 +753,7 @@ def test_streaming_hourly_power_sums_match_batch_moments(spark, tmp_path):
     last rounded digit."""
     import math
     from nats_stream_processor_spark import registry
-    from nats_stream_processor_spark.queries.llm_ext11 import (
-        hourly_power_sums)
+    from nats_stream_processor_spark.queries.events import hourly_power_sums
 
     sf = "/root/testdata/sf0.001"
     src = registry.table(spark, sf, "events").select(
@@ -1106,7 +1104,7 @@ def _near_dup_state_check(spark, tmp_path, ckpt, src_dir):
 
 def test_streaming_near_dup_planted_regimes(spark, tmp_path):
     """The streaming near-dup twin (streaming/neardup.py) on the
-    planted incremental fixture (the llm_ext14 test regimes): corpus
+    planted incremental fixture (the test_llm_ext14 regimes): corpus
     docs 0..15 arrive as two history micro-batches, batch docs 16..19
     (16 = exact text of corpus doc 3 -> dup_corpus; 17/18 mutual
     near-dups of each other only -> one dup_batch component; 19 novel
