@@ -1,17 +1,17 @@
 """Scalar function library.
 
-Every function here exists in two forms generated from one source of truth:
+The classifiers are deterministic stand-ins for the reference's ONNX models
+(lexicon/keyword scoring with identical output shape and gating semantics;
+see SURVEY.md §7 and FIXTURES.md §4). Each exists in two forms built from
+one set of lexicons and rules:
 
-- a Spark ``Column`` builder (JVM-side, whole-stage-codegen friendly — no
-  Python UDFs in the hot path), and
+- an Arrow-batched pandas UDF (``classify.py``) — the one Python step in
+  the enrichment hot path, evaluated once per row in a single fused node;
 - an ANSI-SQL fragment builder (DuckDB dialect) used for oracle checking.
 
-This guarantees the engine's results are independently reproducible, and it
-keeps the classifiers deterministic (the reference's ONNX models are replaced
-by lexicon/keyword stand-ins with identical output shape and gating
-semantics; see SURVEY.md §7 and FIXTURES.md §4).
+The text helpers (``text.py``) are JVM-side Column builders.
 """
 
-from .sentiment import sentiment_struct, sentiment_sql_columns  # noqa: F401
-from .topics import topics_struct, topics_sql_columns  # noqa: F401
+from .sentiment import sentiment_sql_columns  # noqa: F401
+from .topics import topics_sql_columns  # noqa: F401
 from .text import tokens_col, tokens_sql, extract_text_col  # noqa: F401

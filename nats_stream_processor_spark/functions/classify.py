@@ -2,8 +2,8 @@
 sentiment/topic stages (U1/U2).
 
 Why pandas UDFs and not pure Column expressions: the stand-in classifiers
-are expressible as built-in expressions (see sentiment.py / topics.py, kept
-as the executable spec + SQL oracle twins), but Catalyst duplicates
+are expressible as built-in expressions (sentiment.py / topics.py hold
+their lexicons and SQL oracle twins), but Catalyst duplicates
 projection expressions into downstream filters and grouping keys
 (PushDownPredicate / CollapseProject do not share heavy subtrees), which
 multiplies the ~20 keyword-count subexpressions per reference — measured
@@ -15,8 +15,8 @@ architecture, where both models are opaque per-message functions
 Spark mapping called for in SURVEY.md §2A (U1/U2: per-executor state inside
 a pandas_udf, Arrow batches replacing per-message calls).
 
-Values are bit-identical to the Column/SQL twins (floats rounded to
-FLOAT_ROUND_DP on every path), which the test suite asserts.
+Values are bit-identical to the SQL twins (floats rounded to
+FLOAT_ROUND_DP on every path), which the oracle parity checks assert.
 """
 
 from __future__ import annotations
@@ -107,7 +107,7 @@ def _token_table(texts: pd.Series):
 
 def _sentiment_kernel(rows, neg_tok, pos_tok, n: int, dp: int):
     """Sentiment from a token table: (label index, n x 3 rounded
-    probabilities in label order); same math as sentiment_struct."""
+    probabilities in label order); same math as the SQL twin."""
     neg = np.bincount(rows[neg_tok], minlength=n).astype(np.float64)
     pos = np.bincount(rows[pos_tok], minlength=n).astype(np.float64)
     neu = np.full(n, NEUTRAL_BIAS)
@@ -121,7 +121,7 @@ def _sentiment_kernel(rows, neg_tok, pos_tok, n: int, dp: int):
 
 def _topics_kernel(rows, lab_tok, n: int, dp: int):
     """Topics from a token table: (object array of topic lists, top label
-    index, rounded top confidence); same math as topics_struct."""
+    index, rounded top confidence); same math as the SQL twin."""
     # n x n_labels keyword-occurrence matrix in one counting pass
     hit = lab_tok >= 0
     counts = np.bincount(
@@ -145,7 +145,7 @@ def _topics_kernel(rows, lab_tok, n: int, dp: int):
 
 
 def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
-    """Vectorized sentiment over a batch; same math as sentiment_struct."""
+    """Vectorized sentiment over a batch."""
     rows, neg, pos, _ = _token_table(texts)
     idx, probs = _sentiment_kernel(rows, neg, pos, len(texts), dp)
     return pd.DataFrame({
@@ -158,7 +158,7 @@ def sentiment_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
 
 
 def topics_batch(texts: pd.Series, dp: int = FLOAT_ROUND_DP) -> pd.DataFrame:
-    """Vectorized topics over a batch; same math as topics_struct."""
+    """Vectorized topics over a batch."""
     rows, _, _, lab = _token_table(texts)
     topics, top_idx, conf = _topics_kernel(rows, lab, len(texts), dp)
     return pd.DataFrame(

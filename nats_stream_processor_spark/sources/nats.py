@@ -5,41 +5,42 @@ Reference parity (all citations into /root/reference):
 
 - Source (S1): the reference push-subscribes a durable consumer with a
   queue group (src/nats_client.py:123-168). Spark replays micro-batches
-  from checkpointed offsets, so we instead FETCH BY STREAM SEQUENCE over a
-  pull/ordered consumer: offset = {"seq": n} (JetStream's monotonically
-  increasing per-stream sequence), giving deterministic replay — the
-  property the reference's at-least-once ack protocol (A0,
-  src/nats_client.py:170-218) only approximates.
+  from checkpointed offsets, so we instead FETCH BY STREAM SEQUENCE:
+  offset = {"seq": n} (JetStream's monotonically increasing per-stream
+  sequence), giving deterministic replay — the property the reference's
+  at-least-once ack protocol (A0, src/nats_client.py:170-218) only
+  approximates. Each micro-batch's sequence range splits into N
+  InputPartitions read in parallel executor workers — the deterministic
+  analog of the reference's queue-group fan-out across pods
+  (README.md:505-517). Per-message ORDER within a batch is not total
+  across partitions (neither is the queue group's); pipelines needing
+  order sort on `seq`. For multi-stream topologies, register one source
+  per stream/subject-filter.
 - Admission control (S2): option("maxBatchSize") caps messages per
-  micro-batch — the analog of max_ack_pending=100 (src/config.py:24).
-- Sink (S3/P3/D1/R1): publish with subject routing and the
-  Nats-Msg-Id = "uri:cid" idempotency header (src/nats_client.py:237-252)
-  so JetStream's duplicate_window drops re-publishes after task retries —
-  retries are therefore safe (R1 without the sleep loop).
+  micro-batch — the analog of max_ack_pending (src/config.py:24).
+- Sink (S3/P3/D1/R1): publishes the columns `subject`, `value` and
+  `msg_id` (streaming/pipeline.nats_message builds them in the JVM);
+  msg_id becomes the Nats-Msg-Id idempotency header
+  (src/nats_client.py:237-252), so JetStream's duplicate_window drops
+  re-publishes after task retries — retries are therefore safe (R1
+  without the sleep loop).
 - Sink DDL (S4): ensure_output_stream mirrors _ensure_output_stream
   (src/nats_client.py:81-102): LIMITS retention, discard OLD, max_msgs
   5M, file storage, 600 s duplicate window.
 
-Transport: any non-`mem://` URL goes through nats_transport.py, a real
-nats-py client path (sequence-range pull fetch, idempotent publish, stream
-DDL) exercised in tests against a scripted fake `nats` module — the
-container ships neither nats-py nor a broker. `servers="mem://<name>"`
-selects the file-backed stand-in below, which the streaming e2e tests
-drive.
-
-Scale: the default reader (NatsPartitionedStreamReader) splits each
-micro-batch's sequence range into N InputPartitions read in parallel
-executor workers — the deterministic analog of the reference's queue-group
-fan-out across pods (README.md:505-517). Per-message ORDER within the
-batch is not total across partitions (neither is the queue group's);
-pipelines needing order sort on `seq`. option("simple", "true") selects
-the single-partition driver-prefetch reader. For multi-stream topologies,
-register one source per stream/subject-filter.
+Broker client: `broker(server)` is the one place that looks at the URL.
+`mem://<name>` selects the file-backed stand-in below (the streaming e2e
+tests drive it); any other URL goes through nats_transport.py, a real
+nats-py client (sequence-range pull fetch, idempotent publish, stream DDL)
+exercised in tests against a scripted fake `nats` module. Both expose
+last_seq / fetch / publish_many / ensure_stream, so the reader, the writer
+and the DDL never branch on the transport.
 """
 
 from __future__ import annotations
 
 import base64
+import datetime
 import fcntl
 import json
 import os
@@ -47,13 +48,11 @@ import shutil
 from collections.abc import Iterator
 from dataclasses import dataclass
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamReader,
     DataSourceStreamWriter,
     InputPartition,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
 from pyspark.sql.types import (
@@ -64,6 +63,13 @@ from pyspark.sql.types import (
     StructField,
     StructType,
     TimestampType,
+)
+
+from ..config import (
+    INPUT_STREAM,
+    MAX_OFFSETS_PER_TRIGGER,
+    OUTPUT_STREAM,
+    OUTPUT_SUBJECT_PREFIX,
 )
 
 try:  # pragma: no cover - not installed in this environment
@@ -80,7 +86,8 @@ NATS_SCHEMA = StructType([
     StructField("headers", MapType(StringType(), StringType())),
 ])
 
-DEFAULT_MAX_BATCH = 100_000
+# The sink's input: the source's own names for a message's parts.
+MESSAGE_COLUMNS = ("subject", "value", "msg_id")
 
 
 # ------------------------------------------------------------- file-backed
@@ -104,6 +111,16 @@ MEM_BROKER_DIR = os.environ.get(
     "SPARK_GRAFT_MEM_BROKER_DIR", "/tmp/spark_graft_mem_broker")
 
 
+def _subject_matches(subject: str, subject_filter: str | None) -> bool:
+    """JetStream filter semantics for the one wildcard form the connector
+    uses: "a.b.>" matches every subject under "a.b."."""
+    if not subject_filter:
+        return True
+    if subject_filter.endswith(".>"):
+        return subject.startswith(subject_filter[:-1])
+    return subject == subject_filter
+
+
 @dataclass
 class MemStream:
     path: str
@@ -124,40 +141,51 @@ class MemStream:
 
     def publish(self, subject: str, data: bytes, headers: dict | None = None,
                 ts: float = 0.0) -> bool:
-        headers = headers or {}
-        # The nats sink runs one writer per partition in parallel Python
-        # worker processes; an exclusive flock around read+append keeps the
-        # per-stream sequence monotonic and the Nats-Msg-Id duplicate scan
-        # race-free (the real broker serializes publishes server-side).
+        """One message; of its headers the stand-in keeps Nats-Msg-Id."""
+        msg_id = (headers or {}).get("Nats-Msg-Id")
+        return self.publish_many([(subject, data, msg_id)], ts) == (1, 0)
+
+    def publish_many(self, items, ts: float = 0.0) -> tuple[int, int]:
+        """Append (subject, payload, msg_id) triples; returns (published,
+        duplicates). The nats sink runs one writer per partition in
+        parallel Python worker processes; one exclusive flock around a
+        single read + append keeps the per-stream sequence monotonic and
+        the Nats-Msg-Id duplicate scan race-free (the real broker
+        serializes publishes server-side)."""
+        n_dup = 0
         with open(self.path + ".lock", "w") as lockf:
             fcntl.flock(lockf, fcntl.LOCK_EX)
             try:
                 existing = self._lines()
-                msg_id = headers.get("Nats-Msg-Id")
-                if msg_id is not None:
-                    # duplicate_window dedup (reference: src/nats_client.py:99);
-                    # the file-backed window is unbounded, fine for tests
-                    if any(d["headers"].get("Nats-Msg-Id") == msg_id
-                           for d in existing):
-                        return False
-                seq = (existing[-1]["seq"] + 1) if existing else 1
-                line = json.dumps({
-                    "subject": subject, "data": base64.b64encode(data).decode(),
-                    "seq": seq, "ts": ts, "headers": headers,
-                })
+                # duplicate_window dedup (reference: src/nats_client.py:99);
+                # the file-backed window is unbounded, fine for tests
+                seen = {d["headers"].get("Nats-Msg-Id") for d in existing}
+                seq = existing[-1]["seq"] if existing else 0
+                lines = []
+                for subject, data, msg_id in items:
+                    if msg_id and msg_id in seen:
+                        n_dup += 1
+                        continue
+                    seen.add(msg_id)
+                    seq += 1
+                    lines.append(json.dumps({
+                        "subject": subject,
+                        "data": base64.b64encode(data).decode(),
+                        "seq": seq, "ts": ts,
+                        "headers": {"Nats-Msg-Id": msg_id} if msg_id else {},
+                    }) + "\n")
                 with open(self.path, "a") as f:
-                    f.write(line + "\n")
-                return True
+                    f.writelines(lines)
             finally:
                 fcntl.flock(lockf, fcntl.LOCK_UN)
+        return len(lines), n_dup
 
     def fetch(self, start_seq: int, max_msgs: int,
-              subject_prefix: str | None = None) -> list[MemMessage]:
+              subject_filter: str | None = None) -> list[MemMessage]:
         out = []
         for m in self.messages:
-            if m.seq < start_seq:
-                continue
-            if subject_prefix and not m.subject.startswith(subject_prefix):
+            if m.seq < start_seq or not _subject_matches(m.subject,
+                                                         subject_filter):
                 continue
             out.append(m)
             if len(out) >= max_msgs:
@@ -170,8 +198,7 @@ class MemStream:
 
 
 def mem_stream(server: str, stream: str) -> MemStream:
-    name = server.removeprefix("mem://")
-    d = os.path.join(MEM_BROKER_DIR, name)
+    d = os.path.join(MEM_BROKER_DIR, server.removeprefix("mem://"))
     os.makedirs(d, exist_ok=True)
     return MemStream(os.path.join(d, f"{stream}.jsonl"))
 
@@ -183,32 +210,66 @@ def mem_reset(server: str) -> None:
         shutil.rmtree(d)
 
 
-def ensure_output_stream(
-    server: str, stream: str,
-    subject_prefix: str = "bluesky.posts.enriched",
-) -> MemStream | None:
-    """S4: CREATE-STREAM-IF-NOT-EXISTS. Mirrors the reference's stream DDL
-    (src/nats_client.py:81-102): LIMITS retention, discard OLD, max_msgs
-    5M, FILE storage, 600 s duplicate window."""
+@dataclass
+class MemBroker:
+    """The mem:// broker behind JetStreamTransport's surface."""
+
+    server: str
+
+    def connect(self) -> "MemBroker":
+        return self
+
+    def close(self) -> None:
+        pass
+
+    def __enter__(self) -> "MemBroker":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        pass
+
+    def ensure_stream(self, stream: str, subject_prefix: str) -> None:
+        mem_stream(self.server, stream)
+
+    def last_seq(self, stream: str) -> int:
+        return mem_stream(self.server, stream).last_seq()
+
+    def fetch(self, stream: str, start_seq: int, max_msgs: int,
+              subject_filter: str | None = None) -> list[MemMessage]:
+        return mem_stream(self.server, stream).fetch(
+            start_seq, max_msgs, subject_filter)
+
+    def publish_many(self, stream: str, items) -> tuple[int, int]:
+        return mem_stream(self.server, stream).publish_many(items)
+
+
+def broker(server: str):
+    """The one broker client for a server URL, not yet connected: the
+    mem:// stand-in, or JetStreamTransport (which needs nats-py). Use it
+    as a context manager, or call connect() and close()."""
     if server.startswith("mem://"):
-        return mem_stream(server, stream)
+        return MemBroker(server)
     if not HAVE_NATS:
         raise ImportError(
             "nats-py is required for a real NATS connection "
             "(pip install nats-py); use servers='mem://<name>' for the "
-            "in-memory broker"
+            "file-backed broker"
         )
     from .nats_transport import JetStreamTransport
-    with JetStreamTransport(server) as t:
-        t.ensure_stream(stream, subject_prefix)
-    return None
+    return JetStreamTransport(server)
+
+
+def ensure_output_stream(server: str, stream: str,
+                         subject_prefix: str = OUTPUT_SUBJECT_PREFIX) -> None:
+    """S4: CREATE-STREAM-IF-NOT-EXISTS. Mirrors the reference's stream DDL
+    (src/nats_client.py:81-102): LIMITS retention, discard OLD, max_msgs
+    5M, FILE storage, 600 s duplicate window."""
+    with broker(server) as client:
+        client.ensure_stream(stream, subject_prefix)
 
 
 def _msgs_to_rows(msgs: list) -> list[tuple]:
-    """Map fetched messages onto NATS_SCHEMA tuples (shared by both
-    readers)."""
-    import datetime
-
+    """Map fetched messages onto NATS_SCHEMA tuples."""
     return [
         (
             m.subject,
@@ -222,64 +283,6 @@ def _msgs_to_rows(msgs: list) -> list[tuple]:
     ]
 
 
-class NatsStreamReader(SimpleDataSourceStreamReader):
-    """Offsets are JetStream stream sequences: {"seq": <next unread>}."""
-
-    def __init__(self, options: dict):
-        self.server = options.get("servers", "mem://default")
-        self.stream = options.get("stream", "bluesky-posts")
-        self.subject_prefix = options.get("subjectprefix") or None
-        self.max_batch = int(options.get("maxbatchsize", DEFAULT_MAX_BATCH))
-        self._transport = None
-        if not self.server.startswith("mem://") and not HAVE_NATS:
-            raise ImportError(
-                "nats-py is required for a real NATS connection; "
-                "use servers='mem://<name>' for tests"
-            )
-
-    def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 1}  # DeliverPolicy.ALL (reference: src/nats_client.py:152)
-
-    def _subject_filter(self) -> str | None:
-        # option subjectPrefix="bluesky.posts." -> JetStream filter
-        # "bluesky.posts.>" (the reference subscribes "<subject>.>",
-        # src/nats_client.py:137)
-        if not self.subject_prefix:
-            return None
-        return self.subject_prefix.rstrip(".") + ".>"
-
-    def _fetch(self, start_seq: int, max_msgs: int) -> list[MemMessage]:
-        if self.server.startswith("mem://"):
-            return mem_stream(self.server, self.stream).fetch(
-                start_seq, max_msgs, self.subject_prefix)
-        from .nats_transport import JetStreamTransport
-        if self._transport is None:
-            # one connection for the life of the reader (driver-side)
-            self._transport = JetStreamTransport(self.server).connect()
-        return self._transport.fetch(
-            self.stream, start_seq, max_msgs, self._subject_filter())
-
-    def stop(self) -> None:
-        if self._transport is not None:
-            self._transport.close()
-            self._transport = None
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        msgs = self._fetch(start["seq"], self.max_batch)
-        if not msgs:
-            return iter([]), start
-        end = {"seq": msgs[-1].seq + 1}
-        return iter(_msgs_to_rows(msgs)), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:  # noqa: N802
-        # deterministic replay for recovery (same sequence range re-read)
-        msgs = self._fetch(start["seq"], end["seq"] - start["seq"])
-        return iter(_msgs_to_rows([m for m in msgs if m.seq < end["seq"]]))
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the Spark checkpoint (A0)
-
-
 @dataclass
 class SeqRangePartition(InputPartition):
     """One executor-read slice of a micro-batch: stream sequences
@@ -290,64 +293,52 @@ class SeqRangePartition(InputPartition):
 
 
 class NatsPartitionedStreamReader(DataSourceStreamReader):
-    """Partitioned source: each micro-batch's sequence range splits into N
-    `SeqRangePartition`s fetched in parallel executor workers — the Spark
-    analog of the reference's queue-group fan-out across pods
-    (reference README.md:505-517), but deterministic: a partition is a seq
-    RANGE, so replay after failure re-reads exactly the same messages
-    (queue groups give no such guarantee).
+    """Offsets are JetStream stream sequences: {"seq": <next unread>}.
+
+    Each micro-batch's sequence range splits into N `SeqRangePartition`s
+    fetched in parallel executor workers — the Spark analog of the
+    reference's queue-group fan-out across pods (reference
+    README.md:505-517), but deterministic: a partition is a seq RANGE, so
+    replay after failure re-reads exactly the same messages (queue groups
+    give no such guarantee).
 
     Driver-side: initialOffset/latestOffset/partitions (one cheap
-    stream-info call per trigger). Executor-side: read(partition) opens its
-    own connection per task (mem:// reads the shared file-backed broker).
-    Offsets are identical to the simple reader ({"seq": next unread}), so
-    checkpoints written by one are readable by the other.
+    stream-info call per trigger over one long-lived connection).
+    Executor-side: read(partition) opens its own connection per task.
     """
 
     def __init__(self, options: dict):
         self.server = options.get("servers", "mem://default")
-        self.stream = options.get("stream", "bluesky-posts")
-        self.subject_prefix = options.get("subjectprefix") or None
-        self.max_batch = int(options.get("maxbatchsize", DEFAULT_MAX_BATCH))
+        self.stream = options.get("stream", INPUT_STREAM)
+        # option subjectPrefix="bluesky.posts." -> JetStream filter
+        # "bluesky.posts.>" (the reference subscribes "<subject>.>",
+        # src/nats_client.py:137)
+        prefix = options.get("subjectprefix")
+        self.subject_filter = prefix.rstrip(".") + ".>" if prefix else None
+        self.max_batch = int(options.get("maxbatchsize",
+                                         MAX_OFFSETS_PER_TRIGGER))
         self.num_partitions = int(options.get("numpartitions", 8))
-        self._transport = None
+        self._client = None
         self._prev_end: int | None = None
-        if not self.server.startswith("mem://") and not HAVE_NATS:
-            raise ImportError(
-                "nats-py is required for a real NATS connection; "
-                "use servers='mem://<name>' for tests"
-            )
 
     def __getstate__(self):
-        # The reader ships to executor workers for read(); the transport
-        # (event-loop thread + socket) stays on the driver.
+        # The reader ships to executor workers for read(); the driver's
+        # connection (event-loop thread + socket) stays on the driver.
         state = self.__dict__.copy()
-        state["_transport"] = None
+        state["_client"] = None
         return state
 
-    def _subject_filter(self) -> str | None:
-        if not self.subject_prefix:
-            return None
-        return self.subject_prefix.rstrip(".") + ".>"
-
-    def _last_seq(self) -> int:
-        if self.server.startswith("mem://"):
-            return mem_stream(self.server, self.stream).last_seq()
-        from .nats_transport import JetStreamTransport
-        if self._transport is None:
-            self._transport = JetStreamTransport(self.server).connect()
-        return self._transport.last_seq(self.stream)
-
     def initialOffset(self) -> dict:  # noqa: N802
-        return {"seq": 1}  # DeliverPolicy.ALL
+        return {"seq": 1}  # DeliverPolicy.ALL (reference: src/nats_client.py:152)
 
     def latestOffset(self) -> dict:  # noqa: N802
         # Admission control (S2): advance at most max_batch sequences per
         # trigger. The cap is relative to the previous latestOffset this
         # process returned; the first trigger after a restart is uncapped
         # (the Python API doesn't surface the checkpointed start here).
-        last = self._last_seq()
-        end = last + 1
+        if self._client is None:
+            self._client = broker(self.server).connect()
+        end = self._client.last_seq(self.stream) + 1
         if self._prev_end is not None:
             end = min(end, self._prev_end + self.max_batch)
             end = max(end, self._prev_end)
@@ -372,23 +363,17 @@ class NatsPartitionedStreamReader(DataSourceStreamReader):
         lo, hi = partition.start_seq, partition.end_seq
         if hi <= lo:
             return iter([])
-        if self.server.startswith("mem://"):
-            msgs = mem_stream(self.server, self.stream).fetch(
-                lo, hi - lo, self.subject_prefix)
-        else:
-            from .nats_transport import JetStreamTransport
-            with JetStreamTransport(self.server) as t:
-                msgs = t.fetch(self.stream, lo, hi - lo,
-                               self._subject_filter())
+        with broker(self.server) as client:
+            msgs = client.fetch(self.stream, lo, hi - lo, self.subject_filter)
         return iter(_msgs_to_rows([m for m in msgs if m.seq < hi]))
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the Spark checkpoint (A0)
 
     def stop(self) -> None:
-        if self._transport is not None:
-            self._transport.close()
-            self._transport = None
+        if self._client is not None:
+            self._client.close()
+            self._client = None
 
 
 @dataclass
@@ -398,59 +383,20 @@ class NatsCommitMessage(WriterCommitMessage):
 
 
 class NatsStreamWriter(DataSourceStreamWriter):
-    """Publishes rows to the output stream with subject routing + msg-id
-    dedup. Expects columns: route_subject (or subject), a JSON-ready
-    payload column (value/payload), and optionally msg_id."""
+    """Publishes each row's `value` to its `subject`, with `msg_id` (when
+    set) as the Nats-Msg-Id header."""
 
     def __init__(self, options: dict):
         self.server = options.get("servers", "mem://default")
-        self.stream = options.get("stream", "bluesky-posts-enriched")
-        self.default_subject = options.get(
-            "defaultsubject", "bluesky.posts.enriched")
-        if not self.server.startswith("mem://") and not HAVE_NATS:
-            raise ImportError(
-                "nats-py is required for a real NATS connection; "
-                "use servers='mem://<name>' for tests"
-            )
-
-    def _row_to_message(self, row) -> tuple[str, bytes, str | None]:
-        d = row.asDict(recursive=True)
-        subject = d.get("route_subject") or d.get("subject") or self.default_subject
-        msg_id = d.get("msg_id")
-        if msg_id is None and d.get("uri") and d.get("cid"):
-            # Truthiness on purpose: the reference skips the dedup header for
-            # empty-string uri/cid too (`if post_uri and post_cid`,
-            # src/nats_client.py:248).
-            msg_id = f"{d['uri']}:{d['cid']}"
-        payload = d.get("value")
-        if payload is None:
-            payload = json.dumps(
-                {k: v for k, v in d.items()
-                 if k not in ("route_subject", "msg_id")},
-                default=str).encode()
-        elif isinstance(payload, str):
-            payload = payload.encode()
-        return subject, payload, msg_id
+        self.stream = options.get("stream", OUTPUT_STREAM)
 
     def write(self, iterator) -> NatsCommitMessage:
         """Executor-side publish: this runs in each writer partition's
         Python worker with its own connection — no data crosses the driver
         (the queue-group fan-out analog, reference README.md:505-517)."""
-        if self.server.startswith("mem://"):
-            n_pub = n_dup = 0
-            stream = mem_stream(self.server, self.stream)
-            for row in iterator:
-                subject, payload, msg_id = self._row_to_message(row)
-                headers = {"Nats-Msg-Id": msg_id} if msg_id else {}
-                if stream.publish(subject, payload, headers):
-                    n_pub += 1
-                else:
-                    n_dup += 1
-            return NatsCommitMessage(n_published=n_pub, n_duplicates=n_dup)
-        from .nats_transport import JetStreamTransport
-        items = [self._row_to_message(row) for row in iterator]
-        with JetStreamTransport(self.server) as t:
-            n_pub, n_dup = t.publish_many(items)
+        items = [(r.subject, bytes(r.value), r.msg_id) for r in iterator]
+        with broker(self.server) as client:
+            n_pub, n_dup = client.publish_many(self.stream, items)
         return NatsCommitMessage(n_published=n_pub, n_duplicates=n_dup)
 
     def commit(self, messages, batch_id) -> None:
@@ -470,20 +416,15 @@ class NatsDataSource(DataSource):
         return NATS_SCHEMA
 
     def streamReader(self, schema: StructType) -> NatsPartitionedStreamReader:  # noqa: N802
-        # Default: partitioned executor-side reads. option("simple","true")
-        # falls back to the single-partition driver-side prefetch reader
-        # (Spark catches this error and calls simpleStreamReader).
-        if self.options.get("simple", "false").lower() == "true":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return NatsPartitionedStreamReader(self.options)
 
-    def simpleStreamReader(self, schema: StructType) -> NatsStreamReader:  # noqa: N802
-        return NatsStreamReader(self.options)
-
     def streamWriter(self, schema: StructType, overwrite: bool) -> NatsStreamWriter:  # noqa: N802
+        missing = [c for c in MESSAGE_COLUMNS if c not in schema.fieldNames()]
+        if missing:
+            raise ValueError(
+                f"format('nats') publishes the columns {MESSAGE_COLUMNS} "
+                f"(streaming.pipeline.nats_message builds them); missing "
+                f"{missing}")
         return NatsStreamWriter(self.options)
 
 

@@ -34,11 +34,14 @@ import threading
 import time
 from dataclasses import dataclass, field
 
-DUPLICATE_WINDOW_SECONDS = 600  # reference: src/config.py DUPLICATE_WINDOW_SECONDS
+from ..config import (
+    DEDUP_WINDOW_SECONDS,
+    PUBLISH_MAX_RETRIES,
+    PUBLISH_RETRY_DELAY_S,
+)
+
 OUTPUT_MAX_MSGS = 5_000_000  # reference: src/nats_client.py:94
 PUBLISH_TIMEOUT_S = 5.0  # reference: src/nats_client.py:254
-MAX_PUBLISH_RETRIES = 3  # reference: src/config.py MAX_RETRIES
-RETRY_DELAY_S = 1.0  # reference: src/config.py RETRY_DELAY
 FETCH_TIMEOUT_S = 5.0
 
 
@@ -129,7 +132,7 @@ class JetStreamTransport:
             discard=api.DiscardPolicy.OLD,
             max_msgs=OUTPUT_MAX_MSGS,
             storage=api.StorageType.FILE,
-            duplicate_window=DUPLICATE_WINDOW_SECONDS,
+            duplicate_window=DEDUP_WINDOW_SECONDS,
         ))
 
     def last_seq(self, stream: str) -> int:
@@ -147,9 +150,9 @@ class JetStreamTransport:
         """Read up to max_msgs messages with stream seq >= start_seq.
 
         An EPHEMERAL pull consumer bound BY_START_SEQUENCE gives exact,
-        repeatable range reads — Spark replays committed micro-batches
-        after restart (readBetweenOffsets), which a durable ack-based
-        consumer cannot do. AckPolicy NONE: progress lives in the Spark
+        repeatable range reads — Spark re-reads a committed micro-batch's
+        partitions after restart, which a durable ack-based consumer
+        cannot do. AckPolicy NONE: progress lives in the Spark
         checkpoint, not broker ack floors (SURVEY.md §3 A0).
         """
         return self._run(
@@ -196,17 +199,19 @@ class JetStreamTransport:
     # ------------------------------------------------------------- publish
 
     def publish_many(
-        self, items: list[tuple[str, bytes, str | None]]
+        self, stream: str, items: list[tuple[str, bytes, str | None]]
     ) -> tuple[int, int]:
-        """Publish (subject, payload, msg_id) triples; returns
-        (published, duplicates). Retries timeouts with linear backoff;
-        retried publishes are idempotent because the Nats-Msg-Id header
-        makes the server drop re-sends inside the duplicate window."""
-        return self._run(self._publish_many(items),
-                         timeout=PUBLISH_TIMEOUT_S * (MAX_PUBLISH_RETRIES + 1)
+        """Publish (subject, payload, msg_id) triples into ``stream``;
+        returns (published, duplicates). The server refuses a subject
+        bound to another stream (nats-py's expected-stream check).
+        Retries timeouts with linear backoff; retried publishes are
+        idempotent because the Nats-Msg-Id header makes the server drop
+        re-sends inside the duplicate window."""
+        return self._run(self._publish_many(stream, items),
+                         timeout=PUBLISH_TIMEOUT_S * (PUBLISH_MAX_RETRIES + 1)
                          * max(len(items), 1) + 30)
 
-    async def _publish_many(self, items):
+    async def _publish_many(self, stream, items):
         n_pub = n_dup = 0
         for subject, payload, msg_id in items:
             headers = {"Nats-Msg-Id": msg_id} if msg_id else None
@@ -215,7 +220,7 @@ class JetStreamTransport:
                 try:
                     ack = await self._js.publish(
                         subject, payload, timeout=PUBLISH_TIMEOUT_S,
-                        headers=headers)
+                        stream=stream, headers=headers)
                     if getattr(ack, "duplicate", False):
                         n_dup += 1
                     else:
@@ -223,7 +228,7 @@ class JetStreamTransport:
                     break
                 except asyncio.TimeoutError:
                     attempt += 1
-                    if attempt > MAX_PUBLISH_RETRIES:
+                    if attempt > PUBLISH_MAX_RETRIES:
                         raise
-                    await asyncio.sleep(RETRY_DELAY_S * attempt)
+                    await asyncio.sleep(PUBLISH_RETRY_DELAY_S * attempt)
         return n_pub, n_dup

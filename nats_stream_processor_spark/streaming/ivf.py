@@ -31,7 +31,6 @@ encoding, checked through the ``statestore`` source.
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -40,33 +39,22 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..operators import similarity as sim
+from .quantile import hist_decode, hist_encode
 
 IVS_OUT_SCHEMA = "cent_id long, n_vecs long"
 IVS_STATE_SCHEMA = "counts binary"
 IVS_SHARDS = 4
 
 
-def counts_encode(counts: dict[int, int]) -> bytes:
-    """Canonical bytes: sorted (cent_id i64, count i64) pairs. Equal
-    histograms <=> equal bytes."""
-    return b"".join(struct.pack(">qq", c, counts[c])
-                    for c in sorted(counts))
-
-
-def counts_decode(blob: bytes) -> dict[int, int]:
-    return {c: n for c, n in struct.iter_unpack(">qq", blob)}
-
-
 def _count_shard(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
-    counts = (counts_decode(bytes(state.get[0]))
-              if state.exists else {})
+    counts = hist_decode(bytes(state.get[0])) if state.exists else {}
     batch = pd.concat(list(pdfs), ignore_index=True)
     touched = set()
     for cent_id in batch["cent_id"]:
         cent_id = int(cent_id)
         counts[cent_id] = counts.get(cent_id, 0) + 1
         touched.add(cent_id)
-    state.update((counts_encode(counts),))
+    state.update((hist_encode(counts),))
     t = sorted(touched)
     yield pd.DataFrame({"cent_id": pd.array(t, dtype="int64"),
                         "n_vecs": pd.array([counts[c] for c in t],

@@ -10,12 +10,13 @@ module only adds the streaming-specific pieces:
   600 s duplicate_window, reference: src/nats_client.py:99,244-266 — the
   watermark bounds dedup state exactly like the server-side window);
 - the routed idempotent publish (P3/S3/R1, reference:
-  src/nats_client.py:220-286). The default sink is the executor-side
-  format("nats") DataSource writer (NatsSink below); tests inject a
-  callable, which routes through the driver-side debug_sink. Retries are
-  safe because the Nats-Msg-Id key makes re-publish idempotent (A0:
-  checkpoint replay + idempotent sink = effectively-once, an improvement
-  over the reference's ack-after-failed-publish hole, SURVEY.md §3 EP2.7).
+  src/nats_client.py:220-286): nats_message projects enriched rows onto
+  one message shape in the JVM, and both sinks publish it as given — the
+  executor-side format("nats") writer (NatsSink below) and, for tests, a
+  driver-side callable. Retries are safe because the Nats-Msg-Id key makes
+  re-publish idempotent (A0: checkpoint replay + idempotent sink =
+  effectively-once, an improvement over the reference's
+  ack-after-failed-publish hole, SURVEY.md §3 EP2.7).
 
 At scale: dedup state is partitioned by the key columns and bounded by the
 watermark; maxOffsetsPerTrigger (S2) caps micro-batch admission the way
@@ -100,10 +101,23 @@ def enrich_stream(
     )
 
 
-Publisher = Callable[[str, str, str | None], None]
-"""(subject, json_payload, msg_id) -> None. msg_id is None when uri/cid
-are missing (the reference skips the dedup header then,
-src/nats_client.py:248-252)."""
+def nats_message(enriched: DataFrame) -> DataFrame:
+    """The one outbound message shape, in the source's own column names:
+    ``subject`` = the route; ``value`` = the JSON of every other column;
+    ``msg_id`` = "uri:cid" only when both are non-empty — the reference
+    skips the Nats-Msg-Id header otherwise (`if post_uri and post_cid`,
+    src/nats_client.py:248-252)."""
+    body = [c for c in enriched.columns if c != "route_subject"]
+    keyed = (F.length("uri") > 0) & (F.length("cid") > 0)
+    return enriched.select(
+        F.col("route_subject").alias("subject"),
+        F.to_json(F.struct(*body)).cast("binary").alias("value"),
+        F.when(keyed, F.concat_ws(":", "uri", "cid")).alias("msg_id"),
+    )
+
+
+Publisher = Callable[[str, bytes, str | None], None]
+"""(subject, json_payload, msg_id) -> None: one nats_message row."""
 
 
 @dataclass
@@ -111,12 +125,11 @@ class NatsSink:
     """Executor-side publish target: each writer partition opens its own
     connection and publishes directly (sources/nats.py NatsStreamWriter) —
     no micro-batch ever crosses the driver. This is the production sink;
-    a bare callable routes through the driver-side debug publisher
-    (streaming/debug_sink.py) and is for tests/bespoke sinks only."""
+    a bare Publisher callable collects each micro-batch on the driver and
+    is for tests only."""
 
     servers: str
     stream: str
-    default_subject: str = "bluesky.posts.enriched"
 
 
 def start_enrichment_query(
@@ -125,27 +138,19 @@ def start_enrichment_query(
     checkpoint_dir: str,
     trigger_seconds: float | None = None,
 ):
-    """Wire decode -> enrich -> dedup -> routed publish and start it.
-
-    ``sink`` is a :class:`NatsSink` (default, scale-safe: the format("nats")
-    DataSourceStreamWriter publishes from executor workers) or a Publisher
-    callable (driver-side foreachBatch — test/debug path)."""
-    enriched = enrich_stream(posts_stream)
+    """Wire decode -> enrich -> dedup -> routed publish and start it."""
+    messages = nats_message(enrich_stream(posts_stream))
     if isinstance(sink, NatsSink):
-        writer = (
-            enriched.writeStream.format("nats")
-            .option("servers", sink.servers)
-            .option("stream", sink.stream)
-            .option("defaultSubject", sink.default_subject)
-            .outputMode("append")
-        )
+        writer = (messages.writeStream.format("nats")
+                  .option("servers", sink.servers)
+                  .option("stream", sink.stream))
     else:
-        from .debug_sink import make_publish_batch
-        writer = (
-            enriched.writeStream.outputMode("append")
-            .foreachBatch(make_publish_batch(sink))
-        )
-    writer = writer.option("checkpointLocation", checkpoint_dir)
+        def publish_batch(batch: DataFrame, batch_id: int) -> None:
+            for r in batch.collect():
+                sink(r.subject, bytes(r.value), r.msg_id)
+        writer = messages.writeStream.foreachBatch(publish_batch)
+    writer = (writer.outputMode("append")
+              .option("checkpointLocation", checkpoint_dir))
     if trigger_seconds:
         writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
     return writer.start()

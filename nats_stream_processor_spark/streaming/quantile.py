@@ -42,19 +42,16 @@ HIST_STATE_SCHEMA = "hist binary"
 
 
 def hist_encode(hist: dict[int, int]) -> bytes:
-    """Canonical byte form: sorted (bucket, count) int64 pairs — the
-    mergeable-summary determinism license (equal dicts <=> equal
-    bytes)."""
-    return b"".join(struct.pack(">qq", bk, hist[bk])
-                    for bk in sorted(hist))
+    """Canonical byte form of an integer histogram: sorted (key, count)
+    int64 pairs — the mergeable-summary determinism license (equal dicts
+    <=> equal bytes). The one state codec of the streaming summaries:
+    value buckets here, per-user counts (topk.py), per-list loads
+    (ivf.py)."""
+    return b"".join(struct.pack(">qq", k, hist[k]) for k in sorted(hist))
 
 
 def hist_decode(blob: bytes) -> dict[int, int]:
-    out: dict[int, int] = {}
-    for i in range(0, len(blob), 16):
-        bk, cnt = struct.unpack(">qq", blob[i:i + 16])
-        out[bk] = cnt
-    return out
+    return dict(struct.iter_unpack(">qq", blob))
 
 
 def hist_merge(a: dict[int, int], b: dict[int, int]) -> dict[int, int]:

@@ -24,7 +24,7 @@ ordering (count desc, user asc) and width. tests/test_streaming.py
 asserts final streaming state byte-identical to the batch kernel over
 the same rows — DIRECTLY, by reading the persisted state back through
 Spark's ``statestore`` data source and comparing each hour's blob to
-``counts_encode`` of the hour's recomputed full counts (checked on the
+``hist_encode`` of the hour's recomputed full counts (checked on the
 truncated planted corpus too, where the emitted summary alone could
 not prove it) — AND that the emitted summaries match the batch
 operator's kept/error relation exactly — so any window-layer consumer
@@ -33,7 +33,6 @@ operator's kept/error relation exactly — so any window-layer consumer
 
 from __future__ import annotations
 
-import struct
 from collections.abc import Iterator
 
 import pandas as pd
@@ -41,22 +40,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .quantile import hist_decode, hist_encode
+
 TK_OUT_SCHEMA = "h long, user_id long, cnt long"
 TK_STATE_SCHEMA = "counts binary"
-
-
-def counts_encode(counts: dict[int, int]) -> bytes:
-    """Canonical byte form: sorted (user, count) int64 pairs."""
-    return b"".join(struct.pack(">qq", u, counts[u])
-                    for u in sorted(counts))
-
-
-def counts_decode(blob: bytes) -> dict[int, int]:
-    out: dict[int, int] = {}
-    for i in range(0, len(blob), 16):
-        u, c = struct.unpack(">qq", blob[i:i + 16])
-        out[u] = c
-    return out
 
 
 def summary_rows(h: int, counts: dict[int, int],
@@ -83,11 +70,11 @@ def _hour_user_rows(df: DataFrame, ts_col: str, id_col: str) -> DataFrame:
 
 def _update_hour(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
     from ..queries.events import SLT_C
-    counts = counts_decode(bytes(state.get[0])) if state.exists else {}
+    counts = hist_decode(bytes(state.get[0])) if state.exists else {}
     for pdf in pdfs:
         for u, c in pdf["user_id"].value_counts().items():
             counts[int(u)] = counts.get(int(u), 0) + int(c)
-    state.update((counts_encode(counts),))
+    state.update((hist_encode(counts),))
     yield summary_rows(int(key[0]), counts, SLT_C)
 
 

@@ -1,22 +1,27 @@
-"""NATS connector tests against the in-memory JetStream stand-in.
+"""NATS connector tests against the file-backed mem:// JetStream stand-in.
 
-The SimpleDataSourceStreamReader runs driver-side, so format("nats") works
-end-to-end against the mem:// broker; the stream writer's publish logic is
-driven in-process (executor python workers can't see the fake broker — a
-real deployment talks to a real broker from executors).
+The reader's driver-side offsets and its executor-side partition reads are
+driven in-process here and end-to-end through readStream.format("nats");
+the writer publishes the pipeline's message shape (subject, value,
+msg_id) both in-process and from executor workers through
+writeStream.format("nats"). Every process sees the same broker because the
+stand-in lives in files.
 """
 
 from __future__ import annotations
 
 import json
+import re
 import time
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Row
+from pyspark.sql.types import StructType
 
 from nats_stream_processor_spark.sources.nats import (
     NatsCommitMessage,
-    NatsStreamReader,
+    NatsDataSource,
+    NatsPartitionedStreamReader,
     NatsStreamWriter,
     ensure_output_stream,
     mem_reset,
@@ -24,7 +29,10 @@ from nats_stream_processor_spark.sources.nats import (
     register,
 )
 from nats_stream_processor_spark.streaming.pipeline import (
+    NatsSink,
     decode_posts,
+    enrich_stream,
+    nats_message,
     start_enrichment_query,
 )
 
@@ -36,28 +44,38 @@ def seed_posts(server: str, stream: str, posts: list[dict]) -> None:
                    json.dumps(p).encode(), ts=time.time())
 
 
+def read_range(r: NatsPartitionedStreamReader, start: dict,
+               end: dict) -> list[tuple]:
+    """What one micro-batch over [start, end) reads, partition by
+    partition, as the executors would."""
+    return [row for p in r.partitions(start, end) for row in r.read(p)]
+
+
 def test_reader_offsets_and_batching():
     server, stream = "mem://offsets", "bluesky-posts"
     mem_reset(server)
-    seed_posts(server, stream, [
-        {"uri": f"at://t/{i}", "cid": str(i), "text": "great"} for i in range(7)
-    ])
-    r = NatsStreamReader({"servers": server, "stream": stream,
-                          "maxbatchsize": "3"})
+    posts = [{"uri": f"at://t/{i}", "cid": str(i), "text": "great"}
+             for i in range(7)]
+    seed_posts(server, stream, posts[:1])
+    r = NatsPartitionedStreamReader({"servers": server, "stream": stream,
+                                     "maxbatchsize": "3"})
     start = r.initialOffset()
     assert start == {"seq": 1}
-    rows1, end1 = r.read(start)
-    rows1 = list(rows1)
-    assert len(rows1) == 3 and end1 == {"seq": 4}          # S2 admission cap
-    rows2, end2 = r.read(end1)
-    assert len(list(rows2)) == 3 and end2 == {"seq": 7}
-    rows3, end3 = r.read(end2)
-    assert len(list(rows3)) == 1 and end3 == {"seq": 8}
-    rows4, end4 = r.read(end3)
-    assert list(rows4) == [] and end4 == {"seq": 8}        # idle: offset stable
+    end0 = r.latestOffset()
+    assert end0 == {"seq": 2} and len(read_range(r, start, end0)) == 1
+    seed_posts(server, stream, posts[1:])
+    end1 = r.latestOffset()
+    assert end1 == {"seq": 5}                               # S2 admission cap
+    assert [m[2] for m in read_range(r, end0, end1)] == [2, 3, 4]
+    end2 = r.latestOffset()
+    assert end2 == {"seq": 8} and len(read_range(r, end1, end2)) == 3
+    end3 = r.latestOffset()
+    assert end3 == {"seq": 8} and read_range(r, end2, end3) == []  # idle
     # deterministic replay of a committed range
-    replay = list(r.readBetweenOffsets({"seq": 4}, {"seq": 7}))
+    replay = read_range(r, {"seq": 4}, {"seq": 7})
     assert [m[2] for m in replay] == [4, 5, 6]
+    assert replay == read_range(r, {"seq": 4}, {"seq": 7})
+    r.stop()
 
 
 def test_reader_subject_filter():
@@ -67,9 +85,9 @@ def test_reader_subject_filter():
     ms.publish("bluesky.posts.a", b"x")
     ms.publish("other.subject", b"y")
     ms.publish("bluesky.posts.b", b"z")
-    r = NatsStreamReader({"servers": server, "stream": stream,
-                          "subjectprefix": "bluesky.posts."})
-    rows, end = r.read({"seq": 1})
+    r = NatsPartitionedStreamReader({"servers": server, "stream": stream,
+                                     "subjectprefix": "bluesky.posts."})
+    rows = read_range(r, r.initialOffset(), r.latestOffset())
     assert [m[0] for m in rows] == ["bluesky.posts.a", "bluesky.posts.b"]
 
 
@@ -78,27 +96,19 @@ def test_writer_idempotent_publish_and_routing():
     mem_reset(server)
     ensure_output_stream(server, stream)
     w = NatsStreamWriter({"servers": server, "stream": stream})
-
-    class Row:
-        def __init__(self, d):
-            self._d = d
-
-        def asDict(self, recursive=False):  # noqa: N802
-            return dict(self._d)
-
     rows = [
-        Row({"route_subject": "bluesky.posts.enriched.positive.music",
-             "uri": "at://t/1", "cid": "c1", "value": '{"uri": "at://t/1"}'}),
-        Row({"route_subject": "bluesky.posts.enriched.negative.sports",
-             "uri": "at://t/2", "cid": "c2", "value": '{"uri": "at://t/2"}'}),
-        Row({"route_subject": "bluesky.posts.enriched.positive.music",
-             "uri": "at://t/1", "cid": "c1", "value": '{"uri": "at://t/1"}'}),
-        Row({"route_subject": "bluesky.posts.enriched.neutral.daily_life",
-             "uri": "at://t/3", "cid": None, "value": '{"uri": "at://t/3"}'}),
+        Row(subject="bluesky.posts.enriched.positive.music",
+            value=b'{"uri":"at://t/1"}', msg_id="at://t/1:c1"),
+        Row(subject="bluesky.posts.enriched.negative.sports",
+            value=b'{"uri":"at://t/2"}', msg_id="at://t/2:c2"),
+        Row(subject="bluesky.posts.enriched.positive.music",
+            value=b'{"uri":"at://t/1"}', msg_id="at://t/1:c1"),
+        Row(subject="bluesky.posts.enriched.neutral.daily_life",
+            value=b'{"uri":"at://t/3"}', msg_id=None),
     ]
     msg: NatsCommitMessage = w.write(iter(rows))
-    # duplicate (uri:cid) dropped by the msg-id window (D1); null cid rows
-    # publish without a msg-id header (reference skips the header then)
+    # duplicate (uri:cid) dropped by the msg-id window (D1); rows without
+    # a msg id publish without the header (reference skips it then)
     assert msg.n_published == 3 and msg.n_duplicates == 1
     ms = mem_stream(server, stream)
     assert [m.subject for m in ms.messages] == [
@@ -106,9 +116,23 @@ def test_writer_idempotent_publish_and_routing():
         "bluesky.posts.enriched.negative.sports",
         "bluesky.posts.enriched.neutral.daily_life",
     ]
+    assert [m.headers for m in ms.messages] == [
+        {"Nats-Msg-Id": "at://t/1:c1"}, {"Nats-Msg-Id": "at://t/2:c2"}, {}]
+    assert ms.messages[1].data == b'{"uri":"at://t/2"}'
     # task-retry simulation: re-publishing the same batch is a no-op
     msg2 = w.write(iter(rows[:2]))
     assert msg2.n_published == 0 and msg2.n_duplicates == 2
+
+
+def test_writer_requires_the_message_columns():
+    """format('nats') refuses, at query start, a frame that is not the
+    message shape instead of failing in an executor."""
+    ds = NatsDataSource({"servers": "mem://shape"})
+    shape = StructType().add("subject", "string").add("value", "binary")
+    with pytest.raises(ValueError, match="msg_id"):
+        ds.streamWriter(shape, False)
+    writer = ds.streamWriter(shape.add("msg_id", "string"), False)
+    assert writer.stream == "bluesky-posts-enriched"
 
 
 def test_format_nats_end_to_end_enrichment(spark, tmp_path):
@@ -129,11 +153,12 @@ def test_format_nats_end_to_end_enrichment(spark, tmp_path):
         .load()
     )
     posts = decode_posts(raw, value_col="value")
-    out = ensure_output_stream(server, "bluesky-posts-enriched")
+    ensure_output_stream(server, "bluesky-posts-enriched")
+    out = mem_stream(server, "bluesky-posts-enriched")
 
     def publisher(subject, payload, msg_id):
         headers = {"Nats-Msg-Id": msg_id} if msg_id else {}
-        out.publish(subject, payload.encode(), headers)
+        out.publish(subject, payload, headers)
 
     q = start_enrichment_query(posts, publisher, str(tmp_path / "nats_ckpt"))
     q.processAllAvailable()
@@ -160,11 +185,9 @@ def test_writestream_format_nats(spark, tmp_path):
     ])
     raw = (spark.readStream.format("nats")
            .option("servers", server).option("stream", "bluesky-posts").load())
-    from nats_stream_processor_spark.streaming.pipeline import enrich_stream
     enriched = enrich_stream(decode_posts(raw)).select(
-        "uri", "cid", "route_subject",
-        F.to_json(F.struct("uri", "sentiment", "topics")).alias("value"))
-    q = (enriched.writeStream.format("nats")
+        "uri", "cid", "route_subject", "sentiment", "topics")
+    q = (nats_message(enriched).writeStream.format("nats")
          .option("servers", server).option("stream", "bluesky-posts-enriched")
          .option("checkpointLocation", str(tmp_path / "sink_ckpt"))
          .outputMode("append").start())
@@ -180,8 +203,6 @@ def test_writestream_format_nats(spark, tmp_path):
 def test_start_enrichment_query_default_natssink(spark, tmp_path):
     """The production sink path: start_enrichment_query with a NatsSink
     publishes executor-side via format('nats') — no driver collect."""
-    from nats_stream_processor_spark.streaming.pipeline import NatsSink
-
     register(spark)
     server = "mem://sinkdefault"
     mem_reset(server)
@@ -212,10 +233,7 @@ def test_start_enrichment_query_default_natssink(spark, tmp_path):
 def test_partitioned_reader_seq_ranges():
     """DataSourceStreamReader path: offsets, admission cap, and the split
     of a batch range into multiple InputPartitions (queue-group analog)."""
-    from nats_stream_processor_spark.sources.nats import (
-        NatsPartitionedStreamReader,
-        SeqRangePartition,
-    )
+    from nats_stream_processor_spark.sources.nats import SeqRangePartition
 
     server, stream = "mem://parts", "bluesky-posts"
     mem_reset(server)
@@ -281,3 +299,44 @@ def test_partitioned_reader_e2e_and_restart(spark, tmp_path):
     # restart over the same checkpoint: no replay
     run_once()
     assert len(seen) == 40
+
+
+def test_empty_cid_has_no_msg_id_and_both_sinks_publish_same_bytes(
+        spark, tmp_path):
+    """One message shape for both sinks: a post with cid='' publishes
+    without a Nats-Msg-Id (the reference's `if post_uri and post_cid`,
+    src/nats_client.py:248) through format('nats') and through the
+    callable, and both sinks publish identical payload bytes for the same
+    batch — apart from processed_at, which each query stamps itself."""
+    register(spark)
+    server = "mem://samebytes"
+    mem_reset(server)
+    seed_posts(server, "bluesky-posts", [
+        {"uri": "at://t/1", "cid": "", "text": "This is a great day!"},
+        {"uri": "at://t/2", "cid": "c2", "text": "I hate this weather"},
+    ])
+
+    def posts():
+        return decode_posts(spark.readStream.format("nats")
+                            .option("servers", server)
+                            .option("stream", "bluesky-posts").load())
+
+    q = start_enrichment_query(posts(), NatsSink(server, "out"),
+                               str(tmp_path / "ckpt_sink"))
+    q.processAllAvailable()
+    q.stop()
+    called: list[tuple] = []
+    q = start_enrichment_query(posts(), lambda *m: called.append(m),
+                               str(tmp_path / "ckpt_callable"))
+    q.processAllAvailable()
+    q.stop()
+
+    stamp = re.compile(rb'"processed_at":"[^"]+"')
+    out = mem_stream(server, "out").messages
+    assert {json.loads(m.data)["uri"]: m.headers for m in out} == {
+        "at://t/1": {}, "at://t/2": {"Nats-Msg-Id": "at://t/2:c2"}}
+    assert all(stamp.search(m.data) for m in out)
+    # the callable got the same (subject, payload, msg_id) triples
+    assert sorted((s, stamp.sub(b"", v), i) for s, v, i in called) == \
+        sorted((m.subject, stamp.sub(b"", m.data),
+                m.headers.get("Nats-Msg-Id")) for m in out)

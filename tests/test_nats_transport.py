@@ -17,14 +17,16 @@ import pytest
 
 from tests.fake_nats import FakeBroker, StreamConfig, make_fake_nats
 
+from pyspark.sql import Row
+
+from nats_stream_processor_spark.config import DEDUP_WINDOW_SECONDS
 from nats_stream_processor_spark.sources import nats as nats_src
 from nats_stream_processor_spark.sources.nats import (
-    NatsStreamReader,
+    NatsPartitionedStreamReader,
     NatsStreamWriter,
     ensure_output_stream,
 )
 from nats_stream_processor_spark.sources.nats_transport import (
-    DUPLICATE_WINDOW_SECONDS,
     OUTPUT_MAX_MSGS,
     JetStreamTransport,
 )
@@ -58,7 +60,7 @@ def test_ensure_stream_creates_reference_config(fake_nats):
     assert cfg.discard.name == "OLD"
     assert cfg.storage.name == "FILE"
     assert cfg.max_msgs == OUTPUT_MAX_MSGS == 5_000_000
-    assert cfg.duplicate_window == DUPLICATE_WINDOW_SECONDS == 600
+    assert cfg.duplicate_window == DEDUP_WINDOW_SECONDS == 600
 
 
 def test_fetch_by_start_sequence_and_filter(fake_nats):
@@ -95,7 +97,7 @@ def test_publish_idempotent_msg_id(fake_nats):
         ("bluesky.posts.enriched.neutral.art", b"c", None),  # no-id rows pass
     ]
     with JetStreamTransport("nats://srv:4222") as t:
-        n_pub, n_dup = t.publish_many(items)
+        n_pub, n_dup = t.publish_many("out", items)
     assert (n_pub, n_dup) == (3, 1)
     assert [m.seq for m in fake_nats.messages["out"]] == [1, 2, 3]
 
@@ -104,7 +106,7 @@ def test_publish_retries_timeouts_then_succeeds(fake_nats):
     fake_nats.add_stream(StreamConfig(name="out", subjects=["x.>"]))
     fake_nats.fail_next_publishes = 2
     with JetStreamTransport("nats://srv:4222") as t:
-        n_pub, n_dup = t.publish_many([("x.y", b"p", "id1")])
+        n_pub, n_dup = t.publish_many("out", [("x.y", b"p", "id1")])
     assert (n_pub, n_dup) == (1, 0)
     assert fake_nats.publish_attempts == 3
 
@@ -114,27 +116,23 @@ def test_reader_uses_real_transport_for_non_mem_url(fake_nats):
         ("bluesky.posts.a", b'{"uri":"u1"}'),
         ("bluesky.posts.b", b'{"uri":"u2"}'),
     ])
-    r = NatsStreamReader({"servers": "nats://srv:4222",
-                          "stream": "bluesky-posts",
-                          "subjectprefix": "bluesky.posts."})
-    assert r.initialOffset() == {"seq": 1}
-    rows, end = r.read({"seq": 1})
-    rows = list(rows)
+    r = NatsPartitionedStreamReader({"servers": "nats://srv:4222",
+                                     "stream": "bluesky-posts",
+                                     "subjectprefix": "bluesky.posts."})
+    start = r.initialOffset()
+    assert start == {"seq": 1}
+    end = r.latestOffset()
     assert end == {"seq": 3}
+
+    def read(start, end):
+        return [row for p in r.partitions(start, end) for row in r.read(p)]
+
+    rows = read(start, end)
     assert [row[2] for row in rows] == [1, 2]  # seq column
     assert rows[0][1] == b'{"uri":"u1"}'
     # deterministic replay of a committed range
-    replay = list(r.readBetweenOffsets({"seq": 1}, {"seq": 3}))
-    assert [row[2] for row in replay] == [1, 2]
+    assert read({"seq": 1}, {"seq": 3}) == rows
     r.stop()
-
-
-class _Row:
-    def __init__(self, d):
-        self._d = d
-
-    def asDict(self, recursive=False):  # noqa: N802 - Spark Row API
-        return dict(self._d)
 
 
 def test_writer_uses_real_transport_for_non_mem_url(fake_nats):
@@ -143,19 +141,31 @@ def test_writer_uses_real_transport_for_non_mem_url(fake_nats):
     w = NatsStreamWriter({"servers": "nats://srv:4222",
                           "stream": "bluesky-posts-enriched"})
     rows = [
-        _Row({"route_subject": "bluesky.posts.enriched.positive.ai",
-              "uri": "u1", "cid": "c1", "text": "hi"}),
-        _Row({"route_subject": "bluesky.posts.enriched.positive.ai",
-              "uri": "u1", "cid": "c1", "text": "hi"}),  # retry duplicate
+        Row(subject="bluesky.posts.enriched.positive.ai",
+            value=b'{"uri":"u1"}', msg_id="u1:c1"),
+        Row(subject="bluesky.posts.enriched.positive.ai",
+            value=b'{"uri":"u1"}', msg_id="u1:c1"),  # retry duplicate
     ]
     msg = w.write(iter(rows))
     assert (msg.n_published, msg.n_duplicates) == (1, 1)
     stored = fake_nats.messages["bluesky-posts-enriched"]
     assert len(stored) == 1
     assert stored[0].headers["Nats-Msg-Id"] == "u1:c1"
+    assert stored[0].data == b'{"uri":"u1"}'
 
 
 def test_ensure_output_stream_real_path(fake_nats):
     ensure_output_stream("nats://srv:4222", "enriched-out",
                          subject_prefix="bluesky.posts.enriched")
     assert "enriched-out" in fake_nats.configs
+
+
+def test_publish_refuses_a_subject_bound_to_another_stream(fake_nats):
+    """The sink's stream option is checked server-side: a routed subject
+    that lands in another stream is refused, not silently published."""
+    fake_nats.add_stream(StreamConfig(name="out", subjects=["x.>"]))
+    fake_nats.add_stream(StreamConfig(name="other", subjects=["y.>"]))
+    with JetStreamTransport("nats://srv:4222") as t:
+        with pytest.raises(Exception, match="expected stream"):
+            t.publish_many("out", [("y.z", b"p", "id1")])
+    assert fake_nats.messages["other"] == []

@@ -784,11 +784,12 @@ def test_hist_quantile_containment_theorem(values):
 @given(st.dictionaries(st.integers(0, 2**40), st.integers(1, 2**40),
                        max_size=40))
 def test_topk_counts_codec_roundtrip_and_canonical(counts):
-    from nats_stream_processor_spark.streaming import topk as tk
-    blob = tk.counts_encode(counts)
-    assert tk.counts_decode(blob) == counts
+    """The top-k state (per-user counts) uses the one histogram codec."""
+    from nats_stream_processor_spark.streaming import quantile as qh
+    blob = qh.hist_encode(counts)
+    assert qh.hist_decode(blob) == counts
     reordered = dict(sorted(counts.items(), reverse=True))
-    assert tk.counts_encode(reordered) == blob
+    assert qh.hist_encode(reordered) == blob
 
 
 @settings(max_examples=200, deadline=None)

@@ -20,7 +20,6 @@ from nats_stream_processor_spark.streaming.metrics import (
     MetricsListener,
     observe_pipeline_counters,
 )
-from nats_stream_processor_spark.streaming.debug_sink import make_publish_batch
 from nats_stream_processor_spark.streaming.pipeline import (
     RAW_POST_SCHEMA,
     decode_posts,
@@ -633,6 +632,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
         SLT_TOP,
         SW_HOURS,
     )
+    from nats_stream_processor_spark.streaming import quantile as qh
     from nats_stream_processor_spark.streaming import topk as tk
 
     sf = "/root/testdata/sf0.001"
@@ -664,7 +664,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
         # DIRECT state-store byte check (the docstring's claim, checked
         # for real): read the final managed state via Spark's statestore
         # data source and compare each hour's blob byte-for-byte against
-        # counts_encode() of the hour's full counts recomputed from the
+        # hist_encode() of the hour's full counts recomputed from the
         # same rows — the canonical-encoding law (equal dicts <=> equal
         # bytes) applied to the ACTUAL persisted state, truncation or
         # not, rather than inferred from emitted summaries.
@@ -680,7 +680,7 @@ def test_streaming_hourly_topk_summaries_match_batch(spark, tmp_path):
         want: dict = {}
         for (h, u), c in pdf.groupby(["h", "user_id"]).size().items():
             want.setdefault(int(h), {})[int(u)] = int(c)
-        assert got == {h: tk.counts_encode(cs) for h, cs in want.items()}
+        assert got == {h: qh.hist_encode(cs) for h, cs in want.items()}
 
     latest, touches = run_stream(pdir, "ckpt_tk")
     assert_state_bytes_match_batch(pdir, "ckpt_tk")
@@ -1214,6 +1214,7 @@ def test_streaming_ivf_list_counts_match_batch_index(spark, tmp_path):
 
     from nats_stream_processor_spark import registry
     from nats_stream_processor_spark.streaming import ivf as si
+    from nats_stream_processor_spark.streaming import quantile as qh
 
     sf = "/root/testdata/sf0.001"
     emb = registry.table(spark, sf, "embeddings") \
@@ -1257,9 +1258,9 @@ def test_streaming_ivf_list_counts_match_batch_index(spark, tmp_path):
                        for r in st.collect()}
         merged = {}
         for shard, blob in shard_blobs.items():
-            decoded = si.counts_decode(blob)
+            decoded = qh.hist_decode(blob)
             # the byte law: canonical re-encode round-trips
-            assert si.counts_encode(decoded) == blob
+            assert qh.hist_encode(decoded) == blob
             for c, n in decoded.items():
                 assert c % si.IVS_SHARDS == shard  # routed correctly
                 merged[c] = n
