@@ -112,13 +112,9 @@ MEM_BROKER_DIR = os.environ.get(
 
 
 def _subject_matches(subject: str, subject_filter: str | None) -> bool:
-    """JetStream filter semantics for the one wildcard form the connector
-    uses: "a.b.>" matches every subject under "a.b."."""
-    if not subject_filter:
-        return True
-    if subject_filter.endswith(".>"):
-        return subject.startswith(subject_filter[:-1])
-    return subject == subject_filter
+    """JetStream filter semantics for the one form the reader builds:
+    "a.b.>" matches every subject under "a.b."."""
+    return not subject_filter or subject.startswith(subject_filter[:-1])
 
 
 @dataclass
@@ -333,20 +329,24 @@ class NatsPartitionedStreamReader(DataSourceStreamReader):
 
     def latestOffset(self) -> dict:  # noqa: N802
         # Admission control (S2): advance at most max_batch sequences per
-        # trigger. The cap is relative to the previous latestOffset this
-        # process returned; the first trigger after a restart is uncapped
-        # (the Python API doesn't surface the checkpointed start here).
+        # trigger past the last end this reader knows — its previous
+        # answer, the checkpointed end partitions() received on restart,
+        # or initialOffset on a new query.
         if self._client is None:
             self._client = broker(self.server).connect()
-        end = self._client.last_seq(self.stream) + 1
-        if self._prev_end is not None:
-            end = min(end, self._prev_end + self.max_batch)
-            end = max(end, self._prev_end)
-        self._prev_end = end
-        return {"seq": end}
+        prev = self._prev_end or self.initialOffset()["seq"]
+        end = min(self._client.last_seq(self.stream) + 1,
+                  prev + self.max_batch)
+        self._prev_end = max(end, prev)
+        return {"seq": self._prev_end}
 
     def partitions(self, start: dict, end: dict) -> list[SeqRangePartition]:
         s, e = start["seq"], end["seq"]
+        if self._prev_end is None:
+            # A restarted query hands the reader its checkpointed end
+            # (Spark's setLatestSeenOffset plans the range [end, end))
+            # before the first latestOffset.
+            self._prev_end = e
         total = e - s
         if total <= 0:
             return [SeqRangePartition(s, s)]

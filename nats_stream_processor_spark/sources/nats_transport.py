@@ -201,17 +201,17 @@ class JetStreamTransport:
     def publish_many(
         self, stream: str, items: list[tuple[str, bytes, str | None]]
     ) -> tuple[int, int]:
-        """Publish (subject, payload, msg_id) triples into ``stream``;
-        returns (published, duplicates). The server refuses a subject
-        bound to another stream (nats-py's expected-stream check).
-        Retries timeouts with linear backoff; retried publishes are
-        idempotent because the Nats-Msg-Id header makes the server drop
-        re-sends inside the duplicate window."""
-        return self._run(self._publish_many(stream, items),
+        """Publish (subject, payload, msg_id) triples; returns
+        (published, duplicates). The server stores each subject in the
+        stream bound to it, so ``stream`` is only the signature shared with
+        the mem:// broker. Retries timeouts with linear backoff; retried
+        publishes are idempotent because the Nats-Msg-Id header makes the
+        server drop re-sends inside the duplicate window."""
+        return self._run(self._publish_many(items),
                          timeout=PUBLISH_TIMEOUT_S * (PUBLISH_MAX_RETRIES + 1)
                          * max(len(items), 1) + 30)
 
-    async def _publish_many(self, stream, items):
+    async def _publish_many(self, items):
         n_pub = n_dup = 0
         for subject, payload, msg_id in items:
             headers = {"Nats-Msg-Id": msg_id} if msg_id else None
@@ -220,7 +220,7 @@ class JetStreamTransport:
                 try:
                     ack = await self._js.publish(
                         subject, payload, timeout=PUBLISH_TIMEOUT_S,
-                        stream=stream, headers=headers)
+                        headers=headers)
                     if getattr(ack, "duplicate", False):
                         n_dup += 1
                     else:

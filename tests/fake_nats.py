@@ -203,10 +203,7 @@ class FakeJetStream:
                                     config or ConsumerConfig())
 
     async def publish(self, subject: str, payload: bytes,
-                      timeout: float = 5.0, stream: str | None = None,
-                      headers: dict | None = None):
-        if stream is not None and self.broker.route(subject) != stream:
-            raise Exception("expected stream does not match")
+                      timeout: float = 5.0, headers: dict | None = None):
         return self.broker.publish(subject, payload, headers)
 
 

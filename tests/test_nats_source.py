@@ -54,27 +54,44 @@ def read_range(r: NatsPartitionedStreamReader, start: dict,
 def test_reader_offsets_and_batching():
     server, stream = "mem://offsets", "bluesky-posts"
     mem_reset(server)
-    posts = [{"uri": f"at://t/{i}", "cid": str(i), "text": "great"}
-             for i in range(7)]
-    seed_posts(server, stream, posts[:1])
+    seed_posts(server, stream, [
+        {"uri": f"at://t/{i}", "cid": str(i), "text": "great"} for i in range(7)
+    ])
     r = NatsPartitionedStreamReader({"servers": server, "stream": stream,
                                      "maxbatchsize": "3"})
     start = r.initialOffset()
     assert start == {"seq": 1}
-    end0 = r.latestOffset()
-    assert end0 == {"seq": 2} and len(read_range(r, start, end0)) == 1
-    seed_posts(server, stream, posts[1:])
     end1 = r.latestOffset()
-    assert end1 == {"seq": 5}                               # S2 admission cap
-    assert [m[2] for m in read_range(r, end0, end1)] == [2, 3, 4]
+    assert end1 == {"seq": 4}                               # S2 admission cap
+    assert [m[2] for m in read_range(r, start, end1)] == [1, 2, 3]
     end2 = r.latestOffset()
-    assert end2 == {"seq": 8} and len(read_range(r, end1, end2)) == 3
+    assert end2 == {"seq": 7} and len(read_range(r, end1, end2)) == 3
     end3 = r.latestOffset()
-    assert end3 == {"seq": 8} and read_range(r, end2, end3) == []  # idle
+    assert end3 == {"seq": 8} and len(read_range(r, end2, end3)) == 1
+    end4 = r.latestOffset()
+    assert end4 == {"seq": 8} and read_range(r, end3, end4) == []  # idle
     # deterministic replay of a committed range
     replay = read_range(r, {"seq": 4}, {"seq": 7})
     assert [m[2] for m in replay] == [4, 5, 6]
     assert replay == read_range(r, {"seq": 4}, {"seq": 7})
+    r.stop()
+
+
+def test_restarted_reader_caps_from_the_checkpointed_end():
+    """On restart Spark hands the reader its checkpointed end as an empty
+    range, partitions(end, end), before the first latestOffset; the cap
+    runs from there, not from the start of the stream."""
+    server, stream = "mem://restart_cap", "bluesky-posts"
+    mem_reset(server)
+    seed_posts(server, stream, [
+        {"uri": f"at://t/{i}", "cid": str(i), "text": "great"}
+        for i in range(10)
+    ])
+    r = NatsPartitionedStreamReader({"servers": server, "stream": stream,
+                                     "maxbatchsize": "3"})
+    assert read_range(r, {"seq": 5}, {"seq": 5}) == []
+    assert r.latestOffset() == {"seq": 8}
+    assert r.latestOffset() == {"seq": 11}
     r.stop()
 
 
@@ -247,8 +264,9 @@ def test_partitioned_reader_seq_ranges():
     })
     assert r.initialOffset() == {"seq": 1}
     first = r.latestOffset()
-    assert first == {"seq": 11}  # first trigger uncapped (no prev end)
-    parts = r.partitions({"seq": 1}, first)
+    assert first == {"seq": 7}  # the first trigger is capped too
+    assert r.latestOffset() == {"seq": 11}  # then the rest of the backlog
+    parts = r.partitions({"seq": 1}, {"seq": 11})
     assert len(parts) == 4
     assert parts[0] == SeqRangePartition(1, 4)  # 10 seqs -> 3/3/2/2
     assert parts[-1].end_seq == 11
@@ -256,7 +274,7 @@ def test_partitioned_reader_seq_ranges():
     assert [p.start_seq for p in parts[1:]] == [p.end_seq for p in parts[:-1]]
     rows = [row for p in parts for row in r.read(p)]
     assert [row[2] for row in rows] == list(range(1, 11))
-    # admission cap applies from the second trigger on
+    # admission cap on a new backlog
     seed_posts(server, stream, [
         {"uri": f"at://t/{i}", "cid": str(i), "text": "great"}
         for i in range(10, 30)
@@ -299,6 +317,35 @@ def test_partitioned_reader_e2e_and_restart(spark, tmp_path):
     # restart over the same checkpoint: no replay
     run_once()
     assert len(seen) == 40
+
+
+def test_first_trigger_of_a_start_and_a_restart_is_capped(spark, tmp_path):
+    """maxBatchSize caps every micro-batch, including the first of a new
+    query and the first after a checkpoint restart over a backlog."""
+    register(spark)
+    server = "mem://cap_e2e"
+    mem_reset(server)
+    ckpt = str(tmp_path / "cap_ckpt")
+    sizes: list[int] = []
+
+    def run_once(first):
+        seed_posts(server, "bluesky-posts", [
+            {"uri": f"at://t/{i}", "cid": f"c{i}", "text": "great"}
+            for i in range(first, first + 10)
+        ])
+        raw = (spark.readStream.format("nats")
+               .option("servers", server).option("stream", "bluesky-posts")
+               .option("maxBatchSize", "4").load())
+        q = (raw.writeStream.foreachBatch(
+                lambda df, _bid: sizes.append(df.count()))
+             .option("checkpointLocation", ckpt).start())
+        q.processAllAvailable()
+        q.stop()
+
+    run_once(0)
+    assert sizes == [4, 4, 2]
+    run_once(10)
+    assert sizes == [4, 4, 2, 4, 4, 2]
 
 
 def test_empty_cid_has_no_msg_id_and_both_sinks_publish_same_bytes(

@@ -16,6 +16,7 @@ import sys
 import pytest
 
 from tests.fake_nats import FakeBroker, StreamConfig, make_fake_nats
+from tests.test_nats_source import read_range
 
 from pyspark.sql import Row
 
@@ -123,15 +124,11 @@ def test_reader_uses_real_transport_for_non_mem_url(fake_nats):
     assert start == {"seq": 1}
     end = r.latestOffset()
     assert end == {"seq": 3}
-
-    def read(start, end):
-        return [row for p in r.partitions(start, end) for row in r.read(p)]
-
-    rows = read(start, end)
+    rows = read_range(r, start, end)
     assert [row[2] for row in rows] == [1, 2]  # seq column
     assert rows[0][1] == b'{"uri":"u1"}'
     # deterministic replay of a committed range
-    assert read({"seq": 1}, {"seq": 3}) == rows
+    assert read_range(r, {"seq": 1}, {"seq": 3}) == rows
     r.stop()
 
 
@@ -158,14 +155,3 @@ def test_ensure_output_stream_real_path(fake_nats):
     ensure_output_stream("nats://srv:4222", "enriched-out",
                          subject_prefix="bluesky.posts.enriched")
     assert "enriched-out" in fake_nats.configs
-
-
-def test_publish_refuses_a_subject_bound_to_another_stream(fake_nats):
-    """The sink's stream option is checked server-side: a routed subject
-    that lands in another stream is refused, not silently published."""
-    fake_nats.add_stream(StreamConfig(name="out", subjects=["x.>"]))
-    fake_nats.add_stream(StreamConfig(name="other", subjects=["y.>"]))
-    with JetStreamTransport("nats://srv:4222") as t:
-        with pytest.raises(Exception, match="expected stream"):
-            t.publish_many("out", [("y.z", b"p", "id1")])
-    assert fake_nats.messages["other"] == []
